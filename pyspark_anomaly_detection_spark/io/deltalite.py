@@ -1678,70 +1678,38 @@ def read_delta_pruned(
     never opened — the log-level pruning that makes a 100 TB Delta scan
     read only the touched fraction.  Files without stats are read
     (skipping must never drop data).  Returns (frame WITH the predicate
-    still applied row-level, {'files_total', 'files_read'})."""
-    from pyspark.sql.types import StructField, StructType
-
+    still applied row-level, {'files_total', 'files_read'}).  The frame
+    has :func:`read_delta`'s columns and values: partition columns come
+    from each kept file's ``partitionValues`` (the data files hold none),
+    mapped tables read physical names, and DV files drop deleted rows."""
     snap = _snapshot_state(table_path)
-    active = set(snap.adds)
-    schema_json = snap.schema_json
     latest_add = snap.adds
     # mapped tables: stats (and data files) key PHYSICAL names; the
     # caller's predicate column is LOGICAL — translate for the stats
     # lookup and read through the physical schema (pre-fix this read
     # used the logical schema and returned all-NULL columns silently)
-    mapping = _column_mapping_of(schema_json)
+    mapping = _column_mapping_of(snap.schema_json)
     scol = mapping.get(col, col) if mapping else col
     keep = []
-    for rel in sorted(active):
+    for rel in sorted(latest_add):
         add = latest_add[rel]
         stats = json.loads(add["stats"]) if "stats" in add else None
         if stats and scol in stats.get("minValues", {}):
             if stats["maxValues"][scol] < lo or stats["minValues"][scol] > hi:
                 continue  # file's envelope misses the predicate: skip
         keep.append(rel)
-    schema = (
-        StructType.fromJson(json.loads(schema_json)) if schema_json else None
+    meta = {"files_total": len(latest_add), "files_read": len(keep)}
+    # the kept files read through the snapshot reader's one generic path:
+    # column mapping, partition-value reinjection and DV subtraction
+    # (round 14: stats coexist with DVs, so a pruned read must not
+    # resurrect rows) all compose there
+    df = _read_adds(
+        spark,
+        table_path,
+        {rel: latest_add[rel] for rel in keep},
+        snap.schema_json,
+        snap.part_cols,
     )
-    meta = {"files_total": len(active), "files_read": len(keep)}
-    if not keep:
-        return spark.createDataFrame([], schema), meta
-    read_schema = schema
-    if mapping and schema is not None:
-        read_schema = StructType(
-            [
-                StructField(mapping.get(f.name, f.name), f.dataType, f.nullable)
-                for f in schema.fields
-            ]
-        )
-    # DV-carrying kept files subtract their bitmaps (round 14: stats can
-    # now coexist with DVs, so the pruned read must not resurrect rows)
-    dv_keep = {
-        rel: latest_add[rel]
-        for rel in keep
-        if latest_add[rel].get("deletionVector")
-    }
-    plain = [rel for rel in keep if rel not in dv_keep]
-    pieces = []
-    if plain:
-        reader = spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        pieces.append(
-            reader.parquet(*[os.path.join(table_path, rel) for rel in plain])
-        )
-    if dv_keep:
-        from pyspark_anomaly_detection_spark.io.deltalite_dv import (
-            read_files_minus_dv,
-        )
-
-        pieces.append(
-            read_files_minus_dv(spark, table_path, dv_keep, read_schema)
-        )
-    df = pieces[0]
-    for p in pieces[1:]:
-        df = df.unionByName(p)
-    if mapping and schema is not None:
-        df = df.toDF(*[f.name for f in schema.fields])
     return df.filter((F.col(col) >= lo) & (F.col(col) <= hi)), meta
 
 
@@ -1888,6 +1856,42 @@ def vacuum_delta(
         if not os.listdir(root) and os.path.getmtime(root) <= age_cutoff:
             os.rmdir(root)
     return {"files_deleted": n_deleted, "files_kept": n_kept}
+
+
+def _dv_diff_rows(
+    spark: SparkSession,
+    table_path: str,
+    pairs: "list[tuple[str, dict[str, Any], dict[str, Any] | None]]",
+    schema,
+) -> DataFrame:
+    """Rows NEWLY deleted by a DV rewrite commit: for each
+    ``(rel_path, new_add, old_dv_descriptor_or_None)`` pair, the data
+    file's rows at positions ``decode(new) - decode(old)`` — the
+    row-level delta the change feed reports for a merge-on-read DELETE
+    (verdict r10 item 3).  The position diff follows the DV read path's
+    rule (``deltalite_dv._positions_df``): decoded on the driver and
+    broadcast up to ``DV_BROADCAST_MAX_ROWS`` summed cardinality,
+    executor-side above it."""
+    from pyspark_anomaly_detection_spark.io.deltalite_dv import (
+        _file_uri,
+        _positions_df,
+        _scan_with_positions,
+    )
+
+    pos = _positions_df(
+        spark,
+        table_path,
+        [
+            (_file_uri(table_path, rel), new_add["deletionVector"], old_dv)
+            for rel, new_add, old_dv in pairs
+        ],
+    )
+    df = _scan_with_positions(
+        spark, table_path, [rel for rel, _, _ in pairs], schema
+    )
+    return df.join(pos, ["_dv_f", "_dv_i"], "left_semi").drop(
+        "_dv_f", "_dv_i"
+    )
 
 
 def _read_cdc_files(
@@ -2052,10 +2056,6 @@ def read_delta_changes(
         if dv_pairs:
             from pyspark.sql.types import StructField
 
-            from pyspark_anomaly_detection_spark.io.deltalite_dv import (
-                dv_diff_rows,
-            )
-
             # mapped tables: the diff reads files in PHYSICAL space and
             # renames to the tip's logical names afterward (r11)
             mapping = _column_mapping_of(schema_json)
@@ -2103,7 +2103,7 @@ def read_delta_changes(
                     )
                     by_pv.setdefault(pvk, []).append((p, a, o))
                 for pv_items, grp in sorted(by_pv.items()):
-                    diff = dv_diff_rows(spark, table_path, grp, data_schema)
+                    diff = _dv_diff_rows(spark, table_path, grp, data_schema)
                     if mapping:
                         diff = diff.toDF(*[f.name for f in data_fields])
                     pv = dict(pv_items)
@@ -2120,7 +2120,7 @@ def read_delta_changes(
                         .withColumn("_commit_version", F.lit(v).cast("int"))
                     )
             else:
-                diff = dv_diff_rows(spark, table_path, dv_pairs, read_schema)
+                diff = _dv_diff_rows(spark, table_path, dv_pairs, read_schema)
                 if mapping and base is not None:
                     diff = diff.toDF(*[f.name for f in base.fields])
                 pieces.append(

@@ -26,8 +26,10 @@ serialization):
 * row indices come from the JVM scan's ``_metadata.row_index`` — the
   parquet row position Delta defines DV indices over.
 * the bitmaps build EXECUTOR-side (one ``applyInPandas`` group per
-  touched file — driver state stays one descriptor per FILE), and
-  decode executor-side the same way for reads.
+  touched file — driver state stays one descriptor per FILE).  Reads
+  decode them on the DRIVER up to ``DV_BROADCAST_MAX_ROWS`` deleted
+  rows (a broadcast JVM local relation: no Python stage in the plan)
+  and EXECUTOR-side above it (bounded driver memory at 100 TB).
 * re-deleting merges: a file's existing DV ORs into the new one, and
   already-deleted rows never re-count in ``rows_deleted``.
 
@@ -50,11 +52,13 @@ from pyspark.sql import functions as F
 from pyspark_anomaly_detection_spark.io import deltalite
 from pyspark_anomaly_detection_spark.io.roaring import (
     deserialize_roaring64,
+    deserialize_roaring64_array,
     serialize_roaring64,
 )
 
-#: Broadcast the anti-join side when the descriptors' summed
-#: cardinality is below this (the positions frame is ~16 bytes/row).
+#: Decode on the driver and broadcast the anti-join side when the
+#: descriptors' summed cardinality is at most this (the positions frame
+#: is ~16 bytes/row plus the file path); shuffle otherwise.
 DV_BROADCAST_MAX_ROWS = 5_000_000
 
 _Z85_CHARS = (
@@ -163,17 +167,15 @@ def write_dv_file(
     return descs
 
 
-def _decode_descriptor(
+def _descriptor_bitmap(
     dv: dict[str, Any], table_path: "str | None" = None
-) -> list[int]:
-    """Deleted row indices of a descriptor — inline ('i': Z85 bitmap in
+) -> bytes:
+    """Serialized bitmap of a descriptor — inline ('i': Z85 bitmap in
     the log) or file-based ('u': seek into the spec-format DV file,
     CRC-verified).  ``table_path`` is required for 'u'."""
     st = dv.get("storageType")
     if st == "i":
-        return deserialize_roaring64(
-            z85_decode(dv["pathOrInlineDv"], dv.get("sizeInBytes"))
-        )
+        return z85_decode(dv["pathOrInlineDv"], dv.get("sizeInBytes"))
     if st in ("u", "p"):
         import zlib
 
@@ -200,27 +202,75 @@ def _decode_descriptor(
                 f"deltalite DV: checksum mismatch in {full} at offset "
                 f"{dv.get('offset')}"
             )
-        return deserialize_roaring64(data)
+        return data
     raise NotImplementedError(
         f"deltalite DV: storageType {st!r} not supported"
     )
 
 
-def dv_positions_df(
-    spark: SparkSession, table_path: str, dv_adds: dict[str, dict[str, Any]]
+def _decode_descriptor(
+    dv: dict[str, Any], table_path: "str | None" = None
+) -> list[int]:
+    """Deleted row indices of a descriptor ('i', 'u' or 'p' storage)."""
+    return deserialize_roaring64(_descriptor_bitmap(dv, table_path))
+
+
+def _decode_diff(
+    new: dict[str, Any], old: "dict[str, Any] | None", table_path: str
+):
+    """Sorted int64 array of ``decode(new) - decode(old)`` (all of
+    ``new`` when ``old`` is None) — no Python int per position."""
+    import numpy as np
+
+    def decode(dv):
+        bitmap = _descriptor_bitmap(dv, table_path)
+        return deserialize_roaring64_array(bitmap).astype(np.int64)
+
+    pos = decode(new)
+    return np.setdiff1d(pos, decode(old), assume_unique=True) if old else pos
+
+
+def _positions_df(
+    spark: SparkSession,
+    table_path: str,
+    items: "list[tuple[str, dict[str, Any], dict[str, Any] | None]]",
 ) -> DataFrame:
-    """(_dv_f, _dv_i) deleted positions of every DV-carrying add —
-    decoded executor-side (both 'i' and 'u' storage), one Arrow batch
-    per file."""
+    """(_dv_f, _dv_i) positions ``decode(new) - decode(old)`` of every
+    ``(file_uri, new_desc, old_desc_or_None)`` item — the build side of
+    the (file, row_index) joins.  Up to ``DV_BROADCAST_MAX_ROWS`` summed
+    ``cardinality`` (known without decoding) they decode on the DRIVER
+    into a broadcast Arrow-backed JVM ``LocalTableScan`` (bound for a
+    broadcast anyway; no Python worker round trip); above it they decode
+    EXECUTOR-side in ``mapInPandas`` and the join shuffles, so driver
+    memory stays bounded however large the deletion vectors grow."""
+    from pyspark_anomaly_detection_spark.io.detach import (
+        local_arrow_df,
+        local_rows_df,
+    )
+
+    total_card = sum(int(new.get("cardinality") or 0) for _, new, _ in items)
+    if total_card <= DV_BROADCAST_MAX_ROWS:
+        import numpy as np
+        import pyarrow as pa
+
+        chunks = [_decode_diff(new, old, table_path) for _, new, old in items]
+        file_idx = np.repeat(np.arange(len(items)), [len(c) for c in chunks])
+        files = pa.array([f for f, _, _ in items], pa.string()).take(file_idx)
+        pos = local_arrow_df(
+            spark, [files, np.concatenate(chunks)], "_dv_f string, _dv_i long"
+        )
+        return F.broadcast(pos)
+
     import json
 
-    rows = [
-        (_file_uri(table_path, rel), json.dumps(a["deletionVector"]))
-        for rel, a in sorted(dv_adds.items())
-    ]
-    from pyspark_anomaly_detection_spark.io.detach import local_rows_df
-
-    src = local_rows_df(spark, rows, "_dv_f string, _desc string")
+    src = local_rows_df(
+        spark,
+        [
+            (f, json.dumps(new), json.dumps(old) if old else None)
+            for f, new, old in items
+        ],
+        "_dv_f string, _new string, _old string",
+    )
 
     def gen(batches):
         import json as _json
@@ -228,11 +278,44 @@ def dv_positions_df(
         import pandas as pd
 
         for pdf in batches:
-            for f, desc in zip(pdf["_dv_f"], pdf["_desc"]):
-                pos = _decode_descriptor(_json.loads(desc), table_path)
+            for f, n, o in zip(pdf["_dv_f"], pdf["_new"], pdf["_old"]):
+                old = _json.loads(o) if isinstance(o, str) else None
+                pos = _decode_diff(_json.loads(n), old, table_path)
                 yield pd.DataFrame({"_dv_f": f, "_dv_i": pos})
 
     return src.mapInPandas(gen, "_dv_f string, _dv_i long")
+
+
+def dv_positions_df(
+    spark: SparkSession, table_path: str, dv_adds: dict[str, dict[str, Any]]
+) -> DataFrame:
+    """(_dv_f, _dv_i) deleted positions of every DV-carrying add, ready
+    to anti-join — driver-decoded and broadcast up to the DV threshold,
+    executor-decoded above it (see :func:`_positions_df`)."""
+    return _positions_df(
+        spark,
+        table_path,
+        [
+            (_file_uri(table_path, rel), a["deletionVector"], None)
+            for rel, a in sorted(dv_adds.items())
+        ],
+    )
+
+
+def _scan_with_positions(
+    spark: SparkSession, table_path: str, rels, schema
+) -> DataFrame:
+    """Data files ``rels`` with each row's normalized file path and
+    parquet row index appended as (_dv_f, _dv_i) — the probe side of
+    the position joins."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(
+        *[os.path.join(table_path, rel) for rel in rels]
+    ).select(
+        "*",
+        _norm_file_path_col(F.col("_metadata.file_path")).alias("_dv_f"),
+        F.col("_metadata.row_index").alias("_dv_i"),
+    )
 
 
 def read_files_minus_dv(
@@ -247,23 +330,8 @@ def read_files_minus_dv(
     file's NORMALIZED absolute path as a trailing column — the COW DML
     touched-file scan needs it (round 14: DML runs on DV tables by
     reading THROUGH the bitmap)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(
-        *[os.path.join(table_path, rel) for rel in sorted(dv_adds)]
-    ).select(
-        "*",
-        _norm_file_path_col(F.col("_metadata.file_path")).alias("_dv_f"),
-        F.col("_metadata.row_index").alias("_dv_i"),
-    )
+    df = _scan_with_positions(spark, table_path, sorted(dv_adds), schema)
     pos = dv_positions_df(spark, table_path, dv_adds)
-    total_card = sum(
-        int(a["deletionVector"].get("cardinality") or 0)
-        for a in dv_adds.values()
-    )
-    if total_card <= DV_BROADCAST_MAX_ROWS:
-        pos = F.broadcast(pos)
     # A key-list join MOVES the join keys to the FRONT of the output
     # ([_dv_f, _dv_i, data...]), so the data-column ORDER must be
     # restored explicitly: column-mapped callers rename this frame
@@ -276,69 +344,6 @@ def read_files_minus_dv(
     if file_col:
         return out.select(*data_cols, F.col("_dv_f").alias(file_col))
     return out.select(*data_cols)
-
-
-def dv_diff_rows(
-    spark: SparkSession,
-    table_path: str,
-    pairs: "list[tuple[str, dict[str, Any], dict[str, Any] | None]]",
-    schema,
-) -> DataFrame:
-    """Rows NEWLY deleted by a DV rewrite commit: for each
-    ``(rel_path, new_add, old_dv_descriptor_or_None)`` pair, the data
-    file's rows at positions ``decode(new) - decode(old)`` — the
-    row-level delta the change feed reports for a merge-on-read DELETE
-    (verdict r10 item 3).  Bitmaps decode executor-side; the position
-    set is broadcast below the usual DV threshold."""
-    import json
-
-    rows = [
-        (
-            _file_uri(table_path, rel),
-            json.dumps(new_add["deletionVector"]),
-            json.dumps(old_dv) if old_dv else None,
-        )
-        for rel, new_add, old_dv in pairs
-    ]
-    from pyspark_anomaly_detection_spark.io.detach import local_rows_df
-
-    src = local_rows_df(
-        spark, rows, "_dv_f string, _new string, _old string"
-    )
-
-    def gen(batches):
-        import json as _json
-
-        import pandas as pd
-
-        for pdf in batches:
-            for f, n, o in zip(pdf["_dv_f"], pdf["_new"], pdf["_old"]):
-                pos = set(_decode_descriptor(_json.loads(n), table_path))
-                if isinstance(o, str):
-                    pos -= set(
-                        _decode_descriptor(_json.loads(o), table_path)
-                    )
-                yield pd.DataFrame({"_dv_f": f, "_dv_i": sorted(pos)})
-
-    pos = src.mapInPandas(gen, "_dv_f string, _dv_i long")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(
-        *[os.path.join(table_path, rel) for rel, _, _ in pairs]
-    ).select(
-        "*",
-        _norm_file_path_col(F.col("_metadata.file_path")).alias("_dv_f"),
-        F.col("_metadata.row_index").alias("_dv_i"),
-    )
-    total_card = sum(
-        int(a["deletionVector"].get("cardinality") or 0) for _, a, _ in pairs
-    )
-    if total_card <= DV_BROADCAST_MAX_ROWS:
-        pos = F.broadcast(pos)
-    return df.join(pos, ["_dv_f", "_dv_i"], "left_semi").drop(
-        "_dv_f", "_dv_i"
-    )
 
 
 def dv_protocol_action(proto: "dict[str, Any] | None") -> dict[str, Any]:
@@ -405,11 +410,6 @@ def delete_delta_dv(
     # logical names so the caller's predicate binds — same translation
     # the DML module uses.
     mapping = deltalite._column_mapping_of(snap.schema_json)
-    paths = [os.path.join(table_path, rel) for rel in sorted(adds)]
-    meta_cols = [
-        _norm_file_path_col(F.col("_metadata.file_path")).alias("_dv_f"),
-        F.col("_metadata.row_index").alias("_dv_i"),
-    ]
     if mapping:
         import json as _json
 
@@ -429,19 +429,19 @@ def delete_delta_dv(
                 for f in data_fields
             ]
         )
-        scan = spark.read.schema(phys_schema).parquet(*paths).select(
-            *[
-                F.col(mapping.get(f.name, f.name)).alias(f.name)
-                for f in data_fields
-            ],
-            *meta_cols,
-        )
+        logical = [
+            F.col(mapping.get(f.name, f.name)).alias(f.name)
+            for f in data_fields
+        ]
+        scan = _scan_with_positions(
+            spark, table_path, sorted(adds), phys_schema
+        ).select(*logical, "_dv_f", "_dv_i")
     else:
-        scan = spark.read.parquet(*paths).select("*", *meta_cols)
+        scan = _scan_with_positions(spark, table_path, sorted(adds), None)
     dv_adds = {r: a for r, a in adds.items() if a.get("deletionVector")}
     if dv_adds:
         existing = dv_positions_df(spark, table_path, dv_adds)
-        scan = scan.join(F.broadcast(existing), ["_dv_f", "_dv_i"], "left_anti")
+        scan = scan.join(existing, ["_dv_f", "_dv_i"], "left_anti")
     matched = scan.filter(F.expr(predicate)).select("_dv_f", "_dv_i")
 
     # executor-side bitmap build: one group per touched file; the OLD

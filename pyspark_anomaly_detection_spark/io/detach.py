@@ -63,6 +63,18 @@ def local_rows_df(spark, rows: Sequence[tuple], schema) -> DataFrame:
     ``schema`` is a DDL string or StructType.  Values must already match
     the declared types (the same contract the tuple form enforced).
     """
+    return local_arrow_df(spark, list(zip(*rows)) if rows else None, schema)
+
+
+def local_arrow_df(
+    spark, columns: "Sequence[Any] | None", schema
+) -> DataFrame:
+    """Columnar form of :func:`local_rows_df`: one value sequence per
+    schema field — a Python sequence, a numpy array or a pyarrow Array —
+    become a pyarrow Table and a JVM ``LocalTableScan``.  ``None``
+    builds the empty relation.  Column builds stay vectorized, so a
+    driver-side frame of millions of rows never materializes one Python
+    tuple per row."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
@@ -70,15 +82,16 @@ def local_rows_df(spark, rows: Sequence[tuple], schema) -> DataFrame:
         StructType.fromDDL(schema) if isinstance(schema, str) else schema
     )
     arrow_schema = to_arrow_schema(st)
-    if rows:
-        cols: list[Sequence[Any]] = list(zip(*rows))
+    if columns is None:
+        table = arrow_schema.empty_table()
+    else:
         table = pa.Table.from_arrays(
             [
-                pa.array(col, type=field.type)
-                for col, field in zip(cols, arrow_schema)
+                col.cast(field.type)
+                if isinstance(col, pa.Array)
+                else pa.array(col, type=field.type)
+                for col, field in zip(columns, arrow_schema)
             ],
             schema=arrow_schema,
         )
-    else:
-        table = arrow_schema.empty_table()
     return spark.createDataFrame(table, st)

@@ -23,20 +23,25 @@ The standard 32-bit format, as published by the RoaringBitmap project:
   (1024 × uint64 LE, card > 4096), RUN (``[n_runs:2]`` then
   ``(start:2, length-1:2)`` pairs).
 
-Everything here is pure Python over ``int``/``bytes`` — the codec runs
-driver-side or inside Arrow-batched executors on BOUNDED inputs (one
-bitmap per data file).  Writer policy: a container is emitted as RUN
-when that is strictly smaller than the array/bitmap choice, matching
-``runOptimize()`` behavior; readers accept all three regardless.
+The encoder is pure Python over ``int``/``bytes``; the decoder reads
+every container with numpy (one vectorized step per container, not one
+per value), so a reader can decode millions of deleted positions on the
+driver.  Both run on BOUNDED inputs (one bitmap per data file).
+Writer policy: a container is emitted as RUN when that is strictly
+smaller than the array/bitmap choice, matching ``runOptimize()``
+behavior; readers accept all three regardless.
 
 Public API: :func:`serialize_roaring64` / :func:`deserialize_roaring64`
-(sorted iterables of uint64 row indices), plus the 32-bit halves for
-tests.
+(sorted iterables of uint64 row indices),
+:func:`deserialize_roaring64_array` (the same values as a uint64 numpy
+array), plus the 32-bit halves for tests.
 """
 
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 SERIAL_COOKIE_NO_RUN = 12346
 SERIAL_COOKIE_RUN = 12347
@@ -130,9 +135,11 @@ def serialize_roaring32(values: list[int]) -> bytes:
     return bytes(out)
 
 
-def deserialize_roaring32(buf: bytes, offset: int = 0) -> tuple[list[int], int]:
-    """Decode one standard-format 32-bit bitmap starting at ``offset``;
-    returns (sorted values, bytes consumed)."""
+def _roaring32_array(buf: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
+    """Decode one standard-format 32-bit bitmap starting at ``offset``
+    into a sorted uint64 array — every container decodes vectorized
+    (array: one ``frombuffer``; bitmap: ``unpackbits``; run: one
+    ``repeat`` + ``arange``).  Returns (values, bytes consumed)."""
     base = offset
     (cookie,) = struct.unpack_from("<I", buf, offset)
     offset += 4
@@ -149,37 +156,45 @@ def deserialize_roaring32(buf: bytes, offset: int = 0) -> tuple[list[int], int]:
         has_offsets = True
     else:
         raise ValueError(f"roaring: bad cookie {cookie}")
-    keys_cards = [
-        struct.unpack_from("<HH", buf, offset + 4 * i) for i in range(n)
-    ]
+    keys_cards = np.frombuffer(buf, "<u2", count=2 * n, offset=offset)
     offset += 4 * n
     if has_offsets:
         offset += 4 * n  # offsets are redundant for sequential decode
-    values: list[int] = []
-    for i, (key, card_m1) in enumerate(keys_cards):
-        card = card_m1 + 1
-        base_val = key << 16
+    parts: list[np.ndarray] = []
+    for i in range(n):
+        key, card = int(keys_cards[2 * i]), int(keys_cards[2 * i + 1]) + 1
         if is_run[i]:
             (n_runs,) = struct.unpack_from("<H", buf, offset)
-            offset += 2
-            for _ in range(n_runs):
-                s, ln_m1 = struct.unpack_from("<HH", buf, offset)
-                offset += 4
-                values.extend(range(base_val + s, base_val + s + ln_m1 + 1))
+            runs = np.frombuffer(
+                buf, "<u2", count=2 * n_runs, offset=offset + 2
+            ).astype(np.int64)
+            offset += 2 + 4 * n_runs
+            starts, lens = runs[0::2], runs[1::2] + 1
+            # value k of run r is starts[r] + (k - first index of run r)
+            begins = np.cumsum(lens) - lens
+            lows = np.arange(int(lens.sum()), dtype=np.int64) + np.repeat(
+                starts - begins, lens
+            )
         elif card > ARRAY_MAX:
-            chunk = buf[offset : offset + 8192]
+            bits = np.unpackbits(
+                np.frombuffer(buf, np.uint8, count=8192, offset=offset),
+                bitorder="little",
+            )
             offset += 8192
-            for byte_i, b in enumerate(chunk):
-                while b:
-                    bit = b & -b
-                    values.append(base_val + (byte_i << 3) + bit.bit_length() - 1)
-                    b ^= bit
+            lows = np.flatnonzero(bits)
         else:
-            for j in range(card):
-                (v,) = struct.unpack_from("<H", buf, offset + 2 * j)
-                values.append(base_val + v)
+            lows = np.frombuffer(buf, "<u2", count=card, offset=offset)
             offset += 2 * card
+        parts.append(lows.astype(np.uint64) + np.uint64(key << 16))
+    values = np.concatenate(parts) if parts else np.empty(0, np.uint64)
     return values, offset - base
+
+
+def deserialize_roaring32(buf: bytes, offset: int = 0) -> tuple[list[int], int]:
+    """Decode one standard-format 32-bit bitmap starting at ``offset``;
+    returns (sorted values, bytes consumed)."""
+    values, used = _roaring32_array(buf, offset)
+    return values.tolist(), used
 
 
 # ------------------------------------------------- 64-bit portable form
@@ -200,17 +215,22 @@ def serialize_roaring64(values) -> bytes:
     return bytes(out)
 
 
-def deserialize_roaring64(buf: bytes) -> list[int]:
+def deserialize_roaring64_array(buf: bytes) -> np.ndarray:
+    """Portable 64-bit bitmap → sorted uint64 array of its values."""
     (magic,) = struct.unpack_from("<I", buf, 0)
     if magic != MAGIC_PORTABLE_64:
         raise ValueError(f"roaring64: bad magic {magic}")
     (n_buckets,) = struct.unpack_from("<q", buf, 4)
     offset = 12
-    values: list[int] = []
+    parts: list[np.ndarray] = []
     for _ in range(n_buckets):
         (key,) = struct.unpack_from("<I", buf, offset)
         offset += 4
-        lows, used = deserialize_roaring32(buf, offset)
+        lows, used = _roaring32_array(buf, offset)
         offset += used
-        values.extend((key << 32) | lo for lo in lows)
-    return values
+        parts.append(lows | np.uint64(key << 32))
+    return np.concatenate(parts) if parts else np.empty(0, np.uint64)
+
+
+def deserialize_roaring64(buf: bytes) -> list[int]:
+    return deserialize_roaring64_array(buf).tolist()

@@ -672,3 +672,35 @@ def test_optimize_zorder_partitioned_clusters_within_groups(
 
     with _pytest.raises(ValueError, match="partition"):
         optimize_delta(spark, t, zorder_by=("side", "x"))
+
+
+def test_pruned_read_reinjects_partition_columns(spark, tmp_path):
+    """Data skipping on a PARTITIONED table returns the real partition
+    values: the files hold no partition column, so the pruned read must
+    reinject each file's ``partitionValues`` exactly like ``read_delta``
+    (it used to read them from the files and return NULL on every row)."""
+    from pyspark_anomaly_detection_spark.io.deltalite import (
+        annotate_stats,
+        read_delta_pruned,
+    )
+
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.range(0, 40).select(
+            F.col("id"), (F.col("id") % 3).cast("string").alias("p")
+        ),
+        t,
+        partition_by=["p"],
+    )
+    annotate_stats(t, ["id"])
+    df, meta = read_delta_pruned(spark, t, "id", 5, 9)
+    assert meta["files_read"] >= 1
+    got = sorted((r.id, r.p) for r in df.collect())
+    want = sorted(
+        (r.id, r.p)
+        for r in read_delta(spark, t)
+        .filter((F.col("id") >= 5) & (F.col("id") <= 9))
+        .collect()
+    )
+    assert got == want == [(i, str(i % 3)) for i in range(5, 10)]
+    assert df.schema.fieldNames() == ["id", "p"]

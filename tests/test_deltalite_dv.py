@@ -612,11 +612,17 @@ def test_dv_u_checkpoint_and_purge(spark, tmp_path):
 
 
 @pytest.mark.parametrize("storage", ["i", "u"])
-def test_batch_cdf_reports_dv_rowlevel_deletes(spark, tmp_path, storage):
+def test_batch_cdf_reports_dv_rowlevel_deletes(
+    spark, tmp_path, storage, monkeypatch
+):
     """read_delta_changes across a DV delete yields exactly the NEWLY
     deleted rows as _change_type='delete' — never a file-level
     delete+insert pair, and a second (merging) delete reports only its
-    own increment."""
+    own increment.  Both sides of the DV threshold: the bitmap diff runs
+    on the driver (JVM-only plan) below it and in the executor-side
+    Python decode lane above it, with the same feed."""
+    from pyspark_anomaly_detection_spark import plans
+    from pyspark_anomaly_detection_spark.io import deltalite_dv
     from pyspark_anomaly_detection_spark.io.deltalite import (
         read_delta_changes,
     )
@@ -625,16 +631,20 @@ def test_batch_cdf_reports_dv_rowlevel_deletes(spark, tmp_path, storage):
     _build(spark, t)  # versions 0-2: ids 0..29
     delete_delta_dv(spark, t, "id % 10 = 7", storage=storage)  # v3
     delete_delta_dv(spark, t, "id % 7 = 0", storage=storage)   # v4
-    feed = read_delta_changes(spark, t, from_version=2).collect()
-    by_version = {}
-    for r in feed:
-        by_version.setdefault((r._commit_version, r._change_type), []).append(
-            r.id
-        )
-    assert sorted(by_version[(3, "delete")]) == [7, 17, 27]
-    # second delete: %7==0 minus already-deleted 7
-    assert sorted(by_version[(4, "delete")]) == [0, 14, 21, 28]
-    assert not any(ct == "insert" for _, ct in by_version)
+    for above_threshold in (False, True):
+        if above_threshold:
+            monkeypatch.setattr(deltalite_dv, "DV_BROADCAST_MAX_ROWS", 0)
+        feed = read_delta_changes(spark, t, from_version=2)
+        assert plans.has_python_eval(feed) is above_threshold
+        by_version = {}
+        for r in feed.collect():
+            by_version.setdefault(
+                (r._commit_version, r._change_type), []
+            ).append(r.id)
+        assert sorted(by_version[(3, "delete")]) == [7, 17, 27]
+        # second delete: %7==0 minus already-deleted 7
+        assert sorted(by_version[(4, "delete")]) == [0, 14, 21, 28]
+        assert not any(ct == "insert" for _, ct in by_version)
 
 
 @pytest.mark.parametrize("storage", ["i", "u"])
@@ -833,3 +843,69 @@ def test_dv_partitioned_purge(spark, tmp_path):
     rows = {r.id: r.side for r in read_delta(spark, t).collect()}
     assert set(rows) == {i for i in range(12) if i % 3 != 0}
     assert all(rows[i] == str(i % 2) for i in rows)
+
+
+def _small_dv_table(spark, t):
+    """ids 0..29 in three files with stats, DV-deleted twice — inline
+    then file-based bitmaps merging into the same files."""
+    from pyspark_anomaly_detection_spark.io.deltalite import annotate_stats
+
+    _build(spark, t)
+    annotate_stats(t, ["id"])
+    delete_delta_dv(spark, t, "id % 10 = 7")
+    delete_delta_dv(spark, t, "id % 7 = 0", storage="u")
+
+
+def _dv_reads(spark, t):
+    from pyspark_anomaly_detection_spark.io.deltalite import read_delta_pruned
+
+    return {
+        "snapshot": read_delta(spark, t),
+        "pruned": read_delta_pruned(spark, t, "id", 5, 24)[0],
+    }
+
+
+def _ids(df):
+    return sorted(r.id for r in df.collect())
+
+
+_LIVE = [i for i in range(30) if i % 10 != 7 and i % 7 != 0]
+
+
+def test_small_dv_reads_plan_without_python(spark, tmp_path):
+    """Below DV_BROADCAST_MAX_ROWS the positions decode on the driver
+    into a broadcast JVM local relation: neither the snapshot read nor
+    the stats-pruned read of a DV table keeps a Python stage."""
+    from pyspark_anomaly_detection_spark import plans
+
+    t = str(tmp_path / "t")
+    _small_dv_table(spark, t)
+    reads = _dv_reads(spark, t)
+    for name, df in reads.items():
+        assert plans.has_python_eval(df) is False, (
+            name,
+            plans.formatted_plan(df),
+        )
+    assert _ids(reads["snapshot"]) == _LIVE
+    assert _ids(reads["pruned"]) == [i for i in _LIVE if 5 <= i <= 24]
+
+
+def test_large_dv_reads_keep_executor_decode(spark, tmp_path, monkeypatch):
+    """Above DV_BROADCAST_MAX_ROWS (forced to 0 here — the 100 TB case
+    no test table reaches) the reads keep the executor-side Python
+    decode lane with an identical census, and a further DV DELETE
+    anti-joins the existing positions through the same lane."""
+    from pyspark_anomaly_detection_spark import plans
+    from pyspark_anomaly_detection_spark.io import deltalite_dv
+
+    t = str(tmp_path / "t")
+    _small_dv_table(spark, t)
+    small = {name: _ids(df) for name, df in _dv_reads(spark, t).items()}
+    monkeypatch.setattr(deltalite_dv, "DV_BROADCAST_MAX_ROWS", 0)
+    for name, df in _dv_reads(spark, t).items():
+        assert plans.has_python_eval(df) is True, name
+        assert _ids(df) == small[name]
+    # %5==0 live ids: 5, 10, 15, 20, 25 (0 and 35 are gone / absent)
+    out = delete_delta_dv(spark, t, "id % 5 = 0")
+    assert out["rows_deleted"] == 5
+    assert _ids(read_delta(spark, t)) == [i for i in _LIVE if i % 5 != 0]
