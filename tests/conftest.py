@@ -24,6 +24,29 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def registry_df(spark, sf_dir):
+    """Frame of a registered query, built on first use and kept: the
+    oracle-parity sweep and the blanket plan checks in test_plans.py walk
+    the same registry, so each query builds once per session instead of
+    once per sweep.  A frame the parity sweep has run keeps its adaptive
+    plan's initial form next to the final one, so plan-text checks still
+    see every node that was planned.  ``clear()`` drops the frames."""
+    from pyspark_anomaly_detection_spark.registry import all_queries
+
+    registry = all_queries()
+    memo = {}
+
+    def frame(name):
+        if name not in memo:
+            memo[name] = registry[name].fn(spark, sf_dir)
+        return memo[name]
+
+    frame.clear = memo.clear
+    yield frame
+    memo.clear()
+
+
 @pytest.fixture(autouse=True)
 def _release_tracked_caches():
     """Drop the tracked persist() pool after every test (cachepool.py) —

@@ -66,11 +66,11 @@ def check_semantic_keep_containment(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFr
 
 
 @pytest.mark.parametrize("name", ORACLE_CASES)
-def test_oracle_parity(spark, duck, sf_dir, name):
+def test_oracle_parity(registry_df, duck, sf_dir, name):
     from pyspark_anomaly_detection_spark.registry import resolve_oracle
 
     query = REGISTRY[name]
-    spark_pdf = query.fn(spark, sf_dir).toPandas()
+    spark_pdf = registry_df(name).toPandas()
     duck_pdf = duck.execute(resolve_oracle(query.oracle, sf_dir)).df()
 
     if name == "q52_embedding_neardup" and len(spark_pdf) < len(duck_pdf):
@@ -115,7 +115,7 @@ def test_oracle_parity(spark, duck, sf_dir, name):
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_CASES)
-def test_rows_only_queries_run(spark, sf_dir, name):
-    df = REGISTRY[name].fn(spark, sf_dir)
+def test_rows_only_queries_run(registry_df, name):
+    df = registry_df(name)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0

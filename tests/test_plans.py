@@ -20,6 +20,14 @@ def q(name):
     return REGISTRY[name].fn
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _drop_registry_frames(registry_df):
+    """The blanket checks below are the last users of the session's
+    registry frames (conftest.registry_df); free them after this module."""
+    yield
+    registry_df.clear()
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     df = q("q05_filter_project")(spark, sf_dir)
     assert plans.has_pushed_filter(df, "l_shipdate"), plans.formatted_plan(df)
@@ -285,7 +293,7 @@ def test_sql_broadcast_hint_honored(spark, sf_dir):
     assert plans.uses_broadcast_join(df), plans.formatted_plan(df)
 
 
-def test_no_python_eval_in_any_oracle_query(spark, sf_dir):
+def test_no_python_eval_in_any_oracle_query(registry_df):
     """Blanket invariant: every oracle-checked query stays on the JVM —
     Python evaluation in a relational plan is a 10-100× scale regression.
     Deliberate exceptions are declared at the registration site via
@@ -296,13 +304,12 @@ def test_no_python_eval_in_any_oracle_query(spark, sf_dir):
     for name, query in sorted(REGISTRY.items()):
         if query.oracle is None or query.python_lane:
             continue
-        df = query.fn(spark, sf_dir)
-        if plans.has_python_eval(df):
+        if plans.has_python_eval(registry_df(name)):
             offenders.append(name)
     assert not offenders, f"fell off the JVM path: {offenders}"
 
 
-def test_python_lane_flags_are_honest(spark, sf_dir):
+def test_python_lane_flags_are_honest(registry_df):
     """The inverse contract: every query declared ``python_lane=True``
     really does contain a Python evaluation stage.  A stale flag would
     silently exempt a future JVM-only rewrite from the blanket check."""
@@ -310,8 +317,7 @@ def test_python_lane_flags_are_honest(spark, sf_dir):
     for name, query in sorted(REGISTRY.items()):
         if not query.python_lane:
             continue
-        df = query.fn(spark, sf_dir)
-        if not plans.has_python_eval(df):
+        if not plans.has_python_eval(registry_df(name)):
             dishonest.append(name)
     assert not dishonest, f"python_lane=True but JVM-only plan: {dishonest}"
 
@@ -421,7 +427,7 @@ def test_bench_all_artifact_consistent():
     assert max(data["queries"].values()) <= 10.0, "tail query exceeds 10 s cap"
 
 
-def test_no_cartesian_or_nested_loop_in_oracle_queries(spark, sf_dir):
+def test_no_cartesian_or_nested_loop_in_oracle_queries(registry_df):
     """Blanket invariant: no oracle-checked query may plan a cartesian
     product or nested-loop join between two MULTI-ROW sides.  Two benign
     patterns are whitelisted by name so any NEW accidental cartesian
@@ -470,7 +476,7 @@ def test_no_cartesian_or_nested_loop_in_oracle_queries(spark, sf_dir):
     for name, query in sorted(REGISTRY.items()):
         if query.oracle is None or name in allowed:
             continue
-        plan = plans.formatted_plan(query.fn(spark, sf_dir))
+        plan = plans.formatted_plan(registry_df(name))
         if "CartesianProduct" in plan or "NestedLoop" in plan:
             offenders.append(name)
     assert not offenders, f"cartesian/nested-loop joins in: {offenders}"
