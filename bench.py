@@ -8,7 +8,7 @@ full execution, no driver collect), and prints ONE JSON line::
     {"metric": "headline_suite_seconds", "value": N, "unit": "sec",
      "queries": {"q01_pricing_summary": sec, ...}, "sf": 0.1,
      "reps": 5, "dispersion": {"q01_pricing_summary":
-        {"min": s, "max": s, "stdev": s, "samples": [...]}, ...}}
+        {"min": s, "max": s, "stdev": s}, ...}}
 
 Per-query numbers are the TRIMMED MEAN of ``$SPARK_GRAFT_BENCH_REPS``
 (default 5; values of 1 or 2 are honored for quick runs — trimming only
@@ -17,9 +17,9 @@ the rest — so round-over-round deltas of a few percent are decidable
 against the recorded spread instead of being single-shot noise.
 ``value`` is the sum of the per-query trimmed means.
 
-The stdout line keeps per-query min/max/stdev but moves the full
-per-sample vectors to ``BENCH_DISPERSION.json`` next to this file, so
-the line stays self-contained under tail-capture limits (~2000 chars).
+``--only q1,q2`` times the named queries instead of the headline suite
+(``tools/bench_slope.py`` uses it for its scale-point sweep); ``--all``
+times every registered query once.
 """
 
 from __future__ import annotations
@@ -97,8 +97,7 @@ def main() -> None:
 
     headline = {n: q for n, q in registry.items() if q.headline}
     if "--only" in sys.argv:
-        # targeted subset (the bench-drift A/B reruns only the tripped
-        # queries — tools/bench_history.py::ab_bisect)
+        # targeted subset (the bench_slope scale point)
         wanted = set(sys.argv[sys.argv.index("--only") + 1].split(","))
         unknown = wanted - set(registry)
         if unknown:
@@ -153,20 +152,6 @@ def main() -> None:
                 3,
             ),
         }
-
-    # Full per-sample vectors go to a sidecar so the stdout line stays
-    # short enough that a 2000-char tail capture keeps the whole object
-    # (metric/value included) — the r6 artifact lost its head to this.
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DISPERSION.json"
-    )
-    with open(sidecar, "w") as f:
-        json.dump(
-            {"sf": sf, "reps": reps, "samples": dict(sorted(samples.items()))},
-            f,
-            indent=1,
-        )
-        f.write("\n")
 
     print(
         json.dumps(

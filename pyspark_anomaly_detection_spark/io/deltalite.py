@@ -242,8 +242,8 @@ def _commit_with_retry(
     max_retries: int = MAX_COMMIT_RETRIES,
 ) -> int:
     """Write one commit with Delta's optimistic-concurrency protocol:
-    claim ``<version>.json`` with O_EXCL; on losing the race, re-read
-    the interleaved commits and REBASE onto the new tip when the
+    publish ``<version>.json`` atomically if absent; on losing the race,
+    re-read the interleaved commits and REBASE onto the new tip when the
     transactions commute, else raise :class:`DeltaliteConcurrentCommit`.
 
     Commutation rules (the protocol's documented conflict matrix,
@@ -308,14 +308,18 @@ def _commit_with_retry(
                 a["commitInfo"]["inCommitTimestamp"] = ts
                 a["commitInfo"]["timestamp"] = ts
                 break
+        # the whole commit is written under a temp name first (not
+        # ``*.json``, so log listing ignores it) and published with
+        # link(2), an atomic put-if-absent: a crash or exception mid-write
+        # leaves no torn ``<version>.json``, and a racing loser that
+        # re-reads the log never sees a half-written commit
+        final = _log_path(table_path, version)
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
         try:
-            fd = os.open(
-                _log_path(table_path, version),
-                os.O_WRONLY | os.O_CREAT | os.O_EXCL,
-            )
-            with os.fdopen(fd, "w") as f:
+            with open(tmp, "w") as f:
                 for a in actions:
                     f.write(json.dumps(a, separators=(",", ":")) + "\n")
+            os.link(tmp, final)
             return version
         except FileExistsError:
             attempt += 1
@@ -361,6 +365,11 @@ def _commit_with_retry(
                             "(ConcurrentAppend/ConcurrentDelete)"
                         )
             version = latest + 1
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
 
 
 def _schema_evolution(

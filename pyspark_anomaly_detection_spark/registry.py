@@ -125,6 +125,27 @@ def register(
     return deco
 
 
+def query_digest_line(name: str, q: Query) -> str:
+    """One registered query's identity as ``registry_fingerprint`` digests
+    it: ``name=module.qualname:src_md5:oracle_md5``.  Content only — where
+    the function's lines sit in its module is not part of it, so an edit
+    that shifts a ``@register`` line stales no artifact."""
+    import hashlib
+    import inspect
+
+    fn = getattr(q.fn, "__wrapped__", q.fn)
+    try:
+        src, _ = inspect.getsourcelines(fn)
+        src_digest = hashlib.md5("".join(src).encode()).hexdigest()
+    except OSError:
+        src_digest = "unknown"
+    oracle = resolve_oracle(q.oracle) or ""
+    return (
+        f"{name}={fn.__module__}.{fn.__qualname__}:"
+        f"{src_digest}:{hashlib.md5(oracle.encode()).hexdigest()}"
+    )
+
+
 def registry_fingerprint() -> dict:
     """Identity of the CURRENT query registry, for stamping into every
     generated evidence artifact (verdict r10 item 1 — round 10's close
@@ -132,41 +153,31 @@ def registry_fingerprint() -> dict:
     noticed; name-set coverage alone cannot catch a changed
     implementation under an unchanged name).
 
-    ``registry_hash`` digests the sorted ``name → module.qualname:line``
-    map PLUS each query function's source text, so ANY edit to a
-    registered query (moved, rewritten, re-oracled) changes the hash and
-    invalidates previously generated artifacts.  ``git_head`` records
-    the commit the generator ran at (informational — the enforced
-    invariant is the registry hash, since committing regenerated
-    artifacts necessarily advances HEAD past the stamped value)."""
+    ``registry_hash`` digests the sorted :func:`query_digest_line` of
+    every registered query — module, qualname, source text and oracle
+    SQL — so any edit to a registered query (renamed, rewritten,
+    re-oracled) changes the hash and invalidates previously generated
+    artifacts, while moving it within its module does not.  ``git_head``
+    records the commit the generator ran at (informational — the
+    enforced invariant is the registry hash, since committing
+    regenerated artifacts necessarily advances HEAD past the stamped
+    value)."""
     import hashlib
-    import inspect
     import os
     import subprocess
 
     qs = all_queries()
-    lines = []
-    for name, q in sorted(qs.items()):
-        fn = getattr(q.fn, "__wrapped__", q.fn)
-        try:
-            src, lineno = inspect.getsourcelines(fn)
-            src_digest = hashlib.md5("".join(src).encode()).hexdigest()
-        except OSError:
-            lineno, src_digest = -1, "unknown"
-        oracle = resolve_oracle(q.oracle) or ""
-        lines.append(
-            f"{name}={fn.__module__}.{fn.__qualname__}:{lineno}:"
-            f"{src_digest}:{hashlib.md5(oracle.encode()).hexdigest()}"
-        )
+    lines = [query_digest_line(name, q) for name, q in sorted(qs.items())]
     registry_hash = hashlib.md5("\n".join(lines).encode()).hexdigest()
     # package_hash (ADVICE r15): registry_hash covers only registered
     # query functions + oracle SQL, so a LIBRARY-only change (deltalite
     # internals, neardup blocking, io paths...) leaves it unchanged and
-    # the round-close sweep-skip gates would accept a stale green
-    # artifact.  Hashing every package source file closes that hole:
-    # skip gates require BOTH hashes to match (tools/round_close.py,
-    # tools/bench_slope.py); freshness tests keep enforcing
-    # registry_hash, which any query edit moves.
+    # the sweep-skip gate would accept a stale green artifact.  Hashing
+    # every package source file closes that hole: the skip gate in
+    # tools/bench_slope.py requires BOTH hashes to match, and
+    # FUZZ_PARITY.json (tools/data_fuzz.py) is checked against it;
+    # the other freshness tests enforce registry_hash, which any query
+    # edit moves.
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     pkg = hashlib.md5()
     for dirpath, dirnames, filenames in os.walk(pkg_root):

@@ -6,13 +6,14 @@ PARITY_sf0.1.json ~40 minutes behind the final feature commit — the
 name-set coverage guards (tests/test_bench_slope.py) could not notice
 because no query NAME changed, only implementations.  Every generated
 artifact now embeds ``registry_fingerprint()`` — a digest over each
-registered query's (module.qualname, line, source text, oracle SQL) —
+registered query's module, qualname, source text and oracle SQL
+(``registry.query_digest_line``; line positions are not part of it) —
 and this test fails when any committed artifact's embedded hash no
 longer matches the LIVE registry, i.e. whenever a registered query was
 edited after the artifact was generated.
 
-Remedy when red: rerun ``python tools/round_close.py`` (artifacts are
-regenerated LAST in the round workflow, after all query changes).
+Remedy when red: rerun the artifact's generator, named in the failure
+message (README "Regenerating evidence").
 """
 
 from __future__ import annotations
@@ -25,15 +26,17 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-JSON_ARTIFACTS = [
-    "PARITY_sf0.001.json",
-    "PARITY_sf0.01.json",
-    "PARITY_sf0.1.json",
-    "PARITY_sf1.json",
-    "BENCH_ALL_sf0.01.json",
-    "BENCH_ALL_sf0.1.json",
-    "BENCH_SCALE_sf1.json",
-]
+#: each stamped artifact → the command that regenerates it
+GENERATORS = {
+    "PARITY_sf0.001.json": "python tools/parity_check.py <testdata>/sf0.001",
+    "PARITY_sf0.01.json": "python tools/parity_check.py <testdata>/sf0.01",
+    "PARITY_sf0.1.json": "python tools/parity_check.py <testdata>/sf0.1",
+    "PARITY_sf1.json": "python tools/parity_check.py --scale-point",
+    "BENCH_ALL_sf0.01.json": "python tools/bench_slope.py",
+    "BENCH_ALL_sf0.1.json": "python tools/bench_slope.py",
+    "BENCH_SCALE_sf1.json": "python tools/bench_slope.py",
+    "PLAN_AUDIT.md": "python tools/plan_audit.py",
+}
 
 
 def embedded_hash_of(path: str) -> str | None:
@@ -56,18 +59,18 @@ def live_hash():
     return registry_fingerprint()["registry_hash"]
 
 
-@pytest.mark.parametrize("name", JSON_ARTIFACTS + ["PLAN_AUDIT.md"])
+@pytest.mark.parametrize("name", list(GENERATORS))
 def test_committed_artifact_matches_live_registry(name, live_hash):
     path = os.path.join(REPO, name)
     embedded = embedded_hash_of(path)
     assert embedded is not None, (
-        f"{name} carries no registry fingerprint — regenerate it with the "
-        "round-11 tooling (python tools/round_close.py)"
+        f"{name} carries no registry fingerprint — regenerate it with "
+        f"`{GENERATORS[name]}`"
     )
     assert embedded == live_hash, (
         f"{name} is STALE: generated at registry {embedded[:12]}, live "
         f"registry is {live_hash[:12]} — a registered query changed after "
-        "the artifact was written; rerun tools/round_close.py"
+        f"the artifact was written; rerun `{GENERATORS[name]}`"
     )
 
 
@@ -93,45 +96,56 @@ def test_guard_goes_red_on_deliberately_stale_artifact(tmp_path, live_hash):
     assert embedded_hash_of(str(md)) == "f" * 32 != live_hash
 
 
-def test_fingerprint_moves_when_a_query_changes(live_hash):
-    """The fingerprint is sensitive to IMPLEMENTATION edits, not just the
-    name set: recomputing over the same registry with one query's source
-    perturbed yields a different hash (simulated at the digest layer —
-    the hash covers per-query source text, so any edit moves it)."""
-    import hashlib
+def _victim_source_shifted(monkeypatch, edit: bool, shift: int) -> None:
+    """Make ``inspect.getsourcelines`` report every query ``shift`` lines
+    further down, and the first registered query's source with a trailing
+    comment when ``edit``."""
     import inspect
 
     from pyspark_anomaly_detection_spark.registry import all_queries
 
-    qs = all_queries()
-    # reproduce the digest with one query's source text perturbed
-    lines_live, lines_perturbed = [], []
-    victim = sorted(qs)[0]
-    from pyspark_anomaly_detection_spark.registry import resolve_oracle
+    _, q = sorted(all_queries().items())[0]
+    victim = getattr(q.fn, "__wrapped__", q.fn)
+    real = inspect.getsourcelines
 
-    for name, q in sorted(qs.items()):
-        fn = getattr(q.fn, "__wrapped__", q.fn)
-        src, lineno = inspect.getsourcelines(fn)
-        src_digest = hashlib.md5("".join(src).encode()).hexdigest()
-        oracle = resolve_oracle(q.oracle) or ""
-        entry = (
-            f"{name}={fn.__module__}.{fn.__qualname__}:{lineno}:"
-            f"{src_digest}:{hashlib.md5(oracle.encode()).hexdigest()}"
-        )
-        lines_live.append(entry)
-        if name == victim:
-            perturbed_digest = hashlib.md5(
-                ("".join(src) + "# edited").encode()
-            ).hexdigest()
-            entry = entry.replace(src_digest, perturbed_digest)
-        lines_perturbed.append(entry)
-    assert (
-        hashlib.md5("\n".join(lines_live).encode()).hexdigest() == live_hash
+    def getsourcelines(obj):
+        src, lineno = real(obj)
+        if edit and obj is victim:
+            src = src + ["# edited\n"]
+        return src, lineno + shift
+
+    monkeypatch.setattr(inspect, "getsourcelines", getsourcelines)
+
+
+def test_fingerprint_moves_when_a_query_changes(live_hash, monkeypatch):
+    """The fingerprint is sensitive to IMPLEMENTATION edits, not just the
+    name set: the hash is the digest of the per-query lines, and one
+    query's source text perturbed yields a different hash."""
+    import hashlib
+
+    from pyspark_anomaly_detection_spark.registry import (
+        all_queries,
+        query_digest_line,
+        registry_fingerprint,
     )
-    assert (
-        hashlib.md5("\n".join(lines_perturbed).encode()).hexdigest()
-        != live_hash
-    )
+
+    lines = [query_digest_line(n, q) for n, q in sorted(all_queries().items())]
+    assert hashlib.md5("\n".join(lines).encode()).hexdigest() == live_hash
+    _victim_source_shifted(monkeypatch, edit=True, shift=0)
+    assert registry_fingerprint()["registry_hash"] != live_hash
+
+
+def test_fingerprint_ignores_line_shifts(live_hash, monkeypatch):
+    """Moving registered queries within their modules (an edit above
+    them shifts every ``@register`` line) leaves the hash unchanged, so
+    no artifact goes stale; an edit to the source still moves it."""
+    from pyspark_anomaly_detection_spark.registry import registry_fingerprint
+
+    _victim_source_shifted(monkeypatch, edit=False, shift=1)
+    assert registry_fingerprint()["registry_hash"] == live_hash
+    monkeypatch.undo()
+    _victim_source_shifted(monkeypatch, edit=True, shift=1)
+    assert registry_fingerprint()["registry_hash"] != live_hash
 
 
 # ---------------------------------------------------------------- COVERAGE.md

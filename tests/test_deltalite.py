@@ -704,3 +704,71 @@ def test_pruned_read_reinjects_partition_columns(spark, tmp_path):
     )
     assert got == want == [(i, str(i % 3)) for i in range(5, 10)]
     assert df.schema.fieldNames() == ["id", "p"]
+
+
+def test_interrupted_commit_leaves_no_torn_version(tmp_path, monkeypatch):
+    """A commit that fails after any of its action lines is written
+    leaves no trace: version N stays absent, the replayed snapshot is
+    unchanged, and the next commit still takes version N.  A torn
+    ``<N>.json`` would be replayed as committed: an overwrite cut between
+    its removes and its add reads as an empty table.  Driver-only:
+    synthetic actions, no Spark job."""
+    from pyspark_anomaly_detection_spark.io import deltalite as dl
+
+    def state(t):
+        snap = dl._snapshot_state(t)
+        return (snap.version, sorted(snap.adds), sorted(snap.tombstones),
+                snap.meta, snap.protocol)
+
+    def add(path):
+        return {"add": {"path": path, "partitionValues": {}, "size": 1,
+                        "modificationTime": 0, "dataChange": True}}
+
+    def overwrite():
+        return [
+            {"commitInfo": {"operation": "OVERWRITE"}},
+            {"remove": {"path": "a.parquet", "dataChange": True}},
+            {"remove": {"path": "b.parquet", "dataChange": True}},
+            add("c.parquet"),
+        ]
+
+    class _FailingJson:
+        """``json`` as deltalite sees it, except that the ``fail_at``-th
+        ``dumps`` raises: lines ``0 .. fail_at-1`` are already written."""
+
+        def __init__(self, fail_at):
+            self.fail_at, self.calls = fail_at, 0
+
+        def __getattr__(self, name):
+            return getattr(json, name)
+
+        def dumps(self, obj, **kw):
+            if self.calls == self.fail_at:
+                raise OSError("injected: commit write interrupted")
+            self.calls += 1
+            return json.dumps(obj, **kw)
+
+    for boundary in range(len(overwrite())):
+        t = str(tmp_path / f"t{boundary}")
+        log = os.path.join(t, "_delta_log")
+        os.makedirs(log)
+        dl._commit_with_retry(t, 0, [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {"id": "m", "format": {"provider": "parquet",
+                                                "options": {}},
+                          "schemaString": "{}", "partitionColumns": [],
+                          "configuration": {}, "createdTime": 0}},
+            add("a.parquet"),
+            add("b.parquet"),
+            {"commitInfo": {"operation": "WRITE"}},
+        ])
+        before = state(t)
+        with monkeypatch.context() as m:
+            m.setattr(dl, "json", _FailingJson(boundary))
+            with pytest.raises(OSError, match="injected"):
+                dl._commit_with_retry(t, 1, overwrite())
+        assert dl._list_versions(t) == [0], boundary
+        assert os.listdir(log) == [os.path.basename(dl._log_path(t, 0))]
+        assert state(t) == before, boundary
+        assert dl._commit_with_retry(t, 1, overwrite()) == 1, boundary
+        assert sorted(dl._snapshot_state(t).adds) == ["c.parquet"]

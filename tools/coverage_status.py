@@ -10,8 +10,8 @@ from ``all_queries()``, and ``tests/test_artifact_freshness.py`` fails
 when the committed block disagrees with the live registry or when a
 starred ``*rows-only*`` marker appears outside it.
 
-Run standalone or via ``tools/round_close.py`` (which runs it before
-pytest so the guard checks what was just written)::
+Run it after any change to the registry, before pytest, so the guard
+checks what was just written::
 
     python tools/coverage_status.py          # rewrite the block in place
     python tools/coverage_status.py --check  # exit 1 if stale

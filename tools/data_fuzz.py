@@ -1,7 +1,7 @@
 """Mutated-data differential fuzz → FUZZ_PARITY.json (round 16).
 
-Every committed parity artifact (3-SF matrix, sf1 scale point, sf10
-decade probe) runs the SAME synthetic data distribution — clean,
+Every committed parity artifact (3-SF matrix, sf1 scale point) runs
+the SAME synthetic data distribution — clean,
 null-free, ASCII, unique-keyed.  Bugs conditional on the DATA rather
 than the SCALE (null semantics in a Python lane, unicode handling in a
 shingler, tie-breaking under content duplicates, small-N edge cases in
