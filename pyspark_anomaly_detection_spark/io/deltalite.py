@@ -60,6 +60,7 @@ import json
 import os
 import time
 import uuid
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -561,63 +562,7 @@ def write_delta(
             )
         mode = "overwrite"
 
-    commit_dir = f"part-{version:05d}-{uuid.uuid4().hex[:12]}"
-    data_dir = os.path.join(table_path, commit_dir)
-    writer = df.write.mode("error")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(data_dir)
-
-    adds = []
-    for root, _dirs, files in os.walk(data_dir):
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            rel = os.path.relpath(full, table_path)
-            pvals = {}
-            for seg in os.path.relpath(root, data_dir).split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    pvals[k] = v
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(full),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
-    adds.sort(key=lambda a: a["add"]["path"])
-
-    # CHECK constraints (Delta writer-v3) + generated-column equalities
-    # (writer-v4): one columnar scan of the JUST-WRITTEN staging files —
-    # never a recompute of df's lineage — aborting before the commit, so
-    # a violation leaves only invisible staging files (the log is the
-    # source of truth; VACUUM sweeps them).
-    if adds:
-        from pyspark_anomaly_detection_spark.io.deltalite_constraints import (
-            check_constraints_of,
-            enforce_check_constraints,
-        )
-        from pyspark_anomaly_detection_spark.io.deltalite_generated import (
-            generation_constraints,
-        )
-
-        cons: dict[str, str] = {}
-        if snap is not None:
-            cons.update(check_constraints_of(snap.meta))
-            cons.update(generation_constraints(snap.schema_json))
-        elif created_schema_json is not None:
-            # creation with provided generated-column values: checked too
-            cons.update(generation_constraints(created_schema_json))
-        if cons:
-            enforce_check_constraints(
-                spark.read.parquet(data_dir), cons, "write_delta"
-            )
+    adds = _stage(table_path, _commit_dir(version), df, part_cols=part_cols)
 
     def _meta(schema_string: str) -> dict[str, Any]:
         # configuration survives schema evolution (constraints, table
@@ -680,6 +625,14 @@ def write_delta(
             }
         )
         actions.append(_meta(created_schema_json or df.schema.json()))
+    # CHECK constraints (Delta writer-v3) + generated-column equalities
+    # (writer-v4) are checked on the staged files, never on df's lineage;
+    # a table being created is checked against its own first metaData
+    staged_for = snap
+    if staged_for is None:
+        staged_for = _Snapshot(-1)
+        staged_for.apply(actions[-1])
+    _enforce_staged(spark, table_path, adds, staged_for, "write_delta")
     if evolved_schema is not None:
         actions.append(_meta(evolved_schema))
     if mode == "overwrite" and version > 0:
@@ -1039,21 +992,33 @@ def create_checkpoint(table_path: str, version: int | None = None) -> int:
     table = pa.Table.from_pylist(
         [{f: row.get(f) for f in fields} for row in rows], schema=schema
     )
-    final = _checkpoint_path(table_path, version)
-    tmp = final + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)
-    pointer = os.path.join(table_path, _LOG_DIR, "_last_checkpoint")
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(
-            json.dumps(
-                {"version": version, "size": len(rows)},
-                separators=(",", ":"),
-            )
-        )
-    os.replace(tmp, pointer)
+    _replace_atomically(
+        _checkpoint_path(table_path, version),
+        lambda tmp: pq.write_table(table, tmp),
+    )
+    pointer = {"version": version, "size": len(rows)}
+
+    def write_pointer(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            f.write(json.dumps(pointer, separators=(",", ":")))
+
+    _replace_atomically(
+        os.path.join(table_path, _LOG_DIR, "_last_checkpoint"), write_pointer
+    )
     return version
+
+
+def _replace_atomically(final: str, write) -> None:
+    """``write(tmp)`` then rename ``tmp`` over ``final``.  The temp name
+    is unique per call (like the commit path's), so two writers of the
+    same file never share, rename or half-read each other's temp."""
+    tmp = f"{final}.{uuid.uuid4().hex}.tmp"
+    try:
+        write(tmp)
+        os.replace(tmp, final)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
 
 
 def expire_log(table_path: str) -> dict[str, int]:
@@ -1089,105 +1054,271 @@ def _active_files(table_path: str, version: int | None = None) -> set[str]:
     return _replay(table_path, version)[0]
 
 
+# ---------------------------------------------------------------------------
+# The data-file layer.  Every reader and writer of table data files goes
+# through these helpers: one schema (:func:`_data_schema`), one reader
+# (:func:`_read_files`, with :func:`_read_adds` adding partition values),
+# one stager (:func:`_stage`), one partition-group dispatcher
+# (:func:`_map_groups`) and one constraint scan (:func:`_enforce_staged`).
+#
+# Data files hold the table's DATA columns only: partition values live in
+# ``add.partitionValues``.  On a column-mapped table the files (and the
+# partitionValues keys) carry PHYSICAL names; frames above this layer are
+# always in LOGICAL names.
+# ---------------------------------------------------------------------------
+
+
+def _commit_dir(version: int) -> str:
+    """Fresh per-commit staging directory name (relative to the table);
+    files staged there are invisible until the commit JSON names them."""
+    return f"part-{version:05d}-{uuid.uuid4().hex[:12]}"
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _data_schema(snap: "_Snapshot", physical: bool = True):
+    """The table's data columns without its partition columns, under
+    physical names when the table is column-mapped (``physical=False``
+    keeps the logical names)."""
+    from pyspark.sql.types import StructField, StructType
+
+    schema = StructType.fromJson(json.loads(snap.schema_json))
+    fields = [f for f in schema.fields if f.name not in snap.part_cols]
+    mapping = _column_mapping_of(snap.schema_json) if physical else {}
+    if mapping:
+        # renamed fields drop the logical field's metadata
+        fields = [
+            StructField(mapping.get(f.name, f.name), f.dataType, f.nullable)
+            for f in fields
+        ]
+    return StructType(fields)
+
+
+def _to_logical(df: DataFrame, snap: "_Snapshot") -> DataFrame:
+    """Rename a frame's physical column names to logical ones; columns
+    the mapping does not know (file or position columns) keep theirs."""
+    mapping = _column_mapping_of(snap.schema_json)
+    if not mapping:
+        return df
+    logical = {p: n for n, p in mapping.items()}
+    return df.toDF(*[logical.get(c, c) for c in df.columns])
+
+
+def _read_files(
+    spark: SparkSession,
+    table_path: str,
+    adds: dict[str, dict[str, Any]],
+    snap: "_Snapshot",
+    file_col: str | None = None,
+) -> DataFrame:
+    """The data columns of the given adds, in logical names, always read
+    with :func:`_data_schema` (no schema inference).  DV-carrying adds
+    read through ``read_files_minus_dv``, so deleted rows never show.
+    ``file_col`` appends each row's source file (a URI for plain files,
+    an absolute path for DV files)."""
+    schema = _data_schema(snap)
+    plain = [rel for rel, a in adds.items() if not a.get("deletionVector")]
+    dv_adds = {
+        rel: a for rel, a in adds.items() if a.get("deletionVector")
+    }
+    pieces = []
+    if plain:
+        df = spark.read.schema(schema).parquet(
+            *[os.path.join(table_path, rel) for rel in plain]
+        )
+        if file_col:
+            df = df.withColumn(file_col, F.input_file_name())
+        pieces.append(df)
+    if dv_adds:
+        from pyspark_anomaly_detection_spark.io.deltalite_dv import (
+            read_files_minus_dv,
+        )
+
+        pieces.append(
+            read_files_minus_dv(
+                spark, table_path, dv_adds, schema, file_col=file_col
+            )
+        )
+    return _to_logical(_union(pieces), snap)
+
+
+def _partition_groups(
+    adds: dict[str, dict[str, Any]],
+) -> list[tuple[dict[str, Any], dict[str, dict[str, Any]]]]:
+    """``[(partitionValues, adds of that partition)]`` in a stable order
+    (one group, ``{}``, on an unpartitioned table); adds keep their
+    order within a group."""
+    groups: dict[tuple, dict[str, dict[str, Any]]] = {}
+    for rel, a in adds.items():
+        pv = a.get("partitionValues") or {}
+        groups.setdefault(tuple(sorted(pv.items())), {})[rel] = a
+    return [
+        (dict(key), group)
+        for key, group in sorted(
+            groups.items(), key=lambda kv: tuple(map(str, kv[0]))
+        )
+    ]
+
+
+def _with_partitions(
+    df: DataFrame, snap: "_Snapshot", pv: dict[str, Any]
+) -> DataFrame:
+    """A logical data frame of one partition group with the group's
+    partition values added as typed columns, in schema order; trailing
+    columns outside the schema (``_change_type``) are kept."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(snap.schema_json))
+    mapping = _column_mapping_of(snap.schema_json)
+    for col in snap.part_cols:
+        # a mapped table's partitionValues are keyed by physical names
+        value = pv.get(mapping.get(col, col))
+        df = df.withColumn(col, F.lit(value).cast(schema[col].dataType))
+    names = schema.fieldNames()
+    return df.select(*names, *[c for c in df.columns if c not in names])
+
+
 def _read_adds(
     spark: SparkSession,
     table_path: str,
     adds: dict[str, dict[str, Any]],
-    schema_json: str | None,
-    part_cols: list[str],
+    snap: "_Snapshot",
 ) -> DataFrame:
-    """Read the given active adds with the committed schema, injecting
-    partition values (the data files of a partitioned table do NOT
-    contain the partition columns — readers reconstruct them from
-    ``add.partitionValues``, exactly as Delta does).  One read per
-    distinct partition tuple, unioned — bounded by partition count.
+    """Full logical rows of the given adds: :func:`_read_files` per
+    partition group with the group's values reinjected (the data files
+    of a partitioned table do NOT contain the partition columns —
+    readers reconstruct them from ``add.partitionValues``, exactly as
+    Delta does).  Column mapping, partitions and deletion vectors all
+    compose here."""
+    from pyspark.sql.types import StructType
 
-    ONE generic path (round 14): column mapping, hive partitioning and
-    deletion vectors all COMPOSE.  Files are read in PHYSICAL space
-    (data columns only — partition columns never live in files), DV
-    bitmaps subtract per group, names rename physical → logical, and
-    the group's partition values reinject.  Per the protocol's column-
-    mapping rule, a mapped table's ``add.partitionValues`` are keyed by
-    PHYSICAL partition-column names ('Track partition values ... with
-    the physical name of the column in the transaction log');
-    ``metaData.partitionColumns`` stays logical."""
-    from pyspark.sql.types import StructField, StructType
-
-    schema = (
-        StructType.fromJson(json.loads(schema_json)) if schema_json else None
-    )
     if not adds:
-        return spark.createDataFrame([], schema)
-    dv_adds = {r: a for r, a in adds.items() if a.get("deletionVector")}
-    mapping = _column_mapping_of(schema_json)
-    data_fields = (
-        [f for f in schema.fields if f.name not in part_cols]
-        if schema is not None
-        else None
-    )
-    read_schema = None
-    if data_fields is not None:
-        read_schema = StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in data_fields
-            ]
-            if mapping
-            else data_fields
+        return spark.createDataFrame(
+            [], StructType.fromJson(json.loads(snap.schema_json))
         )
-    logical_data = (
-        [f.name for f in data_fields] if data_fields is not None else None
+    return _union(
+        [
+            _with_partitions(
+                _read_files(spark, table_path, group, snap), snap, pv
+            )
+            for pv, group in _partition_groups(dict(sorted(adds.items())))
+        ]
     )
 
-    by_part: dict[tuple, list[str]] = {}
-    for rel in sorted(adds):
-        pv = adds[rel].get("partitionValues", {})
-        key = tuple(pv.get(mapping.get(c, c)) for c in part_cols)
-        by_part.setdefault(key, []).append(rel)
 
-    parts = []
-    for key, rels in sorted(
-        by_part.items(), key=lambda kv: tuple(map(str, kv[0]))
-    ):
-        plain = [r for r in rels if r not in dv_adds]
-        pieces = []
-        if plain:
-            reader = spark.read
-            if read_schema is not None:
-                reader = reader.schema(read_schema)
-            pieces.append(
-                reader.parquet(
-                    *[os.path.join(table_path, rel) for rel in plain]
-                )
-            )
-        group_dv = {r: adds[r] for r in rels if r in dv_adds}
-        if group_dv:
-            from pyspark_anomaly_detection_spark.io.deltalite_dv import (
-                read_files_minus_dv,
-            )
+def _stage(
+    table_path: str,
+    rel_dir: str,
+    df: DataFrame,
+    *,
+    mapping: dict[str, str] | None = None,
+    part_cols: list[str] | tuple = (),
+    pv: dict[str, Any] | None = None,
+    data_change: bool = True,
+    kind: str = "add",
+    write=None,
+    stats_cols: list[str] | None = None,
+) -> list[dict[str, Any]]:
+    """Write one logical-name frame under ``<table>/<rel_dir>`` and
+    return its ``add`` (or ``cdc``) actions, sorted by path.
 
-            pieces.append(
-                read_files_minus_dv(
-                    spark, table_path, group_dv, read_schema
+    ``mapping`` (logical → physical) renames columns just before the
+    write.  ``part_cols`` writes hive-partitioned and takes each file's
+    partitionValues from its directory; otherwise every file is stamped
+    with ``pv`` (a rewritten partition group's values).  ``write(df,
+    path)`` replaces the plain parquet write (OPTIMIZE's bin-packing and
+    Z-order layouts); ``stats_cols`` adds per-file min/max ``stats``."""
+    from urllib.parse import unquote
+
+    out_dir = os.path.join(table_path, rel_dir)
+    mapping = mapping or {}
+    if mapping:
+        df = df.toDF(*[mapping.get(c, c) for c in df.columns])
+    if write is not None:
+        write(df, out_dir)
+    else:
+        writer = df.write.mode("error")
+        if part_cols:
+            writer = writer.partitionBy(*[mapping.get(c, c) for c in part_cols])
+        writer.parquet(out_dir)
+    actions = []
+    for root, _dirs, files in os.walk(out_dir):
+        pvals = dict(pv or {})
+        for seg in os.path.relpath(root, out_dir).split(os.sep):
+            if "=" in seg:
+                # hive directory names escape special characters and
+                # spell NULL as __HIVE_DEFAULT_PARTITION__
+                k, _, v = seg.partition("=")
+                pvals[k] = (
+                    None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
                 )
-            )
-        df = pieces[0]
-        for p in pieces[1:]:
-            df = df.unionByName(p)
-        if mapping and logical_data is not None:
-            df = df.toDF(*logical_data)
-        for col, val in zip(part_cols, key):
-            ftype = schema[col].dataType
-            df = df.withColumn(col, F.lit(val).cast(ftype))
-        if schema is not None:
-            df = df.select(*[f.name for f in schema.fields])
-        parts.append(df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        for name in sorted(files):
+            if not name.endswith(".parquet"):
+                continue
+            full = os.path.join(root, name)
+            entry: dict[str, Any] = {
+                "path": os.path.relpath(full, table_path),
+                "partitionValues": pvals,
+                "size": os.path.getsize(full),
+            }
+            if kind == "add":
+                entry["modificationTime"] = 0
+            entry["dataChange"] = data_change
+            if stats_cols:
+                entry["stats"] = json.dumps(
+                    _file_stats(full, stats_cols), separators=(",", ":")
+                )
+            actions.append({kind: entry})
+    return sorted(actions, key=lambda a: a[kind]["path"])
+
+
+def _map_groups(fn, groups: list) -> list:
+    """``[fn(i, group) for i, group in enumerate(groups)]``, in order.
+    Partition groups rewrite to disjoint directories with no shared
+    state, so with more than one group they run on up to 4 driver
+    threads: group k+1's tasks back-fill executors while group k's tail
+    finishes.  Any failure propagates before the caller commits."""
+    if len(groups) <= 1:
+        return [fn(i, g) for i, g in enumerate(groups)]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(4, len(groups))) as pool:
+        return list(pool.map(lambda ig: fn(*ig), enumerate(groups)))
+
+
+def _enforce_staged(
+    spark: SparkSession,
+    table_path: str,
+    adds: list[dict[str, Any]],
+    snap: "_Snapshot",
+    what: str,
+) -> None:
+    """CHECK constraints (Delta writer-v3) and generated-column
+    equalities (writer-v4) of ``snap``, checked in one columnar scan of
+    the just-staged ``add`` actions before they are committed — never a
+    recompute of the written frame's lineage — so a violation leaves
+    only invisible staging files (the log is the source of truth; VACUUM
+    sweeps them).  Constraints are stored in logical names, which the
+    scan reads."""
+    from pyspark_anomaly_detection_spark.io.deltalite_constraints import (
+        check_constraints_of,
+        enforce_check_constraints,
+    )
+    from pyspark_anomaly_detection_spark.io.deltalite_generated import (
+        generation_constraints,
+    )
+
+    cons = {
+        **check_constraints_of(snap.meta),
+        **generation_constraints(snap.schema_json),
+    }
+    if adds and cons:
+        staged = {a["add"]["path"]: a["add"] for a in adds}
+        enforce_check_constraints(
+            _read_adds(spark, table_path, staged, snap), cons, what
+        )
 
 
 def read_delta(
@@ -1212,16 +1343,17 @@ def read_delta(
                 "exclusive (Delta's rule)"
             )
         version = version_at_timestamp(table_path, timestamp_as_of)
-    adds, schema_json, part_cols = _replay_adds(table_path, version)
+    snap = _snapshot_state(table_path, version)
+    adds = snap.adds
     if partition_filter:
-        unknown = set(partition_filter) - set(part_cols)
+        unknown = set(partition_filter) - set(snap.part_cols)
         if unknown:
             raise ValueError(
                 f"partition_filter on non-partition columns: {sorted(unknown)}"
             )
         # callers filter by LOGICAL names; a mapped table's
-        # partitionValues are keyed physically (round 14)
-        mapping = _column_mapping_of(schema_json)
+        # partitionValues are keyed physically
+        mapping = _column_mapping_of(snap.schema_json)
         adds = {
             rel: a
             for rel, a in adds.items()
@@ -1230,7 +1362,7 @@ def read_delta(
                 for c, v in partition_filter.items()
             )
         }
-    return _read_adds(spark, table_path, adds, schema_json, part_cols)
+    return _read_adds(spark, table_path, adds, snap)
 
 
 def delta_history(table_path: str) -> list[dict[str, Any]]:
@@ -1438,17 +1570,48 @@ def optimize_delta(
     dimension immediately — clustering and skipping stats land
     atomically, exactly like the real OPTIMIZE ZORDER.
 
-    PARTITIONED tables compact PER PARTITION (round 14 — the flat
-    rewrite committed ``partitionValues: {}``, silently NULLing the
-    partition columns on read): each partition group's files rewrite
-    into their own ``ceil(group_bytes/target)`` files re-stamped with
-    the group's partition tuple, exactly real OPTIMIZE's
+    PARTITIONED tables compact PER PARTITION: each partition group's
+    files rewrite into their own ``ceil(group_bytes/target)`` files
+    stamped with the group's partition tuple, exactly real OPTIMIZE's
     partition-local scope (and z-ordering clusters WITHIN partitions).
-    DV-carrying files are read through their bitmaps (the compaction
-    doubles as REORG PURGE); column-mapped files rewrite
-    physical-to-physical with stats keyed by physical names."""
-    from pyspark.sql.types import StructField, StructType
+    DV-carrying files are read through their bitmaps; column-mapped
+    files rewrite physical-to-physical with stats keyed by physical
+    names."""
+    snap = _snapshot_state(table_path)
+    if not snap.adds:
+        return {"version": snap.version, "files_before": 0, "files_after": 0}
+    for c in zorder_by or ():
+        if c in snap.part_cols:
+            raise ValueError(
+                f"deltalite OPTIMIZE: cannot ZORDER BY partition "
+                f"column '{c}' — it lives in the log, not the files"
+            )
+    version, n_added = _compact(
+        spark, table_path, snap, snap.adds, "OPTIMIZE", "deltalite",
+        target_file_bytes, zorder_by,
+    )
+    return {
+        "version": version,
+        "files_before": len(snap.adds),
+        "files_after": n_added,
+    }
 
+
+def _compact(
+    spark: SparkSession,
+    table_path: str,
+    snap: _Snapshot,
+    adds: dict[str, dict[str, Any]],
+    operation: str,
+    engine: str,
+    target_file_bytes: int | None = None,
+    zorder_by: tuple[str, str] | None = None,
+) -> tuple[int, int]:
+    """Rewrite ``adds`` per partition group into ``ceil(group_bytes /
+    target)`` files (Z-ordered on ``zorder_by`` when given) and commit
+    remove + add with ``dataChange: false``: the layout changes, the
+    rows do not.  OPTIMIZE runs it over every active file, REORG PURGE
+    over the DV-carrying ones.  Returns (version, files added)."""
     from pyspark_anomaly_detection_spark.io.maintenance import (
         TARGET_FILE_BYTES,
         plan_file_count,
@@ -1456,152 +1619,49 @@ def optimize_delta(
     )
 
     target = target_file_bytes or TARGET_FILE_BYTES
-    snap = _snapshot_state(table_path)
     mapping = _column_mapping_of(snap.schema_json)
-    current = snap.version
-    active = snap.adds
-    if not active:
-        return {"version": current, "files_before": 0, "files_after": 0}
-    if zorder_by:
-        for c in zorder_by:
-            if c in snap.part_cols:
-                raise ValueError(
-                    f"deltalite OPTIMIZE: cannot ZORDER BY partition "
-                    f"column '{c}' — it lives in the log, not the files"
-                )
-    schema = (
-        StructType.fromJson(json.loads(snap.schema_json))
-        if snap.schema_json
-        else None
-    )
-    data_schema = (
-        StructType(
-            [f for f in schema.fields if f.name not in snap.part_cols]
+    zcols = [mapping.get(c, c) for c in zorder_by] if zorder_by else None
+    version = snap.version + 1
+    commit_dir = _commit_dir(version)
+
+    def rewrite(i: int, group) -> list[dict[str, Any]]:
+        pv, group_adds = group
+        n_files = plan_file_count(
+            sum(
+                a.get("size")
+                or os.path.getsize(os.path.join(table_path, rel))
+                for rel, a in group_adds.items()
+            ),
+            target,
         )
-        if schema is not None
-        else None
-    )
-    if mapping and data_schema is not None:
-        data_schema = StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in data_schema.fields
-            ]
+
+        def write(df: DataFrame, path: str) -> None:
+            if zcols:
+                write_zordered(df, path, zcols[0], zcols[1], n_files)
+            else:
+                df.repartition(n_files).write.mode("error").parquet(path)
+
+        return _stage(
+            table_path,
+            f"{commit_dir}/g{i}" if snap.part_cols else commit_dir,
+            _read_files(spark, table_path, group_adds, snap),
+            mapping=mapping,
+            pv=pv,
+            data_change=False,
+            write=write,
+            stats_cols=zcols,
         )
-    zcols = (
-        tuple(mapping.get(c, c) for c in zorder_by) if mapping and zorder_by
-        else zorder_by
-    )
 
-    groups: dict[tuple, list[str]] = {}
-    for rel, a in active.items():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(tuple(sorted(pv.items())), []).append(rel)
-
-    version = current + 1
-    commit_dir = f"part-{version:05d}-{uuid.uuid4().hex[:12]}"
-    data_dir = os.path.join(table_path, commit_dir)
-    actions: list[dict[str, Any]] = []
-    for rel in sorted(active):
-        actions.append({"remove": {"path": rel, "dataChange": False}})
-    def _optimize_group(i: int, pv_items, rels) -> list[dict[str, Any]]:
-        dv_rels = {
-            r: active[r] for r in rels if active[r].get("deletionVector")
-        }
-        plain = [r for r in rels if r not in dv_rels]
-        pieces = []
-        if plain:
-            reader = spark.read
-            if data_schema is not None:
-                reader = reader.schema(data_schema)
-            pieces.append(
-                reader.parquet(
-                    *[os.path.join(table_path, r) for r in plain]
-                )
-            )
-        if dv_rels:
-            from pyspark_anomaly_detection_spark.io.deltalite_dv import (
-                read_files_minus_dv,
-            )
-
-            pieces.append(
-                read_files_minus_dv(spark, table_path, dv_rels, data_schema)
-            )
-        df = pieces[0]
-        for p in pieces[1:]:
-            df = df.unionByName(p)
-        group_bytes = sum(
-            active[r].get("size")
-            or os.path.getsize(os.path.join(table_path, r))
-            for r in rels
-        )
-        n_files = plan_file_count(group_bytes, target)
-        subdir = f"g{i}" if snap.part_cols else ""
-        out_dir = os.path.join(data_dir, subdir) if subdir else data_dir
-        if zcols:
-            write_zordered(df, out_dir, zcols[0], zcols[1], n_files)
-        else:
-            df.repartition(n_files).write.mode("error").parquet(out_dir)
-        adds: list[dict[str, Any]] = []
-        for name in sorted(os.listdir(out_dir)):
-            if name.endswith(".parquet"):
-                rel = (
-                    f"{commit_dir}/{subdir}/{name}"
-                    if subdir
-                    else f"{commit_dir}/{name}"
-                )
-                add = {
-                    "path": rel,
-                    "partitionValues": dict(pv_items),
-                    "size": os.path.getsize(os.path.join(out_dir, name)),
-                    "modificationTime": 0,
-                    "dataChange": False,
-                }
-                if zcols:
-                    add["stats"] = json.dumps(
-                        _file_stats(
-                            os.path.join(out_dir, name), list(zcols)
-                        ),
-                        separators=(",", ":"),
-                    )
-                adds.append({"add": add})
-        return adds
-
-    # independent per-partition compaction jobs — overlapped via a small
-    # driver thread pool (guide §2.6), action order preserved by map()
-    ordered_groups = sorted(groups.items())
-    if len(ordered_groups) <= 1:
-        group_adds = [
-            _optimize_group(i, pv, rels)
-            for i, (pv, rels) in enumerate(ordered_groups)
-        ]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(4, len(ordered_groups))
-        ) as pool:
-            group_adds = list(
-                pool.map(
-                    lambda t: _optimize_group(t[0], *t[1]),
-                    enumerate(ordered_groups),
-                )
-            )
-    for adds in group_adds:
-        actions.extend(adds)
+    actions: list[dict[str, Any]] = [
+        {"remove": {"path": rel, "dataChange": False}} for rel in sorted(adds)
+    ]
+    for staged in _map_groups(rewrite, _partition_groups(adds)):
+        actions.extend(staged)
+    n_added = len(actions) - len(adds)
     actions.append(
-        {"commitInfo": {"operation": "OPTIMIZE", "engineInfo": "deltalite"}}
+        {"commitInfo": {"operation": operation, "engineInfo": engine}}
     )
-    version = _commit_with_retry(table_path, version, actions)
-    return {
-        "version": version,
-        "files_before": len(active),
-        "files_after": sum(
-            1 for a in actions if "add" in a
-        ),
-    }
+    return _commit_with_retry(table_path, version, actions), n_added
 
 
 def _file_stats(path: str, cols: list[str]) -> dict[str, Any]:
@@ -1708,16 +1768,11 @@ def read_delta_pruned(
                 continue  # file's envelope misses the predicate: skip
         keep.append(rel)
     meta = {"files_total": len(latest_add), "files_read": len(keep)}
-    # the kept files read through the snapshot reader's one generic path:
-    # column mapping, partition-value reinjection and DV subtraction
-    # (round 14: stats coexist with DVs, so a pruned read must not
-    # resurrect rows) all compose there
+    # the kept files read through the snapshot reader: column mapping,
+    # partition-value reinjection and DV subtraction (stats coexist with
+    # DVs, so a pruned read must not resurrect rows) all compose there
     df = _read_adds(
-        spark,
-        table_path,
-        {rel: latest_add[rel] for rel in keep},
-        snap.schema_json,
-        snap.part_cols,
+        spark, table_path, {rel: latest_add[rel] for rel in keep}, snap
     )
     return df.filter((F.col(col) >= lo) & (F.col(col) <= hi)), meta
 
@@ -1907,56 +1962,31 @@ def _read_cdc_files(
     spark: SparkSession,
     table_path: str,
     cdc_actions: list[dict[str, Any]],
-    schema_json: str | None,
-    part_cols: list[str],
+    snap: _Snapshot,
 ) -> DataFrame:
-    """Read a commit's ``_change_data`` files (``cdc`` actions): data
-    columns + the physical ``_change_type`` column, grouped by partition
-    tuple with the values reinjected — the same translation as
-    ``_read_adds`` (physical names on mapped tables; ``_change_type``
-    itself is never mapped)."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    """Read a commit's ``_change_data`` files (``cdc`` actions): the
+    data columns plus ``_change_type`` (never mapped), per partition
+    group with the group's values reinjected."""
+    from pyspark.sql.types import StringType
 
-    base = StructType.fromJson(json.loads(schema_json))
-    mapping = _column_mapping_of(schema_json)
-    data_fields = [f for f in base.fields if f.name not in part_cols]
-    read_schema = StructType(
-        (
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in data_fields
-            ]
-            if mapping
-            else list(data_fields)
-        )
-        + [StructField("_change_type", StringType())]
-    )
-    logical = [f.name for f in data_fields] + ["_change_type"]
-    by_pv: dict[tuple, list[str]] = {}
-    for c in cdc_actions:
-        pvk = tuple(sorted((c.get("partitionValues") or {}).items()))
-        by_pv.setdefault(pvk, []).append(c["path"])
-    out = None
-    order = [f.name for f in base.fields] + ["_change_type"]
-    for pv_items, rels in sorted(by_pv.items()):
-        df = spark.read.schema(read_schema).parquet(
-            *[os.path.join(table_path, rel) for rel in sorted(rels)]
-        )
-        if mapping:
-            df = df.toDF(*logical)
-        pv = dict(pv_items)
-        for col in part_cols:
-            df = df.withColumn(
-                col,
-                F.lit(pv.get(mapping.get(col, col))).cast(
-                    base[col].dataType
+    schema = _data_schema(snap).add("_change_type", StringType())
+    return _union(
+        [
+            _with_partitions(
+                _to_logical(
+                    spark.read.schema(schema).parquet(
+                        *[os.path.join(table_path, r) for r in sorted(group)]
+                    ),
+                    snap,
                 ),
+                snap,
+                pv,
             )
-        df = df.select(*order)
-        out = df if out is None else out.unionByName(df)
-    return out
+            for pv, group in _partition_groups(
+                {c["path"]: c for c in cdc_actions}
+            )
+        ]
+    )
 
 
 def read_delta_changes(
@@ -1997,12 +2027,9 @@ def read_delta_changes(
     if to_version is None:
         to_version = latest
     tip = _snapshot_state(table_path, latest)
-    # column-mapped tables (r11): every per-file read below goes through
-    # _read_adds, which already translates physical → logical; the whole
-    # range is framed in the TIP's logical names (physical names are
-    # stable across renames, so pre-rename commits read correctly)
-    schema_json = tip.schema_json
-    part_cols = tip.part_cols
+    # the whole range is framed in the TIP's logical names (physical
+    # names are stable across renames, so pre-rename commits read
+    # correctly on column-mapped tables)
     # last-known add per path (for partition values of removed files):
     # everything active at from_version, then maintained over the range.
     # from_version < 0 means "full history" — an empty base, streaming
@@ -2015,8 +2042,6 @@ def read_delta_changes(
     else:
         base = _snapshot_state(table_path, from_version)
         known_add = dict(base.adds)
-    from pyspark.sql.types import StructType
-
     pieces: list[DataFrame] = []
     for v in range(from_version + 1, to_version + 1):
         if v not in versions:
@@ -2035,9 +2060,7 @@ def read_delta_changes(
         cdc_actions = [a["cdc"] for a in actions if "cdc" in a]
         if cdc_actions:
             pieces.append(
-                _read_cdc_files(
-                    spark, table_path, cdc_actions, schema_json, part_cols
-                ).withColumn("_commit_version", F.lit(v).cast("int"))
+                _read_cdc_files(spark, table_path, cdc_actions, tip).withColumn("_commit_version", F.lit(v).cast("int"))
             )
             for action in actions:
                 if "add" in action:
@@ -2063,77 +2086,20 @@ def read_delta_changes(
         ]
         dv_paths = {p for p, _, _ in dv_pairs}
         if dv_pairs:
-            from pyspark.sql.types import StructField
-
-            # mapped tables: the diff reads files in PHYSICAL space and
-            # renames to the tip's logical names afterward (r11)
-            mapping = _column_mapping_of(schema_json)
-            base = (
-                StructType.fromJson(json.loads(schema_json))
-                if schema_json
-                else None
-            )
-            read_schema = base
-            if mapping and base is not None:
-                read_schema = StructType(
-                    [
-                        StructField(
-                            mapping.get(f.name, f.name), f.dataType, f.nullable
-                        )
-                        for f in base.fields
-                    ]
+            # the diff reads data files per partition group in physical
+            # space, then renames to the tip's logical names and
+            # reinjects the group's partition values
+            old_dv = {p: o for p, _, o in dv_pairs}
+            for pv, group in _partition_groups({p: a for p, a, _ in dv_pairs}):
+                diff = _dv_diff_rows(
+                    spark,
+                    table_path,
+                    [(p, a, old_dv[p]) for p, a in group.items()],
+                    _data_schema(tip),
                 )
-            # partitioned tables (round 13): data files carry no
-            # partition columns — diff per partition GROUP on the data
-            # schema, then reinject the group's values so the change
-            # rows carry real (not NULL) partition columns.  Mapped
-            # tables (round 14) diff in PHYSICAL space and look pv up
-            # under physical keys.
-            if part_cols and base is not None:
-                data_fields = [
-                    f for f in base.fields if f.name not in part_cols
-                ]
-                data_schema = StructType(
-                    [
-                        StructField(
-                            mapping.get(f.name, f.name),
-                            f.dataType,
-                            f.nullable,
-                        )
-                        for f in data_fields
-                    ]
-                    if mapping
-                    else data_fields
-                )
-                by_pv: dict[tuple, list] = {}
-                for p, a, o in dv_pairs:
-                    pvk = tuple(
-                        sorted((a.get("partitionValues") or {}).items())
-                    )
-                    by_pv.setdefault(pvk, []).append((p, a, o))
-                for pv_items, grp in sorted(by_pv.items()):
-                    diff = _dv_diff_rows(spark, table_path, grp, data_schema)
-                    if mapping:
-                        diff = diff.toDF(*[f.name for f in data_fields])
-                    pv = dict(pv_items)
-                    for col in part_cols:
-                        diff = diff.withColumn(
-                            col,
-                            F.lit(pv.get(mapping.get(col, col))).cast(
-                                base[col].dataType
-                            ),
-                        )
-                    pieces.append(
-                        diff.select(*[f.name for f in base.fields])
-                        .withColumn("_change_type", F.lit("delete"))
-                        .withColumn("_commit_version", F.lit(v).cast("int"))
-                    )
-            else:
-                diff = _dv_diff_rows(spark, table_path, dv_pairs, read_schema)
-                if mapping and base is not None:
-                    diff = diff.toDF(*[f.name for f in base.fields])
                 pieces.append(
-                    diff.withColumn("_change_type", F.lit("delete"))
+                    _with_partitions(_to_logical(diff, tip), tip, pv)
+                    .withColumn("_change_type", F.lit("delete"))
                     .withColumn("_commit_version", F.lit(v).cast("int"))
                 )
         for action in actions:
@@ -2143,10 +2109,7 @@ def read_delta_changes(
                 if add["path"] in dv_paths:
                     continue  # row-level delta already emitted above
                 if add.get("dataChange", True):
-                    df = _read_adds(
-                        spark, table_path, {add["path"]: add},
-                        schema_json, part_cols,
-                    )
+                    df = _read_adds(spark, table_path, {add["path"]: add}, tip)
                     pieces.append(
                         df.withColumn("_change_type", F.lit("insert"))
                         .withColumn("_commit_version", F.lit(v).cast("int"))
@@ -2156,26 +2119,17 @@ def read_delta_changes(
                 if not rm.get("dataChange", True) or rm["path"] in dv_paths:
                     continue
                 add = known_add.get(rm["path"], {"path": rm["path"]})
-                df = _read_adds(
-                    spark, table_path, {rm["path"]: add},
-                    schema_json, part_cols,
-                )
+                df = _read_adds(spark, table_path, {rm["path"]: add}, tip)
                 pieces.append(
                     df.withColumn("_change_type", F.lit("delete"))
                     .withColumn("_commit_version", F.lit(v).cast("int"))
                 )
     if not pieces:
-        from pyspark.sql.types import StructType
-
-        base = StructType.fromJson(json.loads(schema_json))
-        empty = spark.createDataFrame([], base)
+        empty = _read_adds(spark, table_path, {}, tip)
         return empty.withColumn("_change_type", F.lit("")).withColumn(
             "_commit_version", F.lit(0).cast("int")
         ).limit(0)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union(pieces)
 
 
 @register(

@@ -113,7 +113,6 @@ def write_delta_mapped(
     version = (versions[-1] + 1) if versions else 0
     actions: list[dict[str, Any]] = []
     snap = None
-    cons: dict[str, str] = {}
     if version == 0:
         part_cols = list(partition_by or [])
         for c in part_cols:
@@ -170,75 +169,23 @@ def write_delta_mapped(
                 actions.append(
                     {"remove": {"path": path, "dataChange": True}}
                 )
-        from pyspark_anomaly_detection_spark.io.deltalite_constraints import (
-            check_constraints_of,
-        )
 
-        cons = check_constraints_of(snap.meta)
-
-    commit_dir = f"part-{version:05d}-{uuid.uuid4().hex[:12]}"
-    data_dir = os.path.join(table_path, commit_dir)
-    writer = df.toDF(
-        *[mapping[f.name] for f in df.schema.fields]
-    ).write.mode("error")
-    phys_parts = [mapping[c] for c in part_cols]
-    if phys_parts:
-        writer = writer.partitionBy(*phys_parts)
-    writer.parquet(data_dir)
-
+    adds = deltalite._stage(
+        table_path,
+        deltalite._commit_dir(version),
+        df,
+        mapping=mapping,
+        part_cols=part_cols,
+    )
     # CHECK constraints (stored and evaluated in LOGICAL names) enforce
-    # on the STAGED files, exactly like write_delta and _rewrite_commit
-    # (ADVICE r13: checking the input frame admitted nondeterministic
-    # inputs — rand()/UDF columns re-evaluate between the check and the
-    # write — and double-evaluated the frame's lineage).  Constraints
-    # reference data columns only, which every staged file carries.
-    if cons:
-        from pyspark.sql.types import StructField, StructType
-
-        from pyspark_anomaly_detection_spark.io.deltalite_constraints import (
-            enforce_check_constraints,
+    # on the STAGED files, like every deltalite writer: checking the
+    # input frame would admit nondeterministic inputs (rand()/UDF
+    # columns re-evaluate between the check and the write)
+    if snap is not None:
+        deltalite._enforce_staged(
+            df.sparkSession, table_path, adds, snap, "write_delta_mapped"
         )
-
-        data_fields = [
-            f for f in df.schema.fields if f.name not in part_cols
-        ]
-        phys_schema = StructType(
-            [
-                StructField(mapping[f.name], f.dataType, f.nullable)
-                for f in data_fields
-            ]
-        )
-        spark = df.sparkSession
-        staged = (
-            spark.read.option("recursiveFileLookup", "true")
-            .schema(phys_schema)
-            .parquet(data_dir)
-            .toDF(*[f.name for f in data_fields])
-        )
-        enforce_check_constraints(staged, cons, "write_delta_mapped")
-
-    for root, _dirs, files in os.walk(data_dir):
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            pvals: dict[str, str] = {}
-            for seg in os.path.relpath(root, data_dir).split(os.sep):
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    pvals[k] = v  # physical keys (hive dirs are physical)
-            actions.append(
-                {
-                    "add": {
-                        "path": os.path.relpath(full, table_path),
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(full),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
-    actions.sort(key=lambda a: a.get("add", {}).get("path", ""))
+    actions.extend(adds)
     actions.append(
         {
             "commitInfo": {

@@ -19,6 +19,15 @@ log:
   deltalite.read_delta_changes`) reports the rewrite as
   delete+insert — exactly how a real non-DV Delta DELETE surfaces.
 
+Data files are read, staged and harvested only through deltalite's
+data-file layer: ``_read_files`` / ``_read_adds`` read touched files
+with the committed schema (physical names renamed to logical on
+column-mapped tables, deletion vectors subtracted), ``_stage`` writes
+each rewrite, insert set or ``_change_data`` set and harvests its
+``add``/``cdc`` actions, ``_map_groups`` runs the partition groups, and
+``_enforce_staged`` checks constraints on the staged files before the
+commit.
+
 Predicates/assignments are Spark SQL expression strings over DATA
 columns; mutating partitioned tables is supported for predicates over
 data columns (partition columns live only in the log, so a predicate
@@ -30,16 +39,14 @@ row is updated IN PLACE with its source row's values (duplicate-key
 target rows keep their cardinality, exactly Delta's semantics),
 unmatched source rows append, all in ONE commit; ambiguous sources
 (duplicate keys) are rejected, mirroring Delta's
-``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE``.  Round 12
-adds the standard clause matrix: ``WHEN MATCHED [AND cond] THEN
-DELETE``, conditional updates, insert-only merges (matched rows — and
-their files — untouched), and no-insert merges; identity-column
-targets allocate mid-rewrite for the insert branch (q230/q233).
-Round 13 completes the matrix: ``WHEN NOT MATCHED BY SOURCE``
-(delete, or UPDATE SET over the old row — q234's full snapshot-sync),
-partition-MOVING matched updates (old group drops the row, the updated
-row re-enters through the hive-layout insert path), token-validated
-``src.<col>`` condition translation, and a size-conditional source
+``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE``.  The clause
+matrix: ``WHEN MATCHED [AND cond] THEN UPDATE | DELETE``, insert-only
+merges (matched rows — and their files — untouched), no-insert merges,
+``WHEN NOT MATCHED BY SOURCE`` (delete, or UPDATE SET over the old
+row), partition-MOVING matched updates (old group drops the row, the
+updated row re-enters through the hive-layout insert path),
+token-validated ``src.<col>`` condition translation, identity-column
+allocation for the insert branch, and a size-conditional source
 broadcast (big sources fall back to AQE-planned joins).
 """
 
@@ -54,118 +61,16 @@ from pyspark.sql import functions as F
 
 from pyspark_anomaly_detection_spark.io import deltalite
 from pyspark_anomaly_detection_spark.io.detach import detach_local
-from pyspark_anomaly_detection_spark.io.deltalite import _snapshot_state
+from pyspark_anomaly_detection_spark.io.deltalite import (
+    _read_adds,
+    _read_files,
+    _snapshot_state,
+)
 
 
-def _commit_actions(
-    table_path: str, version: int, actions: list[dict[str, Any]]
-) -> int:
-    # optimistic concurrency with bounded retry: a DML rewrite carries
-    # removes, so any interleaved data change aborts it (Delta's
-    # ConcurrentAppend/ConcurrentDelete behavior); see
-    # deltalite._commit_with_retry for the conflict matrix
-    return deltalite._commit_with_retry(table_path, version, actions)
-
-
-def _cm_io(snap):
-    """Column-mapping translators for a snapshot, or None when the table
-    is unmapped.  Returns ``(phys_schema, logical_names, phys_names)``
-    over the DATA columns only (partition columns never live in data
-    files — round 14, when CM × partitions landed): data files of a
-    mapped table carry PHYSICAL column names, so every raw file read
-    goes through the physical schema then renames to logical
-    (predicates/assignments/transforms all operate in logical space),
-    and every file write renames logical → physical just before the
-    parquet sink — the same translation write_delta_mapped and
-    _read_adds use (verdict r10 item 2: COW DML and OPTIMIZE were gated
-    on mapped tables instead of taught this translation)."""
-    mapping = deltalite._column_mapping_of(snap.schema_json)
-    if not mapping:
-        return None
-    import json
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType.fromJson(json.loads(snap.schema_json))
-    data_fields = [
-        f for f in schema.fields if f.name not in (snap.part_cols or [])
-    ]
-    phys_schema = StructType(
-        [
-            StructField(mapping.get(f.name, f.name), f.dataType, f.nullable)
-            for f in data_fields
-        ]
-    )
-    logical = [f.name for f in data_fields]
-    physical = [mapping.get(n, n) for n in logical]
-    return phys_schema, logical, physical
-
-
-def _read_files(
-    spark: SparkSession,
-    table_path: str,
-    rels,
-    cmio,
-    snap=None,
-    file_col: "str | None" = None,
-) -> DataFrame:
-    """Read data files as a LOGICAL-name frame (physical-schema read +
-    rename when the table is column-mapped), subtracting any DELETION
-    VECTORS carried by the snapshot's adds (round 14: COW DML runs on
-    DV tables by reading touched files THROUGH their bitmaps — the
-    rewrite then drops the file's DV in the same commit).  ``file_col``
-    appends each row's source-file path (URI for plain files, normalized
-    absolute path for DV files — ``_scan_file_to_local`` handles both)
-    for the touched-file scans."""
-    dv_map = (
-        {
-            r: snap.adds[r]
-            for r in rels
-            if (snap.adds.get(r) or {}).get("deletionVector")
-        }
-        if snap is not None
-        else {}
-    )
-    plain = [r for r in rels if r not in dv_map]
-    phys_schema = logical = None
-    if cmio is not None:
-        phys_schema, logical, _ = cmio
-    pieces: list[DataFrame] = []
-    if plain:
-        paths = [os.path.join(table_path, rel) for rel in plain]
-        if cmio is None:
-            df = spark.read.parquet(*paths)
-        else:
-            df = spark.read.schema(phys_schema).parquet(*paths).toDF(*logical)
-        if file_col:
-            df = df.withColumn(file_col, F.input_file_name())
-        pieces.append(df)
-    if dv_map:
-        from pyspark_anomaly_detection_spark.io.deltalite_dv import (
-            read_files_minus_dv,
-        )
-
-        df = read_files_minus_dv(
-            spark, table_path, dv_map, phys_schema, file_col=file_col
-        )
-        if cmio is not None:
-            # physical → logical; the optional file column trails the
-            # schema fields (read_files_minus_dv appends it last)
-            df = df.toDF(*(logical + ([file_col] if file_col else [])))
-        pieces.append(df)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _to_physical(df: DataFrame, cmio) -> DataFrame:
-    """Rename a logical-name frame to physical names for the file write
-    (identity when unmapped)."""
-    if cmio is None:
-        return df
-    _, logical, physical = cmio
-    return df.select(*logical).toDF(*physical)
+def _adds(snap, rels) -> dict[str, dict[str, Any]]:
+    """The snapshot's add actions of ``rels``, in ``rels`` order."""
+    return {rel: snap.adds[rel] for rel in rels}
 
 
 def _translate_matched_condition(
@@ -233,42 +138,31 @@ def _guard_partition_columns(predicate: str, part_cols: list[str]) -> None:
 def _resolved_add_keys(table_path: str, rels) -> dict[str, str]:
     """Resolved absolute file path → add key, for mapping scan-reported
     file paths back to the log's add actions.  Handles both relative
-    adds and the ABSOLUTE adds a shallow CLONE commits (ADVICE r13: the
-    MERGE scans used ``os.path.relpath`` instead, so MERGE on a shallow
-    clone crashed with a KeyError while DELETE/UPDATE worked)."""
+    adds and the ABSOLUTE adds a shallow CLONE commits."""
     return {
         os.path.abspath(os.path.join(table_path, rel)): rel for rel in rels
     }
 
 
 def _touched_files(
-    spark: SparkSession,
-    table_path: str,
-    files: list[str],
-    predicate: str,
-    cmio=None,
-    snap=None,
+    spark: SparkSession, table_path: str, snap, predicate: str
 ) -> tuple[list[str], int]:
     """(relative paths of active files containing at least one LIVE row
     matching ``predicate``, total matching live rows) — deletion-vector
-    rows excluded.  ONE distributed scan serves both the touched-file
-    set and the match count (VERDICT r16 item 4: DELETE/UPDATE used to
-    pay a second scan of the touched files just to count matches — a
-    per-file COUNT groupBy gets both answers from the same pass; files
-    outside the touched set contribute zero matches by definition, so
-    the sum over touched files IS the global match count).  Driver
-    result stays bounded by file count."""
-    if not files:
+    rows excluded.  ONE distributed scan serves both answers: a per-file
+    COUNT groupBy gives the touched set, and files outside it contribute
+    zero matches by definition, so the sum over touched files IS the
+    global match count.  Driver result stays bounded by file count."""
+    if not snap.adds:
         return [], 0
+    active = _adds(snap, sorted(snap.adds))
     scan = (
-        _read_files(
-            spark, table_path, files, cmio, snap=snap, file_col="_dml_file"
-        )
+        _read_files(spark, table_path, active, snap, file_col="_dml_file")
         .filter(F.expr(predicate))
         .groupBy("_dml_file")
         .count()
     )
-    resolved = _resolved_add_keys(table_path, files)
+    resolved = _resolved_add_keys(table_path, active)
     out = []
     n_match = 0
     for r in scan.collect():
@@ -297,43 +191,38 @@ def _rewrite_commit(
     operation: str,
     extra_adds_df: DataFrame | None = None,
     snap=None,
-    cmio=None,
     new_schema_json: "str | None" = None,
-    transform_with_pv: bool = False,
     cdc_df: "DataFrame | None" = None,
 ) -> dict[str, int]:
     """Copy-on-write commit: rewrite ``touched`` files through
-    ``transform`` (DataFrame -> DataFrame; with
-    ``transform_with_pv=True`` it is called as ``transform(df,
-    partition_values)`` so a partitioned rewrite can route rows by the
-    file group's own partition tuple — MERGE's partition-move path
-    needs this), optionally append
-    ``extra_adds_df`` rows, remove+add atomically.  When
-    ``new_schema_json`` is given the commit also carries a metaData
-    action with that schemaString (same table id / partition columns /
-    configuration) — MERGE's identity-allocation path uses this to bump
-    the high-water mark in the SAME commit as the inserted rows, so a
-    reader of any version sees marks consistent with the data.
+    ``transform(df, partition_values)`` — called per partition group
+    with the group's LOGICAL partition values, so MERGE can route rows
+    that leave the group — optionally append ``extra_adds_df`` rows,
+    remove+add atomically.  When ``new_schema_json`` is given the commit
+    also carries a metaData action with that schemaString (same table
+    id / partition columns / configuration) — MERGE's identity path
+    bumps the high-water mark in the SAME commit as the inserted rows,
+    so a reader of any version sees marks consistent with the data.
+    ``cdc_df`` (logical rows plus ``_change_type``) is staged as the
+    commit's ``_change_data`` files.
 
-    Partition-aware (ADVICE r9, high): touched files of a partitioned
-    table carry NO partition columns in their data (Delta contract —
-    the values live only in the log's ``partitionValues``), so the
-    rewrite groups touched files by their partition tuple and commits
-    each group's new files with THAT tuple reinjected — otherwise every
-    rewritten row would read back with NULL partition columns."""
+    Touched files of a partitioned table carry NO partition columns
+    (Delta contract — the values live only in the log), so each
+    partition group's rewrite is stamped with THAT group's
+    partitionValues; inserts are written hive-partitioned."""
     snap = snap if snap is not None else _snapshot_state(table_path)
     version = snap.version + 1
-    commit_dir = f"part-{version:05d}-{uuid.uuid4().hex[:12]}"
-    data_dir = os.path.join(table_path, commit_dir)
+    commit_dir = deltalite._commit_dir(version)
+    mapping = deltalite._column_mapping_of(snap.schema_json)
+    logical = {p: n for n, p in mapping.items()}
 
     # generated columns recompute on every rewrite (Delta's UPDATE
     # semantics: the expression, not the stale/stated value, wins) —
     # one withColumn per generated column, stays in codegen.  Generated
-    # PARTITION columns are different (round 14): they never live in
-    # data files (their value is the group's partitionValues, reinjected
-    # on read), so the data-file transform must NOT materialize them;
-    # the hive-layout insert path computes them for ROUTING only
-    # (partitionBy strips them from the files again).
+    # PARTITION columns never live in data files (their value is the
+    # group's partitionValues, reinjected on read), so the data-file
+    # transform must NOT materialize them; the hive-layout insert path
+    # computes them for ROUTING only (partitionBy strips them again).
     from pyspark_anomaly_detection_spark.io.deltalite_generated import (
         generated_columns_of,
     )
@@ -344,12 +233,8 @@ def _rewrite_commit(
     if gen_exprs:
         inner_transform = transform
 
-        def transform(df: DataFrame, pv=None) -> DataFrame:  # noqa: F811
-            out = (
-                inner_transform(df, pv)
-                if transform_with_pv
-                else inner_transform(df)
-            )
+        def transform(df: DataFrame, pv) -> DataFrame:  # noqa: F811
+            out = inner_transform(df, pv)
             for col, expr in gen_exprs.items():
                 out = out.withColumn(col, F.expr(expr))
             return out
@@ -361,236 +246,58 @@ def _rewrite_commit(
             if col not in extra_adds_df.columns:
                 extra_adds_df = extra_adds_df.withColumn(col, F.expr(expr))
 
-    # group touched files by partition tuple (one group, {}, when
-    # unpartitioned — the write lands at the commit dir root, the
-    # pre-partitioning layout)
-    groups: dict[tuple, list[str]] = {}
-    for rel in touched:
-        pv = snap.adds[rel].get("partitionValues") or {}
-        groups.setdefault(tuple(sorted(pv.items())), []).append(rel)
+    groups = deltalite._partition_groups(_adds(snap, touched))
+    # an unpartitioned table's inserts fold into its single rewrite
+    fold = extra_adds_df is not None and not snap.part_cols and bool(groups)
 
-    actions: list[dict[str, Any]] = []
-    n_new_files = 0
-
-    def _write_piece(
-        df: DataFrame, subdir: str, pv: dict[str, str]
-    ) -> list[dict[str, Any]]:
-        """Write one group's rewrite and RETURN its add actions (the
-        caller extends ``actions`` in group order — keeps the commit
-        JSON byte-stable when groups write concurrently)."""
-        out_dir = os.path.join(data_dir, subdir) if subdir else data_dir
-        _to_physical(df, cmio).write.mode("error").parquet(out_dir)
-        adds: list[dict[str, Any]] = []
-        for name in sorted(os.listdir(out_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            rel = (
-                f"{commit_dir}/{subdir}/{name}"
-                if subdir
-                else f"{commit_dir}/{name}"
-            )
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": os.path.getsize(os.path.join(out_dir, name)),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
-        return adds
-
-    # a mapped table's partitionValues are keyed by PHYSICAL names; the
-    # transform (merge's partition-move check) works in logical space
-    full_mapping = deltalite._column_mapping_of(snap.schema_json)
-    phys_to_logical = {p: n for n, p in full_mapping.items()}
-
-    def _logical_pv(pv_items) -> dict:
-        return {
-            phys_to_logical.get(k, k): v for k, v in dict(pv_items).items()
-        }
-
-    ordered_groups = sorted(
-        groups.items(), key=lambda kv: tuple(map(str, kv[0]))
-    )
-
-    def _rewrite_group(i: int, pv_items, rels) -> list[dict[str, Any]]:
-        # DV-carrying touched files are read THROUGH their bitmaps: the
-        # rewrite materializes the deletes, and the remove+add drops the
-        # file's DV in this same commit (round 14 — real Delta's COW-on-
-        # DV-table behavior; the guard that forced a REORG PURGE first
-        # is gone)
-        piece = _read_files(spark, table_path, rels, cmio, snap=snap)
-        kept = (
-            transform(piece, _logical_pv(pv_items))
-            if transform_with_pv
-            else transform(piece)
+    def rewrite(i: int, group) -> list[dict[str, Any]]:
+        pv, group_adds = group
+        kept = transform(
+            _read_files(spark, table_path, group_adds, snap),
+            {logical.get(k, k): v for k, v in pv.items()},
         )
-        subdir = f"g{i}" if snap.part_cols else ""
-        return _write_piece(kept, subdir, dict(pv_items))
-
-    if len(ordered_groups) <= 1:
-        for i, (pv_items, rels) in enumerate(ordered_groups):
-            piece = _read_files(spark, table_path, rels, cmio, snap=snap)
-            kept = (
-                transform(piece, _logical_pv(pv_items))
-                if transform_with_pv
-                else transform(piece)
-            )
-            if extra_adds_df is not None and not snap.part_cols:
-                kept = kept.unionByName(extra_adds_df)
-                extra_adds_df = None  # folded into the single group's write
-            subdir = f"g{i}" if snap.part_cols else ""
-            adds = _write_piece(kept, subdir, dict(pv_items))
-            actions.extend(adds)
-            n_new_files += len(adds)
-    else:
-        # Partition groups rewrite to DISJOINT subdirs with no shared
-        # state — submit them from a small driver thread pool so group
-        # k+1's tasks back-fill executors while group k's tail finishes
-        # (guide §2.6; r17: multi-partition COW DML paid one ~1 s
-        # mostly-fixed-overhead job per group, serialized).  extra_adds
-        # folding never reaches this branch: >1 group implies a
-        # partitioned table, whose inserts go through the hive-layout
-        # write below.  pool.map preserves group order, so the commit's
-        # action sequence is identical to the sequential form.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(4, len(ordered_groups))
-        ) as pool:
-            for adds in pool.map(
-                lambda t: _rewrite_group(t[0], *t[1]),
-                enumerate(ordered_groups),
-            ):
-                actions.extend(adds)
-                n_new_files += len(adds)
-    if extra_adds_df is not None and not snap.part_cols:
-        # no touched files (pure-insert MERGE on an unpartitioned table)
-        adds = _write_piece(extra_adds_df, "", {})
-        actions.extend(adds)
-        n_new_files += len(adds)
-    elif extra_adds_df is not None:
-        # partitioned inserts (MERGE): hive-layout write inside the
-        # commit dir, partitionValues harvested from the dir segments —
-        # the same contract write_delta uses.  Mapped tables rename ALL
-        # columns (data + partition) logical → physical so the hive dirs
-        # and harvested pv keys land physical (round 14)
-        ins_dir = os.path.join(data_dir, "inserts")
-        ins = extra_adds_df
-        part_names = snap.part_cols
-        if full_mapping:
-            ins = ins.toDF(
-                *[full_mapping.get(c, c) for c in ins.columns]
-            )
-            part_names = [full_mapping.get(c, c) for c in snap.part_cols]
-        ins.write.mode("error").partitionBy(*part_names).parquet(ins_dir)
-        for root, _dirs, files in os.walk(ins_dir):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, name)
-                pvals: dict[str, str] = {}
-                for seg in os.path.relpath(root, ins_dir).split(os.sep):
-                    if "=" in seg:
-                        k, _, v = seg.partition("=")
-                        pvals[k] = v
-                actions.append(
-                    {
-                        "add": {
-                            "path": os.path.relpath(full, table_path),
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(full),
-                            "modificationTime": 0,
-                            "dataChange": True,
-                        }
-                    }
-                )
-                n_new_files += 1
-
-    # CHECK constraints + generated-column equalities: UPDATE/MERGE can
-    # introduce violating or drifted rows — one columnar scan of the
-    # staged rewrite (touched files only, never the table) before the
-    # commit; a violation aborts with nothing visible
-    if n_new_files:
-        from pyspark_anomaly_detection_spark.io.deltalite_constraints import (
-            check_constraints_of,
-            enforce_check_constraints,
-        )
-        from pyspark_anomaly_detection_spark.io.deltalite_generated import (
-            generation_constraints,
+        if fold:
+            kept = kept.unionByName(extra_adds_df)
+        return deltalite._stage(
+            table_path,
+            f"{commit_dir}/g{i}" if snap.part_cols else commit_dir,
+            kept,
+            mapping=mapping,
+            pv=pv,
         )
 
-        cons = {
-            **check_constraints_of(snap.meta),
-            **generation_constraints(snap.schema_json),
-        }
-        # generated PARTITION columns never live in data files — their
-        # equality can't be checked on the staged scan (round 14); the
-        # hive routing / partition-move machinery carries their value
-        for c in snap.part_cols:
-            cons.pop(f"generated:{c}", None)
-        if cons:
-            # constraints are stored in LOGICAL names; a mapped table's
-            # staged files carry physical names, so translate first.
-            # recursiveFileLookup disables partition-directory inference:
-            # a partitioned MERGE's commit dir mixes flat rewrite groups
-            # (g0/…) with a hive-layout inserts/ tree, which inference
-            # rejects (CONFLICTING_DIRECTORY_STRUCTURES — round-13 bug
-            # surfaced by the generated-column × partition-move pin);
-            # constraints reference DATA columns only, which every
-            # staged file carries uniformly
-            reader = spark.read.option("recursiveFileLookup", "true")
-            staged = (
-                reader.schema(cmio[0]).parquet(data_dir).toDF(*cmio[1])
-                if cmio is not None
-                else reader.parquet(data_dir)
-            )
-            enforce_check_constraints(staged, cons, operation)
+    adds = [a for staged in deltalite._map_groups(rewrite, groups) for a in staged]
+    if extra_adds_df is not None and not fold:
+        # a pure-insert MERGE on an unpartitioned table, or inserts
+        # routed hive-style to their own partitions
+        adds += deltalite._stage(
+            table_path,
+            f"{commit_dir}/inserts" if snap.part_cols else commit_dir,
+            extra_adds_df,
+            mapping=mapping,
+            part_cols=snap.part_cols,
+        )
+    # UPDATE/MERGE can introduce violating or drifted rows: one scan of
+    # the staged files (never the table) before the commit
+    deltalite._enforce_staged(spark, table_path, adds, snap, operation)
 
-    # row-level change data (round 14 — verdict r13 item 3): write the
-    # commit's exact change set as spec-shaped ``_change_data`` files +
-    # ``cdc`` actions (hive-partitioned like the table, physical names
-    # on mapped tables, ``_change_type`` as a physical column).  Per the
+    # row-level change data: the commit's exact change set as
+    # spec-shaped ``_change_data`` files + ``cdc`` actions.  Per the
     # protocol, when a commit carries cdc actions they are the COMPLETE
     # change description — CDF readers use them INSTEAD of the
     # file-level add/remove reconstruction, so a 1-row UPDATE in a
     # 1M-row file feeds exactly 1 preimage + 1 postimage downstream.
+    cdc = []
     if cdc_df is not None:
-        cdc_dir = os.path.join(table_path, "_change_data", commit_dir)
-        cdc_out = cdc_df
-        part_names = snap.part_cols
-        if full_mapping:
-            cdc_out = cdc_out.toDF(
-                *[full_mapping.get(c, c) for c in cdc_out.columns]
-            )
-            part_names = [full_mapping.get(c, c) for c in snap.part_cols]
-        w = cdc_out.write.mode("error")
-        if part_names:
-            w = w.partitionBy(*part_names)
-        w.parquet(cdc_dir)
-        for root, _dirs, files in os.walk(cdc_dir):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, name)
-                pvals: dict[str, str] = {}
-                for seg in os.path.relpath(root, cdc_dir).split(os.sep):
-                    if "=" in seg:
-                        k, _, val = seg.partition("=")
-                        pvals[k] = val
-                actions.append(
-                    {
-                        "cdc": {
-                            "path": os.path.relpath(full, table_path),
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(full),
-                            "dataChange": False,
-                        }
-                    }
-                )
+        cdc = deltalite._stage(
+            table_path,
+            f"_change_data/{commit_dir}",
+            cdc_df,
+            mapping=mapping,
+            part_cols=snap.part_cols,
+            data_change=False,
+            kind="cdc",
+        )
 
     removes = [
         {"remove": {"path": rel, "dataChange": True}} for rel in touched
@@ -598,8 +305,8 @@ def _rewrite_commit(
     meta_actions: list[dict[str, Any]] = []
     if new_schema_json is not None:
         # start from the FULL prior metaData and override only what this
-        # commit changes (ADVICE r12 low: rebuilding from a fixed field
-        # subset silently dropped unknown fields like name/description)
+        # commit changes (rebuilding from a fixed field subset would
+        # silently drop unknown fields like name/description)
         meta = dict(snap.meta or {})
         meta["id"] = meta.get("id") or uuid.uuid4().hex
         meta["format"] = meta.get("format") or {
@@ -613,14 +320,17 @@ def _rewrite_commit(
         meta["configuration"] = dict(meta.get("configuration") or {})
         meta.setdefault("createdTime", 0)
         meta_actions.append({"metaData": meta})
-    actions = meta_actions + removes + actions + [
+    actions = meta_actions + removes + adds + cdc + [
         {"commitInfo": {"operation": operation, "engineInfo": "deltalite"}}
     ]
-    version = _commit_actions(table_path, version, actions)
+    # optimistic concurrency with bounded retry: a DML rewrite carries
+    # removes, so any interleaved data change aborts it (Delta's
+    # ConcurrentAppend/ConcurrentDelete behavior)
+    version = deltalite._commit_with_retry(table_path, version, actions)
     return {
         "version": version,
         "files_rewritten": len(touched),
-        "files_added": n_new_files,
+        "files_added": len(adds),
     }
 
 
@@ -631,46 +341,39 @@ def delete_delta(
     containing matching rows.  Returns {'version', 'files_rewritten',
     'files_added', 'files_untouched', 'rows_deleted'}."""
     snap = _snapshot_state(table_path)
-    cmio = _cm_io(snap)
     if snap.part_cols:
         _guard_partition_columns(predicate, snap.part_cols)
-    active = sorted(snap.adds)
-    touched, n_match = _touched_files(
-        spark, table_path, active, predicate, cmio, snap=snap
-    )
+    touched, n_match = _touched_files(spark, table_path, snap, predicate)
     if not touched:
         return {
             "version": snap.version,
             "files_rewritten": 0,
             "files_added": 0,
-            "files_untouched": len(active),
+            "files_untouched": len(snap.adds),
             "rows_deleted": 0,
         }
     cdc_df = None
     if _cdf_enabled(snap):
         # full logical rows (partition columns reinjected) of exactly
         # the deleted set — one extra scan of ONLY the touched files
-        pre = deltalite._read_adds(
-            spark,
-            table_path,
-            {r: snap.adds[r] for r in touched},
-            snap.schema_json,
-            snap.part_cols,
-        )
-        cdc_df = pre.filter(F.expr(predicate)).withColumn(
-            "_change_type", F.lit("delete")
+        cdc_df = (
+            _read_adds(spark, table_path, _adds(snap, touched), snap)
+            .filter(F.expr(predicate))
+            .withColumn("_change_type", F.lit("delete"))
         )
     out = _rewrite_commit(
         spark,
         table_path,
         touched,
-        lambda df: df.filter(~F.expr(predicate)),
+        # rows whose predicate is NULL are not deleted
+        lambda df, pv: df.filter(
+            ~F.coalesce(F.expr(predicate), F.lit(False))
+        ),
         "DELETE",
         snap=snap,
-        cmio=cmio,
         cdc_df=cdc_df,
     )
-    out["files_untouched"] = len(active) - len(touched)
+    out["files_untouched"] = len(snap.adds) - len(touched)
     out["rows_deleted"] = n_match
     return out
 
@@ -684,9 +387,10 @@ def update_delta(
     """Row-level UPDATE ... SET: rewrite only the files containing
     matching rows, applying ``assignments`` (column -> Spark SQL
     expression) to the matching rows and passing the rest through
-    unchanged."""
+    unchanged.  Every assignment, and the predicate, reads the OLD row
+    (SQL's UPDATE semantics): ``SET v = v + 1, w = v`` sets ``w`` to the
+    pre-update ``v``."""
     snap = _snapshot_state(table_path)
-    cmio = _cm_io(snap)
     from pyspark_anomaly_detection_spark.io.deltalite_generated import (
         generated_columns_of,
     )
@@ -721,8 +425,6 @@ def update_delta(
             # a generated PARTITION column's value is the file group's
             # committed partitionValues — updating one of its SOURCES
             # would silently leave the row in the stale partition
-            # (round 14: probed — the rewrite stayed in the old group
-            # while the expression now implies another)
             for pcol in snap.part_cols:
                 expr = gen.get(pcol)
                 if expr and _re.search(rf"\b{_re.escape(col)}\b", expr):
@@ -733,10 +435,12 @@ def update_delta(
                         "rows between partitions; use MERGE (whose "
                         "partition-move path handles this) instead"
                     )
-    active = sorted(snap.adds)
-    touched, n_match = _touched_files(
-        spark, table_path, active, predicate, cmio, snap=snap
+    unknown = set(assignments) - set(
+        deltalite._data_schema(snap, physical=False).fieldNames()
     )
+    if unknown:
+        raise ValueError(f"cannot UPDATE unknown column(s) {sorted(unknown)}")
+    touched, n_match = _touched_files(spark, table_path, snap, predicate)
     if not touched:
         return {
             "version": snap.version,
@@ -745,33 +449,30 @@ def update_delta(
             "rows_updated": 0,
         }
 
-    def apply_set(df: DataFrame) -> DataFrame:
-        cond = F.expr(predicate)
-        for col, expr in assignments.items():
-            df = df.withColumn(
-                col, F.when(cond, F.expr(expr)).otherwise(F.col(col))
-            )
-        return df
+    def assign(df: DataFrame, hit) -> DataFrame:
+        # ONE select over the old row: no assignment sees another's result
+        return df.select(
+            *[
+                F.when(hit, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
+                if c in assignments
+                else F.col(c)
+                for c in df.columns
+            ]
+        )
+
+    def apply_set(df: DataFrame, pv) -> DataFrame:
+        # the predicate is evaluated once, before any column changes
+        marked = df.withColumn("_dml_hit", F.expr(predicate))
+        return assign(marked, F.col("_dml_hit")).drop("_dml_hit")
 
     cdc_df = None
     if _cdf_enabled(snap):
-        pre = deltalite._read_adds(
-            spark,
-            table_path,
-            {r: snap.adds[r] for r in touched},
-            snap.schema_json,
-            snap.part_cols,
+        pre = _read_adds(
+            spark, table_path, _adds(snap, touched), snap
         ).filter(F.expr(predicate))
-        # ONE select so every assignment reads the OLD row, then
-        # generated columns recompute — mirroring the rewrite itself
-        post = pre.select(
-            *[
-                F.expr(assignments[c]).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in pre.columns
-            ]
-        )
+        # generated columns recompute after the assignments, mirroring
+        # the rewrite itself
+        post = assign(pre, F.lit(True))
         for col, expr in gen.items():
             post = post.withColumn(col, F.expr(expr))
         cdc_df = pre.withColumn(
@@ -786,7 +487,6 @@ def update_delta(
         apply_set,
         "UPDATE",
         snap=snap,
-        cmio=cmio,
         cdc_df=cdc_df,
     )
     out["rows_updated"] = n_match
@@ -922,7 +622,6 @@ def merge_delta(
     gen_map = _gen_of(snap.schema_json)
     gencols = set(gen_map)
     absent_gen = {c for c in gencols if c not in source.columns}
-    cmio = _cm_io(snap)
     part_cols = snap.part_cols
     if key in part_cols:
         raise ValueError(
@@ -966,17 +665,13 @@ def merge_delta(
         n_matched = 0
         n_matched_keys = 0
         if active and n_src:
-            scan = (
-                _read_files(
-                    spark,
-                    table_path,
-                    active,
-                    cmio,
-                    snap=snap,
-                    file_col="_dml_file",
-                )
-                .join(_bcast(src.select(key)), key, "left_semi")
-            )
+            scan = _read_files(
+                spark,
+                table_path,
+                _adds(snap, active),
+                snap,
+                file_col="_dml_file",
+            ).join(_bcast(src.select(key)), key, "left_semi")
             # ONE pass serves both the match totals and the touched-file
             # set (VERDICT r16 item 4: this used to be two jobs over the
             # same scan+semi-join — a global agg, then a distinct file
@@ -1003,10 +698,7 @@ def merge_delta(
                     p = _scan_file_to_local(r._dml_file)
                     touched.append(resolved[os.path.abspath(p)])
             touched.sort()
-        target_cols = [
-            f.name
-            for f in _read_files(spark, table_path, active, cmio).schema.fields
-        ] if active else [f.name for f in src.schema.fields]
+        target_cols = deltalite._data_schema(snap, physical=False).fieldNames()
 
         # WHEN MATCHED THEN UPDATE SET *: update each matched target row
         # IN PLACE — N duplicate-key target rows stay N rows, each taking
@@ -1113,17 +805,13 @@ def merge_delta(
                     not_matched_by_source_condition, part_cols
                 )
             if active:
-                nscan = (
-                    _read_files(
-                        spark,
-                        table_path,
-                        active,
-                        cmio,
-                        snap=snap,
-                        file_col="_dml_file",
-                    )
-                    .join(_bcast(src.select(key)), key, "left_anti")
-                )
+                nscan = _read_files(
+                    spark,
+                    table_path,
+                    _adds(snap, active),
+                    snap,
+                    file_col="_dml_file",
+                ).join(_bcast(src.select(key)), key, "left_anti")
                 if not_matched_by_source_condition is not None:
                     nscan = nscan.filter(
                         F.expr(not_matched_by_source_condition)
@@ -1226,7 +914,7 @@ def merge_delta(
                 n_affected = n_matched
             else:
                 n_affected = (
-                    _read_files(spark, table_path, touched, cmio, snap=snap)
+                    _read_files(spark, table_path, _adds(snap, touched), snap)
                     .join(marked, key, "inner")
                     .filter(F.coalesce(cond_col, F.lit(False)))
                     .count()
@@ -1246,13 +934,7 @@ def merge_delta(
             import operator
             from functools import reduce
 
-            tgt_full = deltalite._read_adds(
-                spark,
-                table_path,
-                {rel: snap.adds[rel] for rel in touched},
-                snap.schema_json,
-                part_cols,
-            )
+            tgt_full = _read_adds(spark, table_path, _adds(snap, touched), snap)
             differs = reduce(
                 operator.or_,
                 [
@@ -1313,7 +995,7 @@ def merge_delta(
             inserts = None
         elif touched:
             tgt_keys = _read_files(
-                spark, table_path, touched, cmio, snap=snap
+                spark, table_path, _adds(snap, touched), snap
             ).select(key)
             inserts = src.select(*insert_cols).join(
                 tgt_keys, key, "left_anti"
@@ -1382,12 +1064,8 @@ def merge_delta(
 
             pieces_cdc: list[DataFrame] = []
             if rewrite_files:
-                tgt_all = deltalite._read_adds(
-                    spark,
-                    table_path,
-                    {r: snap.adds[r] for r in rewrite_files},
-                    snap.schema_json,
-                    part_cols,
+                tgt_all = _read_adds(
+                    spark, table_path, _adds(snap, rewrite_files), snap
                 ).join(marked, key, "left")
                 if matched == "update":
                     m = tgt_all.filter(hitf)
@@ -1459,9 +1137,7 @@ def merge_delta(
                     .withColumn("_change_type", F.lit("insert"))
                 )
             if pieces_cdc:
-                cdc_df = pieces_cdc[0]
-                for p in pieces_cdc[1:]:
-                    cdc_df = cdc_df.unionByName(p)
+                cdc_df = deltalite._union(pieces_cdc)
 
         out = _rewrite_commit(
             spark,
@@ -1471,9 +1147,7 @@ def merge_delta(
             "MERGE",
             extra_adds_df=inserts,
             snap=snap,
-            cmio=cmio,
             new_schema_json=new_schema_json,
-            transform_with_pv=True,
             cdc_df=cdc_df,
         )
         out["rows_matched"] = n_matched

@@ -38,6 +38,15 @@ scan), shuffles matched ``(file, row_index)`` pairs only, and commits
 O(touched files) log bytes.  DV-aware reads anti-join against the
 decoded positions — broadcast when total cardinality is small (known
 from the descriptors without decoding), shuffle otherwise.
+
+Where data files are touched: :func:`read_files_minus_dv` is the one
+DV-aware file reader, and deltalite's ``_read_files`` calls it for
+every DV-carrying add (snapshot reads, COW DML scans, OPTIMIZE).  The
+delete scan reads with deltalite's ``_data_schema``, like every other
+data-file read.  A DV delete writes no data file; :func:`purge_delta`
+is OPTIMIZE's group rewrite (``deltalite._compact``) over only the
+DV-carrying files, so its files are staged and harvested by
+deltalite's ``_stage``.
 """
 
 from __future__ import annotations
@@ -308,8 +317,7 @@ def _scan_with_positions(
     """Data files ``rels`` with each row's normalized file path and
     parquet row index appended as (_dv_f, _dv_i) — the probe side of
     the position joins."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(
+    return spark.read.schema(schema).parquet(
         *[os.path.join(table_path, rel) for rel in rels]
     ).select(
         "*",
@@ -328,17 +336,13 @@ def read_files_minus_dv(
     """Read DV-carrying data files with their deleted rows subtracted
     (anti-join on (file, row_index)).  ``file_col`` keeps the source
     file's NORMALIZED absolute path as a trailing column — the COW DML
-    touched-file scan needs it (round 14: DML runs on DV tables by
-    reading THROUGH the bitmap)."""
+    touched-file scan needs it (DML runs on DV tables by reading
+    THROUGH the bitmap)."""
     df = _scan_with_positions(spark, table_path, sorted(dv_adds), schema)
     pos = dv_positions_df(spark, table_path, dv_adds)
     # A key-list join MOVES the join keys to the FRONT of the output
-    # ([_dv_f, _dv_i, data...]), so the data-column ORDER must be
-    # restored explicitly: column-mapped callers rename this frame
-    # POSITIONALLY (deltalite_dml._read_files toDF), and the rotated
-    # order bound logical columns to the file-path column — the
-    # CM × DV × touched-file-scan composition the r15 schema-feature
-    # lifecycle fuzz caught (tests/test_deltalite_model_fuzz.py).
+    # ([_dv_f, _dv_i, data...]); restore the data-column order so this
+    # frame has the same column order as a plain-file read.
     data_cols = [c for c in df.columns if c not in ("_dv_f", "_dv_i")]
     out = df.join(pos, ["_dv_f", "_dv_i"], "left_anti")
     if file_col:
@@ -391,8 +395,8 @@ def delete_delta_dv(
         raise ValueError(f"deltalite DV storage must be 'i'|'u': {storage}")
     snap = deltalite._snapshot_state(table_path)
     if snap.part_cols:
-        # partitioned tables are supported (round 13): the scan below
-        # reads DATA files (no partition columns in them), bitmaps are
+        # partitioned tables are supported: the scan below reads DATA
+        # files (no partition columns in them), bitmaps are
         # per-file regardless of layout, and the rewritten add actions
         # carry the old add's partitionValues — only predicates naming
         # a partition column must refuse (they live in the log)
@@ -405,39 +409,15 @@ def delete_delta_dv(
     if not adds:
         return {"version": snap.version, "files_with_dv": 0, "rows_deleted": 0}
 
-    # live rows = file rows minus existing DV positions.  Column-mapped
-    # tables (r11): read through the PHYSICAL schema and alias back to
-    # logical names so the caller's predicate binds — same translation
-    # the DML module uses.
-    mapping = deltalite._column_mapping_of(snap.schema_json)
-    if mapping:
-        import json as _json
-
-        from pyspark.sql.types import StructField, StructType
-
-        schema = StructType.fromJson(_json.loads(snap.schema_json))
-        # data columns only: partition fields never live in data files
-        # (round 14 — CM × partitions)
-        data_fields = [
-            f for f in schema.fields if f.name not in (snap.part_cols or [])
-        ]
-        phys_schema = StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in data_fields
-            ]
-        )
-        logical = [
-            F.col(mapping.get(f.name, f.name)).alias(f.name)
-            for f in data_fields
-        ]
-        scan = _scan_with_positions(
-            spark, table_path, sorted(adds), phys_schema
-        ).select(*logical, "_dv_f", "_dv_i")
-    else:
-        scan = _scan_with_positions(spark, table_path, sorted(adds), None)
+    # live rows = file rows minus existing DV positions, read with the
+    # data-file schema and renamed to logical names so the caller's
+    # predicate binds on column-mapped tables too
+    scan = deltalite._to_logical(
+        _scan_with_positions(
+            spark, table_path, sorted(adds), deltalite._data_schema(snap)
+        ),
+        snap,
+    )
     dv_adds = {r: a for r, a in adds.items() if a.get("deletionVector")}
     if dv_adds:
         existing = dv_positions_df(spark, table_path, dv_adds)
@@ -538,15 +518,12 @@ def delete_delta_dv(
 
 def purge_delta(spark: SparkSession, table_path: str) -> dict[str, int]:
     """``REORG TABLE ... APPLY (PURGE)``: materialize the deletion
-    vectors — rewrite ONLY the DV-carrying files with their deleted
-    rows dropped, commit remove+add with ``dataChange: false`` (the
-    LOGICAL content is unchanged, so streams treat the reorg as
-    transparently as an OPTIMIZE), and leave the table DV-free, which
-    re-enables OPTIMIZE / COW DML / stats / checkpointable-by-content
-    operations.  Old files stay on disk for time travel until a
-    VACUUM."""
-    import uuid as _uuid
-
+    vectors — OPTIMIZE's group rewrite run over ONLY the DV-carrying
+    files, so their deleted rows drop physically; the commit is
+    remove+add with ``dataChange: false`` (the LOGICAL content is
+    unchanged, so streams treat the reorg as transparently as an
+    OPTIMIZE) and leaves the table DV-free.  Old files stay on disk for
+    time travel until a VACUUM."""
     snap = deltalite._snapshot_state(table_path)
     dv_adds = {
         r: a for r, a in snap.adds.items() if a.get("deletionVector")
@@ -557,108 +534,9 @@ def purge_delta(spark: SparkSession, table_path: str) -> dict[str, int]:
             "files_purged": 0,
             "files_added": 0,
         }
-    import json as _json
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema = (
-        StructType.fromJson(_json.loads(snap.schema_json))
-        if snap.schema_json
-        else None
+    version, n_added = deltalite._compact(
+        spark, table_path, snap, dv_adds, "REORG PURGE", "deltalite-dv"
     )
-    # partitioned tables (round 13): data files carry no partition
-    # columns, so purge rewrites per partition GROUP with the group's
-    # partitionValues re-stamped on the new adds.  Partition fields drop
-    # by LOGICAL name BEFORE the physical rename (round 14: the old
-    # order filtered physical names against logical part_cols, leaving
-    # phantom partition fields in a mapped partitioned purge)
-    if snap.part_cols and schema is not None:
-        schema = StructType(
-            [f for f in schema.fields if f.name not in snap.part_cols]
-        )
-    # column-mapped tables (r11): purge rewrites files in PHYSICAL space
-    # end-to-end — read phys, write phys — no rename round-trip needed
-    mapping = deltalite._column_mapping_of(snap.schema_json)
-    if mapping and schema is not None:
-        schema = StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in schema.fields
-            ]
-        )
-    groups: dict[tuple, dict[str, Any]] = {}
-    for rel, a in dv_adds.items():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(tuple(sorted(pv.items())), {})[rel] = a
-    version = snap.version + 1
-    commit_dir = f"part-{version:05d}-{_uuid.uuid4().hex[:12]}"
-    data_dir = os.path.join(table_path, commit_dir)
-    actions: list[dict[str, Any]] = []
-    for rel in sorted(dv_adds):
-        actions.append({"remove": {"path": rel, "dataChange": False}})
-    n_added = 0
-
-    # Partition groups are INDEPENDENT rewrite jobs writing to disjoint
-    # subdirs — run them from a small driver thread pool so the next
-    # group's tasks back-fill executors freed by the current group's
-    # tail (guide §2.6; r17: a 5-partition purge paid 5 sequential
-    # ~1 s jobs of mostly fixed overhead).  Actions are collected per
-    # group and extended in group order, so the commit JSON is
-    # byte-stable vs the sequential form; any group failure propagates
-    # out of pool.map before the commit is attempted.
-    def _purge_group(i: int, pv_items, group) -> list[dict[str, Any]]:
-        cleaned = read_files_minus_dv(spark, table_path, group, schema)
-        subdir = f"g{i}" if snap.part_cols else ""
-        out_dir = os.path.join(data_dir, subdir) if subdir else data_dir
-        cleaned.write.mode("error").parquet(out_dir)
-        adds: list[dict[str, Any]] = []
-        for name in sorted(os.listdir(out_dir)):
-            if name.endswith(".parquet"):
-                rel = (
-                    f"{commit_dir}/{subdir}/{name}"
-                    if subdir
-                    else f"{commit_dir}/{name}"
-                )
-                adds.append(
-                    {
-                        "add": {
-                            "path": rel,
-                            "partitionValues": dict(pv_items),
-                            "size": os.path.getsize(
-                                os.path.join(out_dir, name)
-                            ),
-                            "modificationTime": 0,
-                            "dataChange": False,
-                        }
-                    }
-                )
-        return adds
-
-    ordered = sorted(groups.items())
-    if len(ordered) == 1:
-        group_adds = [_purge_group(0, *ordered[0])]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(4, len(ordered))
-        ) as pool:
-            group_adds = list(
-                pool.map(
-                    lambda t: _purge_group(t[0], *t[1]),
-                    enumerate(ordered),
-                )
-            )
-    for adds in group_adds:
-        actions.extend(adds)
-        n_added += len(adds)
-    actions.append(
-        {"commitInfo": {"operation": "REORG PURGE",
-                        "engineInfo": "deltalite-dv"}}
-    )
-    version = deltalite._commit_with_retry(table_path, version, actions)
     return {
         "version": version,
         "files_purged": len(dv_adds),

@@ -27,10 +27,9 @@ from __future__ import annotations
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import IDF, HashingTF, StringIndexer
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_anomaly_detection_spark.io.readers import load_table
 from pyspark_anomaly_detection_spark.text.setjoin import TOKEN_SPLIT
 
 NUM_FEATURES = 4096
@@ -102,13 +101,3 @@ def score_lang_classifier(model: PipelineModel, docs: DataFrame) -> DataFrame:
         )
         .orderBy("lang")
     )
-
-
-def lang_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train on the 80% content-hash bucket split, report per-language
-    holdout accuracy over the testdata documents (at-chance there — see
-    module docstring; kept as the end-to-end smoke path)."""
-    docs = load_table(spark, sf_dir, "documents")
-    train, test = split_docs(docs)
-    model = train_lang_classifier(train)
-    return score_lang_classifier(model, test)

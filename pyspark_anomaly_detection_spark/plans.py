@@ -23,10 +23,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(plan: str) -> list[str]:
     """All PushedFilters lists that made it into Parquet scans."""
     return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -40,23 +36,6 @@ def read_schemas(plan: str) -> list[str]:
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if some scan's PushedFilters mentions ``fragment``."""
     return any(fragment in f for f in pushed_filters(formatted_plan(df)))
-
-
-def scan_reads_only(df: DataFrame, table_cols: dict[str, set[str]]) -> bool:
-    """True if every scan's ReadSchema is a subset of the allowed columns
-    (column pruning proof).  ``table_cols`` maps a distinguishing column to
-    the full allowed set for that scan."""
-    for schema in read_schemas(formatted_plan(df)):
-        cols = {c.split(":")[0] for c in schema.split(",") if c}
-        matched = False
-        for marker, allowed in table_cols.items():
-            if marker in cols:
-                matched = True
-                if not cols <= allowed:
-                    return False
-        if not matched and table_cols:
-            return False
-    return True
 
 
 def uses_broadcast_join(df: DataFrame) -> bool:

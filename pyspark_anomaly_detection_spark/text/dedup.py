@@ -89,32 +89,6 @@ def q32_exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signature(text: Column, n_hashes: int = N_MINHASH) -> Column:
-    """MinHash signature as array<bigint> (expression form).
-
-    Pipeline: tokens → 3-gram shingles → 60-bit md5 base hash per shingle →
-    n universal hashes (mod 2^31-1) → min per hash.  Every step is exact
-    integer arithmetic available in both Spark and DuckDB.  Empty shingle
-    sets (short docs) get sentinel p (= MINHASH_P, larger than any hash).
-
-    NB: as a single expression the md5-per-shingle array is evaluated once
-    PER HASH FUNCTION (Catalyst does not share subtrees across the n array
-    elements, and higher-order lambdas stay interpreted).  Use
-    ``minhash_signatures_df`` in pipelines — it hashes each shingle exactly
-    once inside whole-stage codegen.
-    """
-    sh = shingles(tokens(text), SHINGLE_N)
-    base = F.transform(sh, md5_long60)
-
-    def min_hash_i(i: int):
-        def apply(b):  # single-arg lambda: Spark must not pass the index
-            return universal_hash(b, i)
-
-        return F.coalesce(F.array_min(F.transform(base, apply)), F.lit(MINHASH_P))
-
-    return F.array(*[min_hash_i(i) for i in range(n_hashes)])
-
-
 def minhash_signatures_df(
     docs: DataFrame,
     n_hashes: int = N_MINHASH,

@@ -772,3 +772,26 @@ def test_interrupted_commit_leaves_no_torn_version(tmp_path, monkeypatch):
         assert state(t) == before, boundary
         assert dl._commit_with_retry(t, 1, overwrite()) == 1, boundary
         assert sorted(dl._snapshot_state(t).adds) == ["c.parquet"]
+
+
+def test_partition_values_round_trip_escaped_and_null(spark, tmp_path):
+    """Hive directory names escape special characters and spell NULL
+    as ``__HIVE_DEFAULT_PARTITION__``; the log records the real values,
+    so a partitioned table reads back exactly what was written."""
+    from pyspark_anomaly_detection_spark.io.deltalite import _snapshot_state
+
+    t = str(tmp_path / "t")
+    rows = [(1, "a:b"), (2, None), (3, "50%")]
+    write_delta(
+        spark.createDataFrame(rows, "id long, p string"),
+        t,
+        partition_by=["p"],
+    )
+    values = {
+        a["partitionValues"]["p"]
+        for a in _snapshot_state(t).adds.values()
+    }
+    assert values == {"a:b", None, "50%"}
+    assert sorted(
+        tuple(r) for r in read_delta(spark, t).collect()
+    ) == rows

@@ -193,3 +193,37 @@ def test_tombstones_round_trip_and_vacuum_after_expiry(spark, tmp_path):
     assert sorted(r.id for r in read_delta(spark, t).collect()) == [
         100, 101, 102, 103, 104,
     ]
+
+
+def test_concurrent_checkpointers_of_one_version(spark, tmp_path, monkeypatch):
+    """Two checkpointers of the same version interleave at the worst
+    point: the second runs to completion just before the first renames
+    its temp file.  With a shared temp name the first rename would find
+    its file gone (or publish the other's); each writer now has its own
+    temp, so both return and the checkpoint reads back."""
+    t = str(tmp_path / "t")
+    write_delta(spark.range(0, 5).toDF("id"), t)
+    write_delta(spark.range(5, 9).toDF("id"), t)
+    real_replace = os.replace
+    raced = []
+
+    def replace(src, dst):
+        if not raced:
+            raced.append(None)  # the nested call renames straight through
+            raced[0] = create_checkpoint(t, 1)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    assert create_checkpoint(t, 1) == 1
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert raced == [1]
+    assert _list_checkpoints(t) == [1]
+    log = os.path.join(t, "_delta_log")
+    assert not [n for n in os.listdir(log) if n.endswith(".tmp")]
+    with open(os.path.join(log, "_last_checkpoint")) as f:
+        assert json.load(f)["version"] == 1
+    for v in _list_versions(t):
+        os.remove(os.path.join(log, f"{v:020d}.json"))
+    assert sorted(r.id for r in read_delta(spark, t).collect()) == list(
+        range(9)
+    )

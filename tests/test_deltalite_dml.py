@@ -746,3 +746,85 @@ def test_merge_partition_move_recomputes_generated(spark, tmp_path):
     }
     assert rows[4] == ("1", 99, 990)   # moved, updated, recomputed
     assert rows[2] == ("0", 4, 40)     # untouched rows keep theirs
+
+
+def test_update_assignments_read_the_old_row(spark, tmp_path):
+    """``SET v = v + 1, w = v WHERE v = 5``: every assignment and the
+    predicate read the pre-update row, so ``w`` takes the OLD ``v`` —
+    and the CDF postimage records exactly what the table holds."""
+    from pyspark_anomaly_detection_spark.io.deltalite import (
+        set_table_properties,
+    )
+
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(1, 5, 0), (2, 7, 0)], "id long, v long, w long"
+        ),
+        t,
+    )
+    set_table_properties(t, {"delta.enableChangeDataFeed": "true"})
+    with pytest.raises(ValueError, match="unknown column"):
+        update_delta(spark, t, "v = 5", {"x": "1"})
+    out = update_delta(spark, t, "v = 5", {"v": "v + 1", "w": "v"})
+    assert out["rows_updated"] == 1
+    table = sorted(tuple(r) for r in read_delta(spark, t).collect())
+    assert table == [(1, 6, 5), (2, 7, 0)]
+    post = [
+        (r.id, r.v, r.w)
+        for r in read_delta_changes(spark, t, from_version=out["version"] - 1)
+        .filter("_change_type = 'update_postimage'")
+        .collect()
+    ]
+    assert post == [(1, 6, 5)]
+
+
+def test_plain_and_mapped_tables_run_the_same_jobs(spark, tmp_path):
+    """DELETE, UPDATE and MERGE read a plain table's files with the
+    committed schema, exactly as they read a column-mapped copy, so no
+    op pays a schema-inference job on one and not the other: each op
+    runs the same number of Spark jobs on both tables."""
+    from pyspark_anomaly_detection_spark.io.deltalite_cm import (
+        write_delta_mapped,
+    )
+
+    sc = spark.sparkContext
+    df = spark.range(0, 40).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    )
+    plain, mapped = str(tmp_path / "plain"), str(tmp_path / "mapped")
+    write_delta(df, plain)
+    write_delta_mapped(df, mapped)
+    source = spark.createDataFrame([(3, 0), (99, 1)], "id long, v long")
+    ops = {
+        "delete": lambda t: delete_delta(spark, t, "id % 5 = 0"),
+        "update": lambda t: update_delta(spark, t, "id % 3 = 0", {"v": "0"}),
+        "merge": lambda t: merge_delta(spark, t, source, key="id"),
+    }
+    jobs = {}
+    for table in (plain, mapped):
+        for name, op in ops.items():
+            group = f"dml-jobs-{name}-{os.path.basename(table)}"
+            sc.setJobGroup(group, group)
+            try:
+                op(table)
+            finally:
+                sc.setJobGroup("", "")
+            jobs[name, table] = len(sc.statusTracker().getJobIdsForGroup(group))
+    for name in ops:
+        assert jobs[name, plain] == jobs[name, mapped] > 0, jobs
+
+
+def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """DELETE removes the rows its predicate holds for; a row where the
+    predicate is NULL stays, even in a file the DELETE rewrites."""
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(1, 10), (2, None), (3, 1)], "id long, v long"
+        ).coalesce(1),
+        t,
+    )
+    out = delete_delta(spark, t, "v > 5")
+    assert out["rows_deleted"] == 1 and out["files_rewritten"] == 1
+    assert sorted(r.id for r in read_delta(spark, t).collect()) == [2, 3]
