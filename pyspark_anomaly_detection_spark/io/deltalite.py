@@ -1112,12 +1112,19 @@ def _read_files(
     adds: dict[str, dict[str, Any]],
     snap: "_Snapshot",
     file_col: str | None = None,
+    pos_col: str | None = None,
 ) -> DataFrame:
     """The data columns of the given adds, in logical names, always read
     with :func:`_data_schema` (no schema inference).  DV-carrying adds
     read through ``read_files_minus_dv``, so deleted rows never show.
-    ``file_col`` appends each row's source file (a URI for plain files,
-    an absolute path for DV files)."""
+    ``file_col`` appends each row's file as the plain absolute path that
+    ``deltalite_dv._file_uri`` gives its add, plain and DV files alike;
+    ``pos_col`` appends its parquet row index."""
+    from pyspark_anomaly_detection_spark.io.deltalite_dv import (
+        _scan_with_positions,
+        read_files_minus_dv,
+    )
+
     schema = _data_schema(snap)
     plain = [rel for rel, a in adds.items() if not a.get("deletionVector")]
     dv_adds = {
@@ -1125,20 +1132,15 @@ def _read_files(
     }
     pieces = []
     if plain:
-        df = spark.read.schema(schema).parquet(
-            *[os.path.join(table_path, rel) for rel in plain]
+        pieces.append(
+            _scan_with_positions(
+                spark, table_path, plain, schema, file_col, pos_col
+            )
         )
-        if file_col:
-            df = df.withColumn(file_col, F.input_file_name())
-        pieces.append(df)
     if dv_adds:
-        from pyspark_anomaly_detection_spark.io.deltalite_dv import (
-            read_files_minus_dv,
-        )
-
         pieces.append(
             read_files_minus_dv(
-                spark, table_path, dv_adds, schema, file_col=file_col
+                spark, table_path, dv_adds, schema, file_col, pos_col
             )
         )
     return _to_logical(_union(pieces), snap)
@@ -1185,13 +1187,14 @@ def _read_adds(
     table_path: str,
     adds: dict[str, dict[str, Any]],
     snap: "_Snapshot",
+    file_col: str | None = None,
 ) -> DataFrame:
     """Full logical rows of the given adds: :func:`_read_files` per
     partition group with the group's values reinjected (the data files
     of a partitioned table do NOT contain the partition columns —
     readers reconstruct them from ``add.partitionValues``, exactly as
     Delta does).  Column mapping, partitions and deletion vectors all
-    compose here."""
+    compose here; ``file_col`` is :func:`_read_files`'."""
     from pyspark.sql.types import StructType
 
     if not adds:
@@ -1201,7 +1204,9 @@ def _read_adds(
     return _union(
         [
             _with_partitions(
-                _read_files(spark, table_path, group, snap), snap, pv
+                _read_files(spark, table_path, group, snap, file_col),
+                snap,
+                pv,
             )
             for pv, group in _partition_groups(dict(sorted(adds.items())))
         ]

@@ -1,62 +1,70 @@
 """Row-level DML on deltalite tables: DELETE, UPDATE, MERGE.
 
-Delta's row-level mutations without deletion vectors are COPY-ON-WRITE:
-find the data files that contain matching rows, rewrite ONLY those
-files with the mutation applied, and commit remove+add atomically —
-untouched files (the overwhelming majority under a selective predicate
-at 100 TB) are never read twice, never rewritten, and stay byte-
-identical.  This module implements that plan shape on the deltalite
-log:
+The three verbs are copy-on-write and share one planner.  A verb
+supplies only how it classifies a target row; the rest is common:
 
-* a single scan with ``input_file_name()`` finds the touched files —
-  driver state is one row per touched FILE, never per row;
-* the rewrite reads only the touched files, applies the mutation
-  declaratively (filter / CASE WHEN via Spark SQL expressions), and
-  writes one commit's worth of new files;
-* the commit removes exactly the touched files and adds the rewrites
-  (``dataChange: true``), so time travel still sees the pre-DML rows
-  and the change feed (:func:`~pyspark_anomaly_detection_spark.io.
-  deltalite.read_delta_changes`) reports the rewrite as
-  delete+insert — exactly how a real non-DV Delta DELETE surfaces.
+1. **Classify.**  ``classify(rows)`` takes full logical target rows
+   (data columns plus the partition values of each row's file) and tags
+   each with ``_dml_action``: ``keep``, ``delete``, ``update`` or
+   ``move`` (an update that changes the row's partition).  A ``post``
+   map gives the post-image expression of every column an update
+   changes.  DELETE and UPDATE classify by their predicate; MERGE by one
+   left join of the target to its source, applying its clause matrix.
+2. **Census.**  :func:`_census` is the one driver action over the
+   target: the classified rows of every active file, counted per
+   (file, action, matched).  It yields the touched files and every
+   ``rows_*`` counter, and the driver holds one row per touched file,
+   never one per table row.  MERGE runs one action before it, the
+   source check, which rejects duplicate keys and decides the
+   broadcast.
+3. **Materialize.**  :func:`_rewrite_commit` rewrites only the touched
+   files, per partition group: ``keep`` rows as they are, ``update``
+   rows as their post-image.  ``move`` rows and MERGE inserts are
+   written hive-style into their own partitions.  When the table records
+   a change feed, :func:`_change_feed` builds its rows from the same
+   classified touched rows.  The commit removes the touched files and
+   adds the rewrites atomically: untouched files stay byte-identical and
+   time travel still sees the pre-DML rows.  A merge-on-read
+   materialization would be a second writer for the same classified
+   rows (deletion vectors from their positions), not a second planner.
 
 Data files are read, staged and harvested only through deltalite's
-data-file layer: ``_read_files`` / ``_read_adds`` read touched files
-with the committed schema (physical names renamed to logical on
-column-mapped tables, deletion vectors subtracted), ``_stage`` writes
-each rewrite, insert set or ``_change_data`` set and harvests its
-``add``/``cdc`` actions, ``_map_groups`` runs the partition groups, and
+data-file layer: ``_read_files`` / ``_read_adds`` read with the
+committed schema (logical names, deletion vectors subtracted, each
+row's file named as ``deltalite_dv._file_uri`` names its add),
+``_stage`` writes each rewrite, insert set or ``_change_data`` set and
+harvests its actions, ``_map_groups`` runs the partition groups, and
 ``_enforce_staged`` checks constraints on the staged files before the
 commit.
 
-Predicates/assignments are Spark SQL expression strings over DATA
-columns; mutating partitioned tables is supported for predicates over
-data columns (partition columns live only in the log, so a predicate
-naming one raises up front rather than silently matching nothing).
+Predicates and assignments are Spark SQL expression strings over data
+columns.  Partition columns live only in the log, so a predicate naming
+one raises up front rather than silently matching nothing; a string
+literal that merely spells the name does not count.
 
-MERGE implements the classic upsert contract (``WHEN MATCHED THEN
-UPDATE SET * / WHEN NOT MATCHED THEN INSERT *``): each matched target
-row is updated IN PLACE with its source row's values (duplicate-key
-target rows keep their cardinality, exactly Delta's semantics),
-unmatched source rows append, all in ONE commit; ambiguous sources
-(duplicate keys) are rejected, mirroring Delta's
-``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE``.  The clause
-matrix: ``WHEN MATCHED [AND cond] THEN UPDATE | DELETE``, insert-only
-merges (matched rows — and their files — untouched), no-insert merges,
-``WHEN NOT MATCHED BY SOURCE`` (delete, or UPDATE SET over the old
-row), partition-MOVING matched updates (old group drops the row, the
-updated row re-enters through the hive-layout insert path),
-token-validated ``src.<col>`` condition translation, identity-column
-allocation for the insert branch, and a size-conditional source
-broadcast (big sources fall back to AQE-planned joins).
+MERGE implements Delta's clause matrix: ``WHEN MATCHED [AND cond] THEN
+UPDATE SET * | DELETE`` (matched target rows update in place, and
+duplicate target keys keep their cardinality), ``WHEN NOT MATCHED THEN
+INSERT *``, insert-only and no-insert merges, ``WHEN NOT MATCHED BY
+SOURCE [AND cond] THEN DELETE | UPDATE SET``, partition-moving matched
+updates, identity allocation for inserted rows, and a source broadcast
+while the source is small.  A source with duplicate keys is rejected,
+as Delta's ``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE``
+rejects it.
 """
 
 from __future__ import annotations
 
+import json
+import operator
 import os
+import re
 import uuid
-from typing import Any
+from collections import Counter
+from functools import reduce
+from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_anomaly_detection_spark.io import deltalite
@@ -66,11 +74,30 @@ from pyspark_anomaly_detection_spark.io.deltalite import (
     _read_files,
     _snapshot_state,
 )
+from pyspark_anomaly_detection_spark.io.deltalite_dv import _file_uri
+from pyspark_anomaly_detection_spark.io.deltalite_generated import (
+    generated_columns_of,
+)
+from pyspark_anomaly_detection_spark.io.deltalite_identity import (
+    allocate_identity,
+    identity_columns_of,
+)
+
+# one single-quoted SQL string literal ('' is the in-literal escape)
+_SQL_LITERAL = re.compile(r"('(?:[^']|'')*')")
+
+Classifier = Callable[[DataFrame], DataFrame]
 
 
 def _adds(snap, rels) -> dict[str, dict[str, Any]]:
     """The snapshot's add actions of ``rels``, in ``rels`` order."""
     return {rel: snap.adds[rel] for rel in rels}
+
+
+def _mentions(sql: str, pattern: str) -> bool:
+    """True when ``pattern`` matches ``sql`` outside its string
+    literals."""
+    return any(re.search(pattern, seg) for seg in _SQL_LITERAL.split(sql)[::2])
 
 
 def _translate_matched_condition(
@@ -81,13 +108,11 @@ def _translate_matched_condition(
     aliased, ``src.<key>`` → the bare key (equal on a matched row by the
     ON clause), bare names read the target.
 
-    A real token pass, not string replacement (ADVICE r12 medium):
-    ``src.<name>`` is matched on word boundaries so ``src.id`` never
-    corrupts ``src.id_ts``, single-quoted SQL string literals pass
-    through untouched ('' is the in-literal escape), and a ``src.*``
-    reference that is not an aliased source column raises instead of
-    silently reading the target."""
-    import re
+    A token pass, not string replacement: ``src.<name>`` is matched on
+    word boundaries so ``src.id`` never corrupts ``src.id_ts``, string
+    literals pass through untouched, and a ``src.*`` reference that is
+    not an aliased source column raises instead of silently reading the
+    target."""
 
     def repl(m: "re.Match[str]") -> str:
         col = m.group(1)
@@ -102,31 +127,15 @@ def _translate_matched_condition(
             )
         return f"_dml_src_{col}"
 
-    out: list[str] = []
-    for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", cond)):
-        out.append(seg if i % 2 else re.sub(r"\bsrc\.(\w+)", repl, seg))
-    return "".join(out)
-
-
-def _scan_file_to_local(path: str) -> str:
-    """``input_file_name()`` URI → plain decoded local path: strip the
-    ``file:`` scheme and percent-DECODE URI escapes — hive partition
-    directories with special characters arrive URI-encoded from the
-    scan but live decoded on disk and in the log's add paths (round
-    13).  ``unquote`` (not ``unquote_plus``) keeps literal ``+``."""
-    import re
-    from urllib.parse import unquote
-
-    if path.startswith("file:"):
-        path = re.sub(r"^file:/*", "/", path)
-    return unquote(path)
+    return "".join(
+        seg if i % 2 else re.sub(r"\bsrc\.(\w+)", repl, seg)
+        for i, seg in enumerate(_SQL_LITERAL.split(cond))
+    )
 
 
 def _guard_partition_columns(predicate: str, part_cols: list[str]) -> None:
-    import re
-
     for col in part_cols:
-        if re.search(rf"\b{re.escape(col)}\b", predicate):
+        if _mentions(predicate, rf"\b{re.escape(col)}\b"):
             raise ValueError(
                 f"deltalite DML predicate references partition column "
                 f"'{col}' — partition columns live only in the log; use "
@@ -135,129 +144,266 @@ def _guard_partition_columns(predicate: str, part_cols: list[str]) -> None:
             )
 
 
-def _resolved_add_keys(table_path: str, rels) -> dict[str, str]:
-    """Resolved absolute file path → add key, for mapping scan-reported
-    file paths back to the log's add actions.  Handles both relative
-    adds and the ABSOLUTE adds a shallow CLONE commits."""
-    return {
-        os.path.abspath(os.path.join(table_path, rel)): rel for rel in rels
-    }
-
-
-def _touched_files(
-    spark: SparkSession, table_path: str, snap, predicate: str
-) -> tuple[list[str], int]:
-    """(relative paths of active files containing at least one LIVE row
-    matching ``predicate``, total matching live rows) — deletion-vector
-    rows excluded.  ONE distributed scan serves both answers: a per-file
-    COUNT groupBy gives the touched set, and files outside it contribute
-    zero matches by definition, so the sum over touched files IS the
-    global match count.  Driver result stays bounded by file count."""
-    if not snap.adds:
-        return [], 0
-    active = _adds(snap, sorted(snap.adds))
-    scan = (
-        _read_files(spark, table_path, active, snap, file_col="_dml_file")
-        .filter(F.expr(predicate))
-        .groupBy("_dml_file")
-        .count()
+def _check_assignments(
+    snap, assignments: dict[str, str], verb: str
+) -> None:
+    """Refuse what Delta refuses to assign: a generated or identity
+    column, a partition column, a source of a generated partition
+    column (the row would have to change partition), or a column the
+    table does not have."""
+    gen = generated_columns_of(snap.schema_json)
+    idcols = identity_columns_of(snap.schema_json)
+    for col in assignments:
+        if col in gen:
+            raise ValueError(
+                f"{verb} cannot assign generated column '{col}' — it is "
+                f"GENERATED ALWAYS AS ({gen[col]}) and recomputes from "
+                "its sources (Delta's rule)"
+            )
+        if col in idcols:
+            raise ValueError(
+                f"{verb} cannot assign identity column '{col}' — it is "
+                "GENERATED ALWAYS AS IDENTITY (Delta's rule)"
+            )
+        if col in snap.part_cols:
+            raise ValueError(
+                f"{verb} cannot assign partition column '{col}' — the "
+                "row would move between partitions"
+            )
+        for pcol in snap.part_cols:
+            expr = gen.get(pcol)
+            if expr and _mentions(expr, rf"\b{re.escape(col)}\b"):
+                raise ValueError(
+                    f"{verb} cannot assign column '{col}': partition "
+                    f"column '{pcol}' is GENERATED ALWAYS AS ({expr}) "
+                    "from it, so the row would move between partitions "
+                    "(a MERGE update can move rows)"
+                )
+    unknown = set(assignments) - set(
+        deltalite._data_schema(snap, physical=False).fieldNames()
     )
-    resolved = _resolved_add_keys(table_path, active)
-    out = []
-    n_match = 0
-    for r in scan.collect():
-        path = _scan_file_to_local(r._dml_file)
-        out.append(resolved[os.path.abspath(path)])
-        n_match += r["count"]
-    return sorted(out), int(n_match)
+    if unknown:
+        raise ValueError(
+            f"{verb} cannot assign unknown column(s) {sorted(unknown)}"
+        )
 
 
 def _cdf_enabled(snap) -> bool:
     """True when the table records row-level change data (Delta's
     ``delta.enableChangeDataFeed`` property — set via
-    ``set_table_properties``).  Only then do DML rewrites pay the extra
-    touched-file scan that materializes ``_change_data`` files; without
-    it the batch CDF reconstructs file-level changes from add/remove
-    actions as before."""
+    ``set_table_properties``).  Only then do DML commits carry
+    ``_change_data`` files; without it the batch CDF reconstructs
+    file-level changes from add/remove actions."""
     conf = ((snap.meta or {}).get("configuration") or {})
     return conf.get("delta.enableChangeDataFeed") == "true"
+
+
+def _with_generated(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """``df`` with each generated column (re)computed from its
+    expression: the expression, not a stated value, wins."""
+    for col, expr in exprs.items():
+        df = df.withColumn(col, F.expr(expr))
+    return df
+
+
+class _Census(NamedTuple):
+    """What the census counted: the files holding a row that changes
+    (``touched``) and those holding a row a MERGE source row matched
+    (``matched``), live rows per (action, matched), and the distinct
+    matched MERGE keys."""
+
+    touched: list[str]
+    matched: list[str]
+    rows: Counter
+    keys: int
+
+    def n(self, *actions: str, matched: "bool | None" = None) -> int:
+        """Rows with one of ``actions`` (any, when none is given)."""
+        return sum(
+            v
+            for (a, m), v in self.rows.items()
+            if (not actions or a in actions) and matched in (None, m)
+        )
+
+
+def _census(
+    spark: SparkSession,
+    table_path: str,
+    snap,
+    adds: dict[str, dict[str, Any]],
+    classify: Classifier,
+    key: "str | None" = None,
+    partition_values: bool = False,
+) -> _Census:
+    """The one driver action over the target: the classified rows of
+    ``adds``, counted per (file, action, matched).  Only changing rows,
+    and kept rows a MERGE source row matched, reach the count, so the
+    result is bounded by the touched and matched files.  With ``key``
+    (MERGE) a row is matched when the join found it a source row, and a
+    grand-total grouping set adds the distinct matched keys: a key may
+    span files, so per-file counts cannot be summed into it.
+
+    Rows carry their partition values only when ``classify`` reads them
+    (MERGE's partition-move test): that read goes per partition group,
+    while data columns alone come from one scan of every file."""
+    if not adds:
+        return _Census([], [], Counter(), 0)
+    read = _read_adds if partition_values else _read_files
+    is_matched = F.col("_dml_m").isNotNull() if key else F.lit(False)
+    rows = (
+        classify(read(spark, table_path, adds, snap, file_col="_dml_file"))
+        .withColumn("_dml_matched", is_matched)
+        .filter((F.col("_dml_action") != "keep") | F.col("_dml_matched"))
+    )
+    dims = ["_dml_file", "_dml_action", "_dml_matched"]
+    n_rows = F.count("*").alias("n")
+    if key:
+        counted = rows.groupingSets([dims, []], *dims).agg(
+            n_rows,
+            F.countDistinct(F.when(F.col("_dml_matched"), F.col(key))).alias(
+                "nk"
+            ),
+        )
+    else:
+        counted = rows.groupBy(*dims).agg(n_rows)
+    rel_of = {_file_uri(table_path, rel): rel for rel in adds}
+    touched: set[str] = set()
+    matched: set[str] = set()
+    counts: Counter = Counter()
+    keys = 0
+    for r in counted.collect():
+        if r._dml_file is None:  # the grand total
+            keys = int(r.nk)
+            continue
+        rel = rel_of[r._dml_file]
+        counts[r._dml_action, r._dml_matched] += int(r.n)
+        if r._dml_action != "keep":
+            touched.add(rel)
+        if r._dml_matched:
+            matched.add(rel)
+    return _Census(sorted(touched), sorted(matched), counts, keys)
+
+
+def _change_feed(
+    snap,
+    changed: DataFrame,
+    post: dict[str, Column],
+    census: _Census,
+    inserts: "DataFrame | None",
+) -> "DataFrame | None":
+    """The commit's change rows (logical columns plus ``_change_type``),
+    built from ``changed``, the classified rows of the touched files:
+    ``update_preimage``/``update_postimage`` pairs for updated and moved
+    rows (a mover's postimage carries its new partition values),
+    ``delete`` rows, and ``insert`` rows.  Generated columns recompute
+    in every postimage and insert, as they do in the rewrite.  Only the
+    kinds the census saw are built."""
+    gen = generated_columns_of(snap.schema_json)
+    cols = [f["name"] for f in json.loads(snap.schema_json)["fields"]]
+    action = F.col("_dml_action")
+
+    def tagged(df: DataFrame, kind: str) -> DataFrame:
+        return df.select(*cols).withColumn("_change_type", F.lit(kind))
+
+    pieces = []
+    if census.n("update", "move"):
+        updated = changed.filter(action.isin("update", "move"))
+        postimage = updated.select(
+            *[post.get(c, F.col(c)).alias(c) for c in cols]
+        )
+        pieces += [
+            tagged(updated, "update_preimage"),
+            tagged(_with_generated(postimage, gen), "update_postimage"),
+        ]
+    if census.n("delete"):
+        pieces.append(tagged(changed.filter(action == "delete"), "delete"))
+    if inserts is not None:
+        pieces.append(tagged(_with_generated(inserts, gen), "insert"))
+    return deltalite._union(pieces) if pieces else None
 
 
 def _rewrite_commit(
     spark: SparkSession,
     table_path: str,
-    touched: list[str],
-    transform,
+    snap,
+    census: _Census,
+    classify: Classifier,
+    post: dict[str, Column],
     operation: str,
-    extra_adds_df: DataFrame | None = None,
-    snap=None,
+    inserts: "DataFrame | None" = None,
     new_schema_json: "str | None" = None,
-    cdc_df: "DataFrame | None" = None,
 ) -> dict[str, int]:
-    """Copy-on-write commit: rewrite ``touched`` files through
-    ``transform(df, partition_values)`` — called per partition group
-    with the group's LOGICAL partition values, so MERGE can route rows
-    that leave the group — optionally append ``extra_adds_df`` rows,
-    remove+add atomically.  When ``new_schema_json`` is given the commit
-    also carries a metaData action with that schemaString (same table
-    id / partition columns / configuration) — MERGE's identity path
-    bumps the high-water mark in the SAME commit as the inserted rows,
-    so a reader of any version sees marks consistent with the data.
-    ``cdc_df`` (logical rows plus ``_change_type``) is staged as the
-    commit's ``_change_data`` files.
+    """Materialize a classified change set as one copy-on-write commit.
 
-    Touched files of a partitioned table carry NO partition columns
-    (Delta contract — the values live only in the log), so each
-    partition group's rewrite is stamped with THAT group's
-    partitionValues; inserts are written hive-partitioned."""
-    snap = snap if snap is not None else _snapshot_state(table_path)
+    Each partition group of ``census.touched`` is reread, classified
+    again and staged with its ``keep`` rows and the post-image of its
+    ``update`` rows, stamped with the group's partitionValues (data
+    files carry no partition columns — Delta's contract).  ``move`` rows
+    join ``inserts``, which are written hive-style into their own
+    partitions, or folded into the single rewrite of an unpartitioned
+    table.  Generated data columns recompute on every staged row;
+    generated partition columns are computed for routing only.  When the
+    table records a change feed, :func:`_change_feed`'s rows are staged
+    as the commit's ``_change_data`` files.  ``new_schema_json`` (MERGE's
+    bumped identity marks) commits a metaData action in the same commit
+    as the rows, so a reader of any version sees marks consistent with
+    the data."""
     version = snap.version + 1
     commit_dir = deltalite._commit_dir(version)
     mapping = deltalite._column_mapping_of(snap.schema_json)
-    logical = {p: n for n, p in mapping.items()}
-
-    # generated columns recompute on every rewrite (Delta's UPDATE
-    # semantics: the expression, not the stale/stated value, wins) —
-    # one withColumn per generated column, stays in codegen.  Generated
-    # PARTITION columns never live in data files (their value is the
-    # group's partitionValues, reinjected on read), so the data-file
-    # transform must NOT materialize them; the hive-layout insert path
-    # computes them for ROUTING only (partitionBy strips them again).
-    from pyspark_anomaly_detection_spark.io.deltalite_generated import (
-        generated_columns_of,
+    gen = generated_columns_of(snap.schema_json)
+    data_gen = {c: e for c, e in gen.items() if c not in snap.part_cols}
+    data_cols = deltalite._data_schema(snap, physical=False).fieldNames()
+    touched = _adds(snap, census.touched)
+    action = F.col("_dml_action")
+    cdf = _cdf_enabled(snap)
+    changed = (
+        classify(_read_adds(spark, table_path, touched, snap))
+        if cdf or census.n("move")
+        else None
     )
 
-    all_gen = generated_columns_of(snap.schema_json)
-    part_gen = {c: e for c, e in all_gen.items() if c in snap.part_cols}
-    gen_exprs = {c: e for c, e in all_gen.items() if c not in snap.part_cols}
-    if gen_exprs:
-        inner_transform = transform
+    new_rows = inserts
+    if census.n("move"):
+        # a mover's new row: its post-image, with its new partition
+        # values (generated ones recompute below)
+        routed = [p for p in snap.part_cols if p not in gen]
+        movers = changed.filter(action == "move").select(
+            *[post.get(c, F.col(c)).alias(c) for c in data_cols + routed]
+        )
+        new_rows = (
+            movers
+            if new_rows is None
+            else new_rows.unionByName(movers, allowMissingColumns=True)
+        )
+    if new_rows is not None:
+        # generated partition columns route the hive-layout write
+        new_rows = _with_generated(new_rows, gen)
 
-        def transform(df: DataFrame, pv) -> DataFrame:  # noqa: F811
-            out = inner_transform(df, pv)
-            for col, expr in gen_exprs.items():
-                out = out.withColumn(col, F.expr(expr))
-            return out
-
-    if extra_adds_df is not None:
-        for col, expr in gen_exprs.items():
-            extra_adds_df = extra_adds_df.withColumn(col, F.expr(expr))
-        for col, expr in part_gen.items():
-            if col not in extra_adds_df.columns:
-                extra_adds_df = extra_adds_df.withColumn(col, F.expr(expr))
-
-    groups = deltalite._partition_groups(_adds(snap, touched))
-    # an unpartitioned table's inserts fold into its single rewrite
-    fold = extra_adds_df is not None and not snap.part_cols and bool(groups)
+    groups = deltalite._partition_groups(touched)
+    # an unpartitioned table's new rows fold into its single rewrite
+    fold = new_rows is not None and not snap.part_cols and bool(groups)
 
     def rewrite(i: int, group) -> list[dict[str, Any]]:
         pv, group_adds = group
-        kept = transform(
-            _read_files(spark, table_path, group_adds, snap),
-            {logical.get(k, k): v for k, v in pv.items()},
+        rows = classify(
+            deltalite._with_partitions(
+                _read_files(spark, table_path, group_adds, snap), snap, pv
+            )
         )
+        kept = rows.filter(action.isin("keep", "update")).select(
+            *[
+                F.when(action == "update", post[c])
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in post
+                else F.col(c)
+                for c in data_cols
+            ]
+        )
+        kept = _with_generated(kept, data_gen)
         if fold:
-            kept = kept.unionByName(extra_adds_df)
+            kept = kept.unionByName(new_rows)
         return deltalite._stage(
             table_path,
             f"{commit_dir}/g{i}" if snap.part_cols else commit_dir,
@@ -266,14 +412,14 @@ def _rewrite_commit(
             pv=pv,
         )
 
-    adds = [a for staged in deltalite._map_groups(rewrite, groups) for a in staged]
-    if extra_adds_df is not None and not fold:
-        # a pure-insert MERGE on an unpartitioned table, or inserts
-        # routed hive-style to their own partitions
+    adds = [
+        a for staged in deltalite._map_groups(rewrite, groups) for a in staged
+    ]
+    if new_rows is not None and not fold:
         adds += deltalite._stage(
             table_path,
             f"{commit_dir}/inserts" if snap.part_cols else commit_dir,
-            extra_adds_df,
+            new_rows,
             mapping=mapping,
             part_cols=snap.part_cols,
         )
@@ -281,18 +427,16 @@ def _rewrite_commit(
     # the staged files (never the table) before the commit
     deltalite._enforce_staged(spark, table_path, adds, snap, operation)
 
-    # row-level change data: the commit's exact change set as
-    # spec-shaped ``_change_data`` files + ``cdc`` actions.  Per the
-    # protocol, when a commit carries cdc actions they are the COMPLETE
-    # change description — CDF readers use them INSTEAD of the
-    # file-level add/remove reconstruction, so a 1-row UPDATE in a
-    # 1M-row file feeds exactly 1 preimage + 1 postimage downstream.
+    # row-level change data: when a commit carries cdc actions they are
+    # its COMPLETE change description (the protocol's rule), so a 1-row
+    # UPDATE in a 1M-row file feeds exactly 1 preimage + 1 postimage
     cdc = []
-    if cdc_df is not None:
+    feed = _change_feed(snap, changed, post, census, inserts) if cdf else None
+    if feed is not None:
         cdc = deltalite._stage(
             table_path,
             f"_change_data/{commit_dir}",
-            cdc_df,
+            feed,
             mapping=mapping,
             part_cols=snap.part_cols,
             data_change=False,
@@ -334,6 +478,36 @@ def _rewrite_commit(
     }
 
 
+def _predicate_dml(
+    spark: SparkSession,
+    table_path: str,
+    snap,
+    predicate: str,
+    action: str,
+    post: dict[str, Column],
+    operation: str,
+) -> tuple[dict[str, int], _Census]:
+    """DELETE and UPDATE: rows whose predicate holds take ``action``;
+    rows where it is false or NULL are kept.  No commit when no row
+    matches."""
+    _guard_partition_columns(predicate, snap.part_cols)
+    hit = F.coalesce(F.expr(predicate), F.lit(False))
+
+    def classify(rows: DataFrame) -> DataFrame:
+        return rows.withColumn(
+            "_dml_action", F.when(hit, action).otherwise("keep")
+        )
+
+    census = _census(spark, table_path, snap, snap.adds, classify)
+    if not census.touched:
+        out = {"version": snap.version, "files_rewritten": 0, "files_added": 0}
+        return out, census
+    out = _rewrite_commit(
+        spark, table_path, snap, census, classify, post, operation
+    )
+    return out, census
+
+
 def delete_delta(
     spark: SparkSession, table_path: str, predicate: str
 ) -> dict[str, int]:
@@ -341,40 +515,11 @@ def delete_delta(
     containing matching rows.  Returns {'version', 'files_rewritten',
     'files_added', 'files_untouched', 'rows_deleted'}."""
     snap = _snapshot_state(table_path)
-    if snap.part_cols:
-        _guard_partition_columns(predicate, snap.part_cols)
-    touched, n_match = _touched_files(spark, table_path, snap, predicate)
-    if not touched:
-        return {
-            "version": snap.version,
-            "files_rewritten": 0,
-            "files_added": 0,
-            "files_untouched": len(snap.adds),
-            "rows_deleted": 0,
-        }
-    cdc_df = None
-    if _cdf_enabled(snap):
-        # full logical rows (partition columns reinjected) of exactly
-        # the deleted set — one extra scan of ONLY the touched files
-        cdc_df = (
-            _read_adds(spark, table_path, _adds(snap, touched), snap)
-            .filter(F.expr(predicate))
-            .withColumn("_change_type", F.lit("delete"))
-        )
-    out = _rewrite_commit(
-        spark,
-        table_path,
-        touched,
-        # rows whose predicate is NULL are not deleted
-        lambda df, pv: df.filter(
-            ~F.coalesce(F.expr(predicate), F.lit(False))
-        ),
-        "DELETE",
-        snap=snap,
-        cdc_df=cdc_df,
+    out, census = _predicate_dml(
+        spark, table_path, snap, predicate, "delete", {}, "DELETE"
     )
-    out["files_untouched"] = len(snap.adds) - len(touched)
-    out["rows_deleted"] = n_match
+    out["files_untouched"] = len(snap.adds) - len(census.touched)
+    out["rows_deleted"] = census.n("delete")
     return out
 
 
@@ -391,105 +536,17 @@ def update_delta(
     (SQL's UPDATE semantics): ``SET v = v + 1, w = v`` sets ``w`` to the
     pre-update ``v``."""
     snap = _snapshot_state(table_path)
-    from pyspark_anomaly_detection_spark.io.deltalite_generated import (
-        generated_columns_of,
-    )
-
-    gen = generated_columns_of(snap.schema_json)
-    from pyspark_anomaly_detection_spark.io.deltalite_identity import (
-        identity_columns_of,
-    )
-
-    idcols = identity_columns_of(snap.schema_json)
-    for col in assignments:
-        if col in gen:
-            raise ValueError(
-                f"cannot UPDATE generated column '{col}' — it is "
-                f"GENERATED ALWAYS AS ({gen[col]}) and recomputes from "
-                "its sources (Delta's rule)"
-            )
-        if col in idcols:
-            raise ValueError(
-                f"cannot UPDATE identity column '{col}' — it is "
-                "GENERATED ALWAYS AS IDENTITY (Delta's rule)"
-            )
-    if snap.part_cols:
-        _guard_partition_columns(predicate, snap.part_cols)
-        import re as _re
-
-        for col in assignments:
-            if col in snap.part_cols:
-                raise ValueError(
-                    f"cannot UPDATE partition column '{col}'"
-                )
-            # a generated PARTITION column's value is the file group's
-            # committed partitionValues — updating one of its SOURCES
-            # would silently leave the row in the stale partition
-            for pcol in snap.part_cols:
-                expr = gen.get(pcol)
-                if expr and _re.search(rf"\b{_re.escape(col)}\b", expr):
-                    raise ValueError(
-                        f"cannot UPDATE column '{col}': partition "
-                        f"column '{pcol}' is GENERATED ALWAYS AS "
-                        f"({expr}) from it — the update would move "
-                        "rows between partitions; use MERGE (whose "
-                        "partition-move path handles this) instead"
-                    )
-    unknown = set(assignments) - set(
-        deltalite._data_schema(snap, physical=False).fieldNames()
-    )
-    if unknown:
-        raise ValueError(f"cannot UPDATE unknown column(s) {sorted(unknown)}")
-    touched, n_match = _touched_files(spark, table_path, snap, predicate)
-    if not touched:
-        return {
-            "version": snap.version,
-            "files_rewritten": 0,
-            "files_added": 0,
-            "rows_updated": 0,
-        }
-
-    def assign(df: DataFrame, hit) -> DataFrame:
-        # ONE select over the old row: no assignment sees another's result
-        return df.select(
-            *[
-                F.when(hit, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-
-    def apply_set(df: DataFrame, pv) -> DataFrame:
-        # the predicate is evaluated once, before any column changes
-        marked = df.withColumn("_dml_hit", F.expr(predicate))
-        return assign(marked, F.col("_dml_hit")).drop("_dml_hit")
-
-    cdc_df = None
-    if _cdf_enabled(snap):
-        pre = _read_adds(
-            spark, table_path, _adds(snap, touched), snap
-        ).filter(F.expr(predicate))
-        # generated columns recompute after the assignments, mirroring
-        # the rewrite itself
-        post = assign(pre, F.lit(True))
-        for col, expr in gen.items():
-            post = post.withColumn(col, F.expr(expr))
-        cdc_df = pre.withColumn(
-            "_change_type", F.lit("update_preimage")
-        ).unionByName(
-            post.withColumn("_change_type", F.lit("update_postimage"))
-        )
-    out = _rewrite_commit(
+    _check_assignments(snap, assignments, "UPDATE")
+    out, census = _predicate_dml(
         spark,
         table_path,
-        touched,
-        apply_set,
+        snap,
+        predicate,
+        "update",
+        {c: F.expr(e) for c, e in assignments.items()},
         "UPDATE",
-        snap=snap,
-        cdc_df=cdc_df,
     )
-    out["rows_updated"] = n_match
+    out["rows_updated"] = census.n("update")
     return out
 
 
@@ -506,8 +563,7 @@ def merge_delta(
     not_matched_by_source_set: "dict[str, str] | None" = None,
 ) -> dict[str, int]:
     """MERGE INTO target USING source ON target.key = source.key —
-    one copy-on-write commit, with Delta's standard clause variants
-    (rounds 12-13):
+    one copy-on-write commit, with Delta's standard clause variants:
 
     * ``matched="update"`` (default) — WHEN MATCHED THEN UPDATE SET *:
       matched target rows update in place (duplicate-key target rows
@@ -524,27 +580,27 @@ def merge_delta(
       guard).
     * ``insert=False`` — no WHEN NOT MATCHED clause: unmatched source
       rows are ignored.
-    * ``not_matched_by_source="delete"|"update"`` (round 13) — Delta's
-      WHEN NOT MATCHED BY SOURCE clause: target rows whose key has NO
-      source row are deleted, or updated via
-      ``not_matched_by_source_set`` ({column: SQL expr} over the OLD
-      row — the SCD soft-delete / staleness-flag shape).  With
-      ``matched="update"`` + ``insert=True`` + delete-by-source this is
-      the full snapshot-sync MERGE: afterwards the table EQUALS the
-      source.  The optional condition references TARGET columns only
-      (no source row exists to reference).  Cost note, same as real
-      Delta's: without a selective condition every file holding an
-      unmatched row is rewritten.
+    * ``not_matched_by_source="delete"|"update"`` — Delta's WHEN NOT
+      MATCHED BY SOURCE clause: target rows whose key has NO source row
+      are deleted, or updated via ``not_matched_by_source_set``
+      ({column: SQL expr} over the OLD row — the SCD soft-delete /
+      staleness-flag shape).  With ``matched="update"`` + ``insert=True``
+      + delete-by-source this is the full snapshot-sync MERGE:
+      afterwards the table EQUALS the source.  The optional condition
+      references TARGET columns only (no source row exists to
+      reference).  Cost note, same as real Delta's: without a selective
+      condition every file holding an unmatched row is rewritten.
 
     Duplicate source keys raise (Delta's multiple-source-rows-match
     error).  Source must carry the target's full schema (minus identity
-    columns, which the insert branch allocates).
+    columns, which the insert branch allocates, and generated columns,
+    which recompute).
 
-    Partitioned tables are supported (round 10) as long as the merge
-    key is a DATA column; a matched UPDATE row whose source partition
-    values differ MOVES partitions (round 13: delete from the old
-    group's rewrite + insert into the new partition); inserts land in
-    their own partitions via a hive-layout write."""
+    Partitioned tables are supported as long as the merge key is a DATA
+    column; a matched UPDATE row whose source partition values differ
+    MOVES partitions (it leaves its old group's rewrite and enters its
+    new partition with the inserts); inserts land in their own
+    partitions via a hive-layout write."""
     if matched not in ("update", "delete", None):
         raise ValueError(
             f"merge_delta: matched must be 'update', 'delete', or None, "
@@ -576,26 +632,21 @@ def merge_delta(
         raise ValueError(
             "merge_delta: not_matched_by_source_set with a DELETE clause"
         )
-    if not_matched_by_source_condition is not None:
-        import re as _re
-
-        if _re.search(r"\bsrc\.", not_matched_by_source_condition):
-            raise ValueError(
-                "merge_delta: not_matched_by_source_condition cannot "
-                "reference src.* — no source row exists for these rows"
-            )
+    if not_matched_by_source_condition is not None and _mentions(
+        not_matched_by_source_condition, r"\bsrc\."
+    ):
+        raise ValueError(
+            "merge_delta: not_matched_by_source_condition cannot "
+            "reference src.* — no source row exists for these rows"
+        )
     if matched is None and not insert and not_matched_by_source is None:
         raise ValueError("merge_delta: no clauses — nothing to do")
     snap = _snapshot_state(table_path)
-    from pyspark_anomaly_detection_spark.io.deltalite_identity import (
-        identity_columns_of,
-    )
-
+    part_cols = snap.part_cols
     # identity columns (GENERATED ALWAYS AS IDENTITY): the source must
-    # not provide them; the UPDATE branch keeps the target's values; the
-    # INSERT branch allocates above the committed high-water mark with
-    # write_delta's distributed per-partition-offset scheme, and the
-    # bumped mark commits atomically with the rows (new_schema_json).
+    # not provide them, the UPDATE branch keeps the target's values, and
+    # the INSERT branch allocates above the committed high-water mark
+    # (the bumped mark commits atomically with the rows)
     idcols = identity_columns_of(snap.schema_json)
     for col in idcols:
         if col in source.columns:
@@ -609,34 +660,43 @@ def merge_delta(
             "merge_delta: the merge key cannot be an identity column — "
             "the source cannot carry GENERATED ALWAYS values to match on"
         )
-    # GENERATED columns the source omits behave like identity columns
-    # in the plumbing (round 14): never read from the source — the
-    # rewrite recomputes them from their expressions anyway, so a
-    # source that provides only the key (the NMBS-only merge shape) or
-    # only the generating columns works.  A source that DOES provide
-    # them keeps the old validation path (the recompute overwrites).
-    from pyspark_anomaly_detection_spark.io.deltalite_generated import (
-        generated_columns_of as _gen_of,
-    )
-
-    gen_map = _gen_of(snap.schema_json)
-    gencols = set(gen_map)
-    absent_gen = {c for c in gencols if c not in source.columns}
-    part_cols = snap.part_cols
     if key in part_cols:
         raise ValueError(
             "merge_delta: the merge key cannot be a partition column — "
             "keys are matched inside data files, and partition columns "
             "live only in the log"
         )
-    active = sorted(snap.adds)
+    if not_matched_by_source_set:
+        if key in not_matched_by_source_set:
+            raise ValueError(
+                "merge_delta: not_matched_by_source_set cannot assign "
+                f"'{key}' (merge key / identity columns never change)"
+            )
+        _check_assignments(
+            snap,
+            not_matched_by_source_set,
+            "merge_delta: not_matched_by_source_set",
+        )
+    if not_matched_by_source_condition is not None:
+        _guard_partition_columns(not_matched_by_source_condition, part_cols)
+    # GENERATED columns the source omits are never read from it: the
+    # rewrite recomputes them anyway, so a source that provides only the
+    # key (the NMBS-only shape) or only the generating columns works
+    gen = generated_columns_of(snap.schema_json)
+    absent_gen = {c for c in gen if c not in source.columns}
+    data_cols = deltalite._data_schema(snap, physical=False).fieldNames()
+    # the target columns a matched UPDATE SET * takes from the source
+    src_cols = [
+        c
+        for c in data_cols
+        if c != key and c not in idcols and c not in absent_gen
+    ]
     src = source.cache()
     try:
-        # ONE job over the (now cached) source serves both the ambiguity
-        # check and the source count (VERDICT r16 item 4: these were two
-        # separate jobs, the dupe check not even cache-backed): max
-        # per-key cardinality > 1 ⇔ duplicate keys, Σ = n_src.  groupBy
-        # buckets NULL keys together, so duplicate NULL keys reject too.
+        # ONE job over the cached source serves both the ambiguity check
+        # and the source count: max per-key cardinality > 1 ⇔ duplicate
+        # keys, Σ = n_src.  groupBy buckets NULL keys together, so
+        # duplicate NULL keys reject too.
         stats = (
             src.groupBy(key)
             .agg(F.count("*").alias("_c"))
@@ -649,518 +709,145 @@ def merge_delta(
                 "ambiguous MERGE (Delta rejects this too)"
             )
         n_src = int(stats.n or 0)  # == distinct keys (dupes rejected)
-        # 100 TB shape: the source side of every MERGE join is broadcast
-        # only while it is broadcast-sized (the common CDC-batch case);
-        # a big source falls back to plain joins and lets AQE pick the
-        # strategy — a forced broadcast of a huge source would OOM every
-        # executor (round 13)
-        _bcast = (
-            F.broadcast if n_src <= 1_000_000 else (lambda df: df)
-        )
-        # one scan finds the files holding matched LIVE keys (DV rows
-        # excluded); scan paths map back through the resolved-abspath →
-        # add-key table so shallow-clone absolute adds resolve too
-        resolved = _resolved_add_keys(table_path, active)
-        touched: list[str] = []
-        n_matched = 0
-        n_matched_keys = 0
-        if active and n_src:
-            scan = _read_files(
-                spark,
-                table_path,
-                _adds(snap, active),
-                snap,
-                file_col="_dml_file",
-            ).join(_bcast(src.select(key)), key, "left_semi")
-            # ONE pass serves both the match totals and the touched-file
-            # set (VERDICT r16 item 4: this used to be two jobs over the
-            # same scan+semi-join — a global agg, then a distinct file
-            # collect).  rollup(_dml_file) yields the per-file rows (the
-            # touched set) PLUS the grand-total row (file IS NULL) with
-            # the global row count and global distinct-key count — the
-            # per-file nk values cannot be summed (a key may span files),
-            # which is exactly what the rollup's total row avoids.
-            # input_file_name() is never NULL, so the NULL row is
-            # unambiguously the total.  Driver result stays bounded by
-            # file count + 1.
-            for r in (
-                scan.rollup("_dml_file")
-                .agg(
-                    F.count("*").alias("nr"),
-                    F.countDistinct(key).alias("nk"),
-                )
-                .collect()
-            ):
-                if r._dml_file is None:
-                    n_matched = r.nr
-                    n_matched_keys = r.nk
-                else:
-                    p = _scan_file_to_local(r._dml_file)
-                    touched.append(resolved[os.path.abspath(p)])
-            touched.sort()
-        target_cols = deltalite._data_schema(snap, physical=False).fieldNames()
-
-        # WHEN MATCHED THEN UPDATE SET *: update each matched target row
-        # IN PLACE — N duplicate-key target rows stay N rows, each taking
-        # the source values (real Delta's cardinality contract; the old
-        # anti-join-then-insert collapsed duplicates — ADVICE r9).  A
-        # match flag, not coalesce, so a NULL in the source still
-        # overwrites.
-        marked = _bcast(
+        # the source side of the join is broadcast only while it is
+        # broadcast-sized (the common CDC-batch case); a big source
+        # falls back to a plain join and AQE picks the strategy — a
+        # forced broadcast of a huge source would OOM every executor
+        bcast = F.broadcast if n_src <= 1_000_000 else (lambda df: df)
+        marked = bcast(
             src.select(
                 F.col(key),
                 F.lit(1).alias("_dml_m"),
+                *[F.col(c).alias(f"_dml_src_{c}") for c in src_cols],
+                # the source's partition values, to route partition-
+                # moving rows; GENERATED partition columns always
+                # recompute from their expression over the source
                 *[
-                    F.col(c).alias(f"_dml_src_{c}")
-                    for c in target_cols
-                    if c != key and c not in idcols and c not in absent_gen
-                ],
-                # source partition values ride along so the per-group
-                # rewrite can route partition-moving rows (below);
-                # GENERATED partition columns always recompute from
-                # their expression over the source's data columns
-                # (round 14) — the source need not carry them, and a
-                # carried value never overrides the expression
-                *[
-                    (
-                        F.expr(gen_map[c]) if c in gen_map else F.col(c)
-                    ).alias(f"_dml_s_{c}")
+                    (F.expr(gen[c]) if c in gen else F.col(c)).alias(
+                        f"_dml_s_{c}"
+                    )
                     for c in part_cols
                 ],
             )
         )
-        # WHEN MATCHED AND <cond>: target columns by bare name, source
-        # columns as src.<col> — translated onto the joined frame's
-        # _dml_src_ aliases by a token pass that validates every src.*
-        # reference (see _translate_matched_condition).  src.<key> is
-        # the target key itself (they are equal on a matched row), which
-        # the joined frame carries under the bare name.
-        aliased = {
-            c for c in target_cols if c != key and c not in idcols and c not in absent_gen
-        }
-        cond_col = (
+        is_matched = F.col("_dml_m").isNotNull()
+        cond = (
             F.expr(
                 _translate_matched_condition(
-                    matched_condition, key, aliased
+                    matched_condition, key, set(src_cols)
                 )
             )
             if matched_condition is not None
             else F.lit(True)
         )
-        hit = (F.col("_dml_m") == 1) & cond_col
-
-        # WHEN NOT MATCHED BY SOURCE (round 13): applies to target rows
-        # whose key has NO source row (left-join _dml_m is null); the
-        # optional condition references target columns only.  ONE
-        # anti-join scan finds the affected rows and their files — the
-        # inherent cost of the clause (absence of a match cannot be
-        # pruned), bounded by the condition's selectivity.
-        nmbs_cond_col = (
+        nmbs_cond = (
             F.expr(not_matched_by_source_condition)
             if not_matched_by_source_condition is not None
             else F.lit(True)
         )
-        nmbs_hit = F.col("_dml_m").isNull() & F.coalesce(
-            nmbs_cond_col, F.lit(False)
+        on_match = F.lit(matched or "keep")
+        if matched == "update" and part_cols:
+            # the source's partition tuple differs from the row's
+            differs = reduce(
+                operator.or_,
+                [
+                    ~F.col(f"_dml_s_{c}").eqNullSafe(F.col(c))
+                    for c in part_cols
+                ],
+            )
+            on_match = F.when(differs, "move").otherwise("update")
+        action = (
+            F.when(is_matched & F.coalesce(cond, F.lit(False)), on_match)
+            .when(
+                ~is_matched & F.coalesce(nmbs_cond, F.lit(False)),
+                F.lit(not_matched_by_source or "keep"),
+            )
+            .otherwise("keep")
         )
-        nmbs_touched: list[str] = []
-        n_nmbs = 0
-        if not_matched_by_source is not None:
-            for c in not_matched_by_source_set or {}:
-                if c == key or c in idcols:
-                    raise ValueError(
-                        "merge_delta: not_matched_by_source_set cannot "
-                        f"assign '{c}' (merge key / identity column)"
-                    )
-                if c in gencols:
-                    raise ValueError(
-                        f"merge_delta: cannot assign generated column "
-                        f"'{c}' in not_matched_by_source_set — it "
-                        "recomputes from its expression (Delta's rule)"
-                    )
-                for pcol in part_cols:
-                    pexpr = gen_map.get(pcol)
-                    if pexpr and __import__("re").search(
-                        rf"\b{__import__('re').escape(c)}\b", pexpr
-                    ):
-                        raise ValueError(
-                            "merge_delta: not_matched_by_source_set "
-                            f"cannot assign '{c}' — partition column "
-                            f"'{pcol}' is GENERATED from it and NMBS "
-                            "updates never move rows"
-                        )
-                if c in part_cols:
-                    raise ValueError(
-                        "merge_delta: not_matched_by_source_set cannot "
-                        f"assign partition column '{c}' — NOT MATCHED BY "
-                        "SOURCE updates never move rows"
-                    )
-                if c not in target_cols:
-                    raise ValueError(
-                        "merge_delta: not_matched_by_source_set assigns "
-                        f"unknown column '{c}'"
-                    )
-            if not_matched_by_source_condition is not None and part_cols:
-                _guard_partition_columns(
-                    not_matched_by_source_condition, part_cols
-                )
-            if active:
-                nscan = _read_files(
-                    spark,
-                    table_path,
-                    _adds(snap, active),
-                    snap,
-                    file_col="_dml_file",
-                ).join(_bcast(src.select(key)), key, "left_anti")
-                if not_matched_by_source_condition is not None:
-                    nscan = nscan.filter(
-                        F.expr(not_matched_by_source_condition)
-                    )
-                # one pass for both the row count and the file set (the
-                # same scan+count fusion as _touched_files)
-                for r in nscan.groupBy("_dml_file").count().collect():
-                    n_nmbs += int(r["count"])
-                    p = _scan_file_to_local(r._dml_file)
-                    nmbs_touched.append(resolved[os.path.abspath(p)])
-                nmbs_touched.sort()
 
-        part_types: dict[str, Any] = {}
-        if part_cols:
-            import json as _json
-
-            from pyspark.sql.types import StructType as _StructType
-
-            _full = _StructType.fromJson(_json.loads(snap.schema_json))
-            part_types = {c: _full[c].dataType for c in part_cols}
-
-        def _moves(pv: dict) -> "F.Column":
-            # a matched row MOVES iff the update clause applies (hit —
-            # matched AND condition, ADVICE r12: an unconditional check
-            # spuriously flagged rows the clause would never touch) and
-            # the source's partition tuple differs from this file
-            # group's (values cast exactly as _read_adds reinjects them)
-            import operator
-            from functools import reduce
-
-            differs = reduce(
-                operator.or_,
-                [
-                    ~F.col(f"_dml_s_{c}").eqNullSafe(
-                        F.lit(pv.get(c)).cast(part_types[c])
-                    )
-                    for c in part_cols
-                ],
-            )
-            return F.coalesce(hit & differs, F.lit(False))
-
-        def update_matched(df: DataFrame, pv=None) -> DataFrame:
-            joined = df.join(marked, key, "left")
-            # NOT MATCHED BY SOURCE first: disjoint from the matched
-            # clauses (a row is matched or it isn't), so composition is
-            # order-free — this order just keeps the projections simple
-            if not_matched_by_source == "delete":
-                joined = joined.filter(~nmbs_hit)
-            elif not_matched_by_source == "update":
-                # ONE select so every assignment reads the OLD row
-                # (Delta's UPDATE SET semantics), replacing assigned
-                # columns under their bare names for the matched-clause
-                # projection below
-                joined = joined.select(
-                    *[
-                        F.when(
-                            nmbs_hit,
-                            F.expr(not_matched_by_source_set[c]),
-                        )
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        if c in (not_matched_by_source_set or {})
-                        else F.col(c)
-                        for c in joined.columns
-                    ]
-                )
-            if matched == "delete":
-                # WHEN MATCHED [AND cond] THEN DELETE
-                return joined.filter(~F.coalesce(hit, F.lit(False))).select(
-                    *target_cols
-                )
-            if matched is None:
-                # no matched clause: this file is being rewritten for
-                # NOT MATCHED BY SOURCE only — matched rows pass through
-                return joined.select(*target_cols)
-            if part_cols:
-                # partition-moving MERGE (round 13): an updated row whose
-                # source partition values differ leaves this group's
-                # files entirely — its updated version re-enters through
-                # the insert path, landing in its NEW partition
-                joined = joined.filter(~_moves(pv or {}))
-            return joined.select(
-                *[
-                    F.col(c)
-                    # identity values never update — Delta's rule; the
-                    # matched row keeps the value it was allocated
-                    if c == key or c in idcols or c in absent_gen
-                    else F.when(hit, F.col(f"_dml_src_{c}"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in target_cols
-                ]
+        def classify(rows: DataFrame) -> DataFrame:
+            return rows.join(marked, key, "left").withColumn(
+                "_dml_action", action
             )
 
-        # rows the matched clause actually affects (condition applied);
-        # one bounded job over only the touched files
-        n_affected = 0
-        if matched is not None and touched and n_matched:
-            if matched_condition is None:
-                n_affected = n_matched
-            else:
-                n_affected = (
-                    _read_files(spark, table_path, _adds(snap, touched), snap)
-                    .join(marked, key, "inner")
-                    .filter(F.coalesce(cond_col, F.lit(False)))
-                    .count()
-                )
+        # post-images: UPDATE SET * takes the source's values (key,
+        # identity and omitted generated columns keep the target's) and
+        # its partition values; NOT MATCHED BY SOURCE UPDATE evaluates
+        # its assignments over the old row
+        on_match_post: dict[str, Column] = {}
+        if matched == "update":
+            on_match_post = {c: F.col(f"_dml_src_{c}") for c in src_cols}
+            on_match_post.update({c: F.col(f"_dml_s_{c}") for c in part_cols})
+        on_miss_post = {
+            c: F.expr(e) for c, e in (not_matched_by_source_set or {}).items()
+        }
+        post = on_match_post or on_miss_post
+        if on_match_post and on_miss_post:
+            post = {
+                c: F.when(
+                    is_matched, on_match_post.get(c, F.col(c))
+                ).otherwise(on_miss_post.get(c, F.col(c)))
+                for c in {**on_match_post, **on_miss_post}
+            }
 
-        # partition-moving MERGE (round 13; was a fail-loud guard): a
-        # matched UPDATE row whose source partition values differ from
-        # its target row's moves partitions — COW expresses this as a
-        # delete from the old group's rewrite (update_matched filters it
-        # out) plus an insert of the UPDATED row into its new partition
-        # (unioned into the insert path's hive-layout write below).
-        # Only the UPDATE clause can move rows; DELETE and
-        # no-matched-clause merges never change partition values.
-        mover_rows: "DataFrame | None" = None
-        n_moved = 0
-        if matched == "update" and part_cols and touched and n_matched:
-            import operator
-            from functools import reduce
+        census = _census(
+            spark,
+            table_path,
+            snap,
+            snap.adds if n_src or not_matched_by_source else {},
+            classify,
+            key,
+            partition_values=matched == "update" and bool(part_cols),
+        )
 
-            tgt_full = _read_adds(spark, table_path, _adds(snap, touched), snap)
-            differs = reduce(
-                operator.or_,
-                [
-                    ~F.col(c).eqNullSafe(F.col(f"_dml_s_{c}"))
-                    for c in part_cols
-                ],
-            )
-            # inner join = matched; cond_col (the translated WHEN
-            # MATCHED AND predicate) gates the clause, so rows it never
-            # touches cannot move (ADVICE r12 low)
-            moved = tgt_full.join(marked, key, "inner").filter(
-                F.coalesce(cond_col, F.lit(False)) & differs
-            )
-            # the mover's new row: UPDATE SET * semantics — source
-            # values for data columns, target's key/identity values,
-            # source partition values
-            mover_rows = moved.select(
-                *[
-                    (
-                        F.col(c)
-                        if c == key or c in idcols or c in absent_gen
-                        else F.col(f"_dml_src_{c}")
-                    ).alias(c)
-                    for c in target_cols
-                ],
-                *[
-                    F.col(f"_dml_s_{c}").alias(c)
-                    for c in part_cols
-                    # GENERATED partition columns recompute in
-                    # _rewrite_commit's insert path (round 14) — and
-                    # must be absent here so movers union with the
-                    # insert frame, which never carries them
-                    if c not in target_cols and c not in gen_map
-                ],
-            )
-            n_moved = mover_rows.count()
-            if not n_moved:
-                mover_rows = None
-
-        # WHEN NOT MATCHED THEN INSERT *: only source rows whose key is
-        # absent from the target append (matched keys live in touched
-        # files by construction, so the touched scan is the full match
-        # set).  Partitioned inserts keep their partition columns for
-        # the hive-layout write in _rewrite_commit.
-        insert_cols = [
-            c
-            for c in target_cols
-            if c not in idcols and c not in absent_gen
-        ] + [
-            # generated partition columns compute in the hive-write
-            # path (_rewrite_commit) — never required of the source
-            c
-            for c in part_cols
-            if c not in target_cols and c not in gen_map
-        ]
-        n_inserted = (n_src - n_matched_keys) if insert else 0
-        if not insert:
-            inserts = None
-        elif touched:
-            tgt_keys = _read_files(
-                spark, table_path, _adds(snap, touched), snap
-            ).select(key)
-            inserts = src.select(*insert_cols).join(
-                tgt_keys, key, "left_anti"
-            )
-        else:
-            inserts = src.select(*insert_cols)
-
-        # allocate identity values for ONLY the insert branch — same
-        # distributed (per-partition offset map) scheme as write_delta;
-        # skipped when no row inserts so the schema/mark stays untouched
+        # WHEN NOT MATCHED THEN INSERT *: source rows whose key no live
+        # target row holds (only the matched files can hold one)
+        n_inserted = n_src - census.keys if insert else 0
+        inserts = None
         new_schema_json = None
-        if idcols and inserts is not None and n_inserted > 0:
-            from pyspark_anomaly_detection_spark.io.deltalite_identity import (
-                allocate_identity,
+        if n_inserted:
+            inserts = src.select(
+                *[
+                    c
+                    for c in data_cols
+                    if c not in idcols and c not in absent_gen
+                ],
+                # generated partition columns compute in the hive-layout
+                # write — never required of the source
+                *[c for c in part_cols if c not in gen],
             )
-
-            inserts, new_schema_json = allocate_identity(
-                inserts, snap.schema_json
-            )
-        elif idcols:
-            inserts = None  # zero inserts: nothing to append or allocate
-
-        # the PURE insert set, captured before partition movers union in
-        # — movers are UPDATES in the change feed, never inserts
-        cdc_inserts = inserts if n_inserted > 0 else None
-
-        # partition movers re-enter through the insert path (AFTER
-        # identity allocation — movers keep their allocated values)
-        if mover_rows is not None:
-            inserts = (
-                inserts.unionByName(mover_rows)
-                if inserts is not None
-                else mover_rows
-            )
-
-        # no matched clause (insert-only MERGE): matched rows are
-        # untouched, so the matched-key files are NOT rewritten — their
-        # only role was bounding the anti-join's key scan.  NOT MATCHED
-        # BY SOURCE adds its own touched files regardless.
-        rewrite_files = sorted(
-            set(touched if matched is not None else []) | set(nmbs_touched)
-        )
-
-        # row-level change data (round 14): every clause contributes its
-        # exact change rows — matched updates as preimage/postimage
-        # pairs (partition movers naturally included: preimage in the
-        # old partition, postimage carrying the source's), matched and
-        # not-matched-by-source deletes as 'delete', the anti-join
-        # inserts as 'insert'.  One extra scan of only the rewrite set.
-        cdc_df = None
-        if _cdf_enabled(snap):
-            from pyspark_anomaly_detection_spark.io.deltalite_generated import (
-                generated_columns_of,
-            )
-
-            gen_exprs = generated_columns_of(snap.schema_json)
-            all_cols = target_cols + [
-                c for c in part_cols if c not in target_cols
-            ]
-            hitf = F.coalesce(hit, F.lit(False))
-
-            def _with_gen(df: DataFrame) -> DataFrame:
-                for col, expr in gen_exprs.items():
-                    df = df.withColumn(col, F.expr(expr))
-                return df
-
-            pieces_cdc: list[DataFrame] = []
-            if rewrite_files:
-                tgt_all = _read_adds(
-                    spark, table_path, _adds(snap, rewrite_files), snap
-                ).join(marked, key, "left")
-                if matched == "update":
-                    m = tgt_all.filter(hitf)
-                    pieces_cdc.append(
-                        m.select(*all_cols).withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    post = m.select(
-                        *[
-                            (
-                                F.col(c)
-                                if c == key or c in idcols or c in absent_gen
-                                else F.col(f"_dml_src_{c}")
-                            ).alias(c)
-                            for c in target_cols
-                        ],
-                        *[
-                            F.col(f"_dml_s_{c}").alias(c)
-                            for c in part_cols
-                            if c not in target_cols
-                        ],
-                    )
-                    pieces_cdc.append(
-                        _with_gen(post)
-                        .select(*all_cols)
-                        .withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                elif matched == "delete":
-                    pieces_cdc.append(
-                        tgt_all.filter(hitf)
-                        .select(*all_cols)
-                        .withColumn("_change_type", F.lit("delete"))
-                    )
-                if not_matched_by_source == "delete":
-                    pieces_cdc.append(
-                        tgt_all.filter(nmbs_hit)
-                        .select(*all_cols)
-                        .withColumn("_change_type", F.lit("delete"))
-                    )
-                elif not_matched_by_source == "update":
-                    npre = tgt_all.filter(nmbs_hit)
-                    pieces_cdc.append(
-                        npre.select(*all_cols).withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    npost = npre.select(
-                        *[
-                            F.expr(not_matched_by_source_set[c]).alias(c)
-                            if c in (not_matched_by_source_set or {})
-                            else F.col(c)
-                            for c in all_cols
-                        ]
-                    )
-                    pieces_cdc.append(
-                        _with_gen(npost)
-                        .select(*all_cols)
-                        .withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-            if cdc_inserts is not None:
-                pieces_cdc.append(
-                    _with_gen(cdc_inserts)
-                    .select(*all_cols)
-                    .withColumn("_change_type", F.lit("insert"))
+            if census.matched:
+                target_keys = _read_files(
+                    spark, table_path, _adds(snap, census.matched), snap
+                ).select(key)
+                inserts = inserts.join(target_keys, key, "left_anti")
+            if idcols:
+                inserts, new_schema_json = allocate_identity(
+                    inserts, snap.schema_json
                 )
-            if pieces_cdc:
-                cdc_df = deltalite._union(pieces_cdc)
 
         out = _rewrite_commit(
             spark,
             table_path,
-            rewrite_files,
-            update_matched,
+            snap,
+            census,
+            classify,
+            post,
             "MERGE",
-            extra_adds_df=inserts,
-            snap=snap,
-            new_schema_json=new_schema_json,
-            cdc_df=cdc_df,
+            inserts,
+            new_schema_json,
         )
-        out["rows_matched"] = n_matched
+        out["rows_matched"] = census.n(matched=True)
         out["rows_inserted"] = n_inserted
-        out["rows_moved"] = n_moved
+        out["rows_moved"] = census.n("move")
         if matched == "update":
-            out["rows_updated"] = n_affected
+            out["rows_updated"] = census.n("update", "move", matched=True)
         elif matched == "delete":
-            out["rows_deleted"] = n_affected
+            out["rows_deleted"] = census.n("delete", matched=True)
         if not_matched_by_source == "delete":
-            out["rows_deleted_by_source"] = n_nmbs
+            out["rows_deleted_by_source"] = census.n("delete", matched=False)
         elif not_matched_by_source == "update":
-            out["rows_updated_by_source"] = n_nmbs
+            out["rows_updated_by_source"] = census.n("update", matched=False)
         return out
     finally:
         src.unpersist()

@@ -42,11 +42,12 @@ from the descriptors without decoding), shuffle otherwise.
 Where data files are touched: :func:`read_files_minus_dv` is the one
 DV-aware file reader, and deltalite's ``_read_files`` calls it for
 every DV-carrying add (snapshot reads, COW DML scans, OPTIMIZE).  The
-delete scan reads with deltalite's ``_data_schema``, like every other
-data-file read.  A DV delete writes no data file; :func:`purge_delta`
-is OPTIMIZE's group rewrite (``deltalite._compact``) over only the
-DV-carrying files, so its files are staged and harvested by
-deltalite's ``_stage``.
+delete scan reads live rows with their (file, row index) positions
+through ``_read_files`` too, and each file is named the one way
+:func:`_file_uri` names an add.  A DV delete writes no data file;
+:func:`purge_delta` is OPTIMIZE's group rewrite (``deltalite._compact``)
+over only the DV-carrying files, so its files are staged and harvested
+by deltalite's ``_stage``.
 """
 
 from __future__ import annotations
@@ -106,12 +107,13 @@ def z85_decode(text: str, size: int | None = None) -> bytes:
 
 
 def _file_uri(table_path: str, rel: str) -> str:
-    """Canonical join key for a data file: the plain absolute path.
+    """Canonical name of a data file: the plain absolute path (an
+    absolute add path, as a shallow clone commits, stays as it is).
     ``_metadata.file_path`` columns are normalized to the same form via
     :func:`_norm_file_path_col` — scheme-independent, so a Spark version
-    rendering ``file:/``, ``file://`` or ``file:///`` all match (ADVICE
-    r10: joining on a hand-built ``file:`` rendering silently matched
-    nothing if the rendering drifted, resurrecting DV-deleted rows)."""
+    rendering ``file:/``, ``file://`` or ``file:///`` all match; a join
+    on a hand-built ``file:`` rendering would silently match nothing if
+    the rendering drifted, resurrecting DV-deleted rows."""
     return os.path.abspath(os.path.join(table_path, rel))
 
 
@@ -121,7 +123,7 @@ def _norm_file_path_col(col):
     then percent-DECODE URI escapes — hive partition directories with
     special characters (``o_orderpriority=4-NOT SPECIFIED`` → ``%20``)
     arrive URI-encoded from the scan but live decoded on disk and in
-    the log's add paths (round 13, surfaced by DV × partitions).
+    the log's add paths.
     Literal ``+`` is protected first: it is a legal path byte that
     ``url_decode``'s form semantics would turn into a space."""
     stripped = F.regexp_replace(col, r"^file:/*", "/")
@@ -312,18 +314,29 @@ def dv_positions_df(
 
 
 def _scan_with_positions(
-    spark: SparkSession, table_path: str, rels, schema
+    spark: SparkSession,
+    table_path: str,
+    rels,
+    schema,
+    file_col: "str | None" = "_dv_f",
+    pos_col: "str | None" = "_dv_i",
 ) -> DataFrame:
-    """Data files ``rels`` with each row's normalized file path and
-    parquet row index appended as (_dv_f, _dv_i) — the probe side of
-    the position joins."""
-    return spark.read.schema(schema).parquet(
+    """Data files ``rels`` read with ``schema``, each row's normalized
+    file path and parquet row index appended as ``file_col`` and
+    ``pos_col`` (either may be None) — the probe side of the position
+    joins."""
+    df = spark.read.schema(schema).parquet(
         *[os.path.join(table_path, rel) for rel in rels]
-    ).select(
-        "*",
-        _norm_file_path_col(F.col("_metadata.file_path")).alias("_dv_f"),
-        F.col("_metadata.row_index").alias("_dv_i"),
     )
+    meta = [
+        col.alias(name)
+        for name, col in (
+            (file_col, _norm_file_path_col(F.col("_metadata.file_path"))),
+            (pos_col, F.col("_metadata.row_index")),
+        )
+        if name
+    ]
+    return df.select("*", *meta) if meta else df
 
 
 def read_files_minus_dv(
@@ -332,22 +345,26 @@ def read_files_minus_dv(
     dv_adds: dict[str, dict[str, Any]],
     schema,
     file_col: "str | None" = None,
+    pos_col: "str | None" = None,
 ) -> DataFrame:
     """Read DV-carrying data files with their deleted rows subtracted
-    (anti-join on (file, row_index)).  ``file_col`` keeps the source
-    file's NORMALIZED absolute path as a trailing column — the COW DML
-    touched-file scan needs it (DML runs on DV tables by reading
-    THROUGH the bitmap)."""
+    (anti-join on (file, row_index)).  ``file_col`` and ``pos_col`` keep
+    each live row's normalized absolute file path and row index as
+    trailing columns."""
     df = _scan_with_positions(spark, table_path, sorted(dv_adds), schema)
     pos = dv_positions_df(spark, table_path, dv_adds)
     # A key-list join MOVES the join keys to the FRONT of the output
     # ([_dv_f, _dv_i, data...]); restore the data-column order so this
     # frame has the same column order as a plain-file read.
     data_cols = [c for c in df.columns if c not in ("_dv_f", "_dv_i")]
-    out = df.join(pos, ["_dv_f", "_dv_i"], "left_anti")
-    if file_col:
-        return out.select(*data_cols, F.col("_dv_f").alias(file_col))
-    return out.select(*data_cols)
+    meta = [
+        F.col(src).alias(name)
+        for src, name in (("_dv_f", file_col), ("_dv_i", pos_col))
+        if name
+    ]
+    return df.join(pos, ["_dv_f", "_dv_i"], "left_anti").select(
+        *data_cols, *meta
+    )
 
 
 def dv_protocol_action(proto: "dict[str, Any] | None") -> dict[str, Any]:
@@ -409,20 +426,16 @@ def delete_delta_dv(
     if not adds:
         return {"version": snap.version, "files_with_dv": 0, "rows_deleted": 0}
 
-    # live rows = file rows minus existing DV positions, read with the
-    # data-file schema and renamed to logical names so the caller's
-    # predicate binds on column-mapped tables too
-    scan = deltalite._to_logical(
-        _scan_with_positions(
-            spark, table_path, sorted(adds), deltalite._data_schema(snap)
-        ),
-        snap,
+    # live rows with their (file, row index) positions, in logical names
+    # so the caller's predicate binds on column-mapped tables too
+    matched = (
+        deltalite._read_files(
+            spark, table_path, adds, snap, file_col="_dv_f", pos_col="_dv_i"
+        )
+        .filter(F.expr(predicate))
+        .select("_dv_f", "_dv_i")
     )
     dv_adds = {r: a for r, a in adds.items() if a.get("deletionVector")}
-    if dv_adds:
-        existing = dv_positions_df(spark, table_path, dv_adds)
-        scan = scan.join(existing, ["_dv_f", "_dv_i"], "left_anti")
-    matched = scan.filter(F.expr(predicate)).select("_dv_f", "_dv_i")
 
     # executor-side bitmap build: one group per touched file; the OLD
     # bitmap (if any) ORs in via a broadcast closure keyed by file URI
@@ -464,8 +477,8 @@ def delete_delta_dv(
     uri_to_rel = {_file_uri(table_path, rel): rel for rel in adds}
     # one-time protocol upgrade, like real Delta: emit the protocol
     # action only when the table isn't DV-enabled yet — re-emitting it
-    # on every delete made _commit_with_retry treat a concurrent blind
-    # append as a protocol conflict (ADVICE r10)
+    # on every delete would make _commit_with_retry treat a concurrent
+    # blind append as a protocol conflict
     dv_enabled = "deletionVectors" in (
         (snap.protocol or {}).get("readerFeatures") or []
     )

@@ -118,10 +118,20 @@ def get_spark_session(
     # for one host (round rules); the bench harness itself never sets it,
     # so driver comparisons stay apples-to-apples.  Explicit extra_conf
     # from callers wins over the env.
+    conf = {}
     for pair in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")):
         key, _, value = pair.partition("=")
         if key.strip() and value:
-            builder = builder.config(key.strip(), value.strip())
-    for key, value in (extra_conf or {}).items():
+            conf[key.strip()] = value.strip()
+    conf.update(extra_conf or {})
+    # Python workers import this package from the checkout that started
+    # the driver, wherever the driver's working directory is: its parent
+    # directory goes first on the workers' PYTHONPATH.
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = "spark.executorEnv.PYTHONPATH"
+    conf[pythonpath] = os.pathsep.join(
+        filter(None, [package_parent, conf.get(pythonpath)])
+    )
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -113,6 +113,43 @@ def test_partition_column_predicate_raises(spark, tmp_path):
     assert out["rows_deleted"] == 4
 
 
+def test_partition_guard_ignores_string_literals(spark, tmp_path):
+    """A string literal that spells a partition column's name does not
+    reference the column: DELETE, UPDATE and a NOT MATCHED BY SOURCE
+    condition run, while naming the column (or ``src.`` outside a
+    literal) still raises."""
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(1, "p", "a"), (2, "spam", "a"), (3, "eggs", "b"), (4, "p", "b")],
+            "id long, note string, p string",
+        ),
+        t,
+        partition_by=["p"],
+    )
+    with pytest.raises(ValueError, match="partition column 'p'"):
+        delete_delta(spark, t, "p = 'a' AND note = 'p'")
+    assert delete_delta(spark, t, "note = 'p'")["rows_deleted"] == 2
+    out = update_delta(spark, t, "note LIKE '%p%'", {"id": "id + 10"})
+    assert out["rows_updated"] == 1
+    source = spark.createDataFrame(
+        [(12, "x", "a")], "id long, note string, p string"
+    )
+    with pytest.raises(ValueError, match="cannot reference src"):
+        merge_delta(
+            spark, t, source, key="id",
+            not_matched_by_source="delete",
+            not_matched_by_source_condition="note = 'x' OR src.id > 0",
+        )
+    out = merge_delta(
+        spark, t, source, key="id", matched=None, insert=False,
+        not_matched_by_source="delete",
+        not_matched_by_source_condition="note <> 'src.p'",
+    )
+    assert out["rows_deleted_by_source"] == 1
+    assert [r.id for r in read_delta(spark, t).collect()] == [12]
+
+
 def test_merge_upserts_in_one_commit(spark, tmp_path):
     t = str(tmp_path / "t")
     _build(spark, t, n_files=3)  # ids 0..29, v = 2*id
@@ -828,3 +865,74 @@ def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
     out = delete_delta(spark, t, "v > 5")
     assert out["rows_deleted"] == 1 and out["files_rewritten"] == 1
     assert sorted(r.id for r in read_delta(spark, t).collect()) == [2, 3]
+
+
+def test_merge_census_is_one_action_whatever_the_clauses(
+    spark, tmp_path, monkeypatch
+):
+    """Before its first staged write a MERGE runs its source check and
+    one census of the target, whatever its clauses: a partitioned,
+    change-feed MERGE with a matched condition, a partition move and a
+    NOT MATCHED BY SOURCE delete runs no more Spark jobs before staging
+    than a plain upsert into an unpartitioned table."""
+    from pyspark_anomaly_detection_spark.io import deltalite
+    from pyspark_anomaly_detection_spark.io.deltalite import (
+        set_table_properties,
+    )
+
+    sc = spark.sparkContext
+    stage = deltalite._stage
+    seen: dict[str, int] = {}
+
+    def first_stage(*args, **kwargs):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        if group and group not in seen:
+            seen[group] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return stage(*args, **kwargs)
+
+    monkeypatch.setattr(deltalite, "_stage", first_stage)
+
+    def pre_stage_jobs(name, op):
+        group = f"merge-census-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = op()
+        finally:
+            sc.setJobGroup("", "")
+        return seen[group], out
+
+    plain, part = str(tmp_path / "plain"), str(tmp_path / "part")
+    _build(spark, plain, n_files=4)
+    write_delta(
+        spark.range(0, 40).select(
+            F.col("id"),
+            (F.col("id") % 2).cast("string").alias("side"),
+            (F.col("id") * 2).alias("v"),
+        ),
+        part,
+        partition_by=["side"],
+    )
+    set_table_properties(part, {"delta.enableChangeDataFeed": "true"})
+    upsert = spark.createDataFrame([(3, 0), (99, 1)], "id long, v long")
+    source = spark.createDataFrame(
+        [(3, "0", 100), (4, "0", 0), (6, "0", 100), (99, "1", 1)],
+        "id long, side string, v long",
+    )
+    plain_jobs, _ = pre_stage_jobs(
+        "plain", lambda: merge_delta(spark, plain, upsert, key="id")
+    )
+    clause_jobs, out = pre_stage_jobs(
+        "clauses",
+        lambda: merge_delta(
+            spark,
+            part,
+            source,
+            key="id",
+            matched_condition="src.v > v",
+            not_matched_by_source="delete",
+            not_matched_by_source_condition="id < 10",
+        ),
+    )
+    assert out["rows_updated"] == 2 and out["rows_moved"] == 1
+    assert out["rows_deleted_by_source"] == 7 and out["rows_inserted"] == 1
+    assert 0 < clause_jobs <= plain_jobs, (clause_jobs, plain_jobs)

@@ -40,3 +40,12 @@ def test_entry_module_contract(spark):
         "first_doc",
     ]
     assert df.count() > 0
+
+
+def test_workers_import_the_package_from_this_checkout(spark):
+    """The session puts the checkout that holds the package first on the
+    Python workers' path, so a driver started from any working directory
+    runs the package's Python stages."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert path.split(os.pathsep)[0] == root
