@@ -1234,8 +1234,15 @@ def _stage(
     partitionValues from its directory; otherwise every file is stamped
     with ``pv`` (a rewritten partition group's values).  ``write(df,
     path)`` replaces the plain parquet write (OPTIMIZE's bin-packing and
-    Z-order layouts); ``stats_cols`` adds per-file min/max ``stats``."""
+    Z-order layouts); ``stats_cols`` adds per-file min/max ``stats``.
+
+    A 0-row data file (Spark's writer always writes one file, even for
+    an empty frame, e.g. a copy-on-write DELETE that empties a file) is
+    deleted, not committed: the table's schema lives in its metaData, so
+    an empty file carries nothing a reader needs."""
     from urllib.parse import unquote
+
+    import pyarrow.parquet as pq
 
     out_dir = os.path.join(table_path, rel_dir)
     mapping = mapping or {}
@@ -1263,6 +1270,9 @@ def _stage(
             if not name.endswith(".parquet"):
                 continue
             full = os.path.join(root, name)
+            if kind == "add" and pq.read_metadata(full).num_rows == 0:
+                os.remove(full)
+                continue
             entry: dict[str, Any] = {
                 "path": os.path.relpath(full, table_path),
                 "partitionValues": pvals,

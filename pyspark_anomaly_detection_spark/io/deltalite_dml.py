@@ -66,6 +66,7 @@ from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pyspark_anomaly_detection_spark.io import deltalite
 from pyspark_anomaly_detection_spark.io.detach import detach_local
@@ -350,6 +351,15 @@ def _rewrite_commit(
     the data."""
     version = snap.version + 1
     commit_dir = deltalite._commit_dir(version)
+    # post-images and inserted rows are written with each column's
+    # committed type, not the assignment's or the source's own (``v + 1.5``
+    # on a long column stays long)
+    schema = StructType.fromJson(json.loads(snap.schema_json))
+    post = {c: e.cast(schema[c].dataType) for c, e in post.items()}
+    if inserts is not None:
+        inserts = inserts.select(
+            *[F.col(c).cast(schema[c].dataType) for c in inserts.columns]
+        )
     mapping = deltalite._column_mapping_of(snap.schema_json)
     gen = generated_columns_of(snap.schema_json)
     data_gen = {c: e for c, e in gen.items() if c not in snap.part_cols}

@@ -456,6 +456,7 @@ def write_zordered(
     from pyspark_anomaly_detection_spark.functions import zorder64
 
     bounds = df.agg(
+        F.count(F.lit(1)).alias("n"),
         F.min(col_a).alias("a_lo"),
         F.max(col_a).alias("a_hi"),
         F.min(col_b).alias("b_lo"),
@@ -463,14 +464,17 @@ def write_zordered(
     ).head()
     # Contract: both clustering columns must be non-null integers with a
     # bounded domain (bucket arithmetic is long multiplication — spans
-    # near 2^55 would wrap under non-ANSI Spark).  An empty frame or an
-    # all-null column yields None bounds; rows with NULL keys would get a
-    # NULL _zkey and collapse into one range partition — raise instead of
-    # writing a silently degenerate layout.
+    # near 2^55 would wrap under non-ANSI Spark).  An empty frame (e.g. a
+    # partition group whose rows deletion vectors removed) writes nothing.
+    # An all-null column yields None bounds; rows with NULL keys would get
+    # a NULL _zkey and collapse into one range partition — raise instead
+    # of writing a silently degenerate layout.
+    if bounds["n"] == 0:
+        return
     if any(bounds[k] is None for k in ("a_lo", "a_hi", "b_lo", "b_hi")):
         raise ValueError(
-            f"write_zordered: empty input or all-null clustering column "
-            f"({col_a!r}/{col_b!r} bounds: {tuple(bounds)}) — z-order "
+            f"write_zordered: all-null clustering column "
+            f"({col_a!r}/{col_b!r} bounds: {tuple(bounds)[1:]}) — z-order "
             "requires non-null, bounded-integer clustering keys"
         )
 

@@ -674,6 +674,36 @@ def test_optimize_zorder_partitioned_clusters_within_groups(
         optimize_delta(spark, t, zorder_by=("side", "x"))
 
 
+def test_optimize_zorder_drops_a_dv_emptied_partition_group(
+    spark, tmp_path
+):
+    """ZORDER BY over a partition group whose every live row a deletion
+    vector removed writes nothing for it: the group's files are removed
+    and the other groups are clustered as usual."""
+    from pyspark_anomaly_detection_spark.io.deltalite import (
+        _snapshot_state,
+        optimize_delta,
+        read_delta,
+        write_delta,
+    )
+    from pyspark_anomaly_detection_spark.io.deltalite_dv import delete_delta_dv
+
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(i, i * 3, "5" if i == 9 else str(i % 3)) for i in range(10)],
+            "id long, v long, side string",
+        ),
+        t,
+        partition_by=["side"],
+    )
+    delete_delta_dv(spark, t, "id = 9")  # the only row of side=5
+    optimize_delta(spark, t, zorder_by=("id", "v"))
+    sides = {a["partitionValues"]["side"] for a in _snapshot_state(t).adds.values()}
+    assert sides == {"0", "1", "2"}
+    assert sorted(r.id for r in read_delta(spark, t).collect()) == list(range(9))
+
+
 def test_pruned_read_reinjects_partition_columns(spark, tmp_path):
     """Data skipping on a PARTITIONED table returns the real partition
     values: the files hold no partition column, so the pruned read must

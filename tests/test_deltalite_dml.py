@@ -936,3 +936,66 @@ def test_merge_census_is_one_action_whatever_the_clauses(
     assert out["rows_updated"] == 2 and out["rows_moved"] == 1
     assert out["rows_deleted_by_source"] == 7 and out["rows_inserted"] == 1
     assert 0 < clause_jobs <= plain_jobs, (clause_jobs, plain_jobs)
+
+
+def test_update_and_merge_keep_the_column_type(spark, tmp_path):
+    """An assignment or a MERGE source wider than its column (``v + 1.5``
+    on a long, a double source column) is written with the column's
+    committed type, in the rewritten and inserted files and in the change
+    feed, so the table still reads back."""
+    from pyspark_anomaly_detection_spark.io.deltalite import set_table_properties
+
+    t = str(tmp_path / "t")
+    _build(spark, t, n_files=2)  # ids 0..19, v = 2 * id
+    set_table_properties(t, {"delta.enableChangeDataFeed": "true"})
+    update_delta(spark, t, "id = 12", {"v": "v + 1.5"})
+    merge_delta(
+        spark,
+        t,
+        spark.createDataFrame([(3, 7.0), (99, 1.0)], "id long, v double"),
+        key="id",
+    )
+    df = read_delta(spark, t)
+    assert dict(df.dtypes)["v"] == "bigint"
+    got = {r.id: r.v for r in df.collect()}
+    assert got[12] == 25 and got[3] == 7 and got[4] == 8 and got[99] == 1
+    feed = read_delta_changes(spark, t, 2).filter(
+        F.col("_change_type").isin("update_postimage", "insert")
+    )
+    assert dict(feed.dtypes)["v"] == "bigint"
+    assert sorted(r.v for r in feed.collect()) == [1, 7, 25]
+
+
+def test_delete_emptying_a_file_commits_no_empty_file(spark, tmp_path):
+    """A copy-on-write DELETE that removes every row of a file removes
+    the file and adds nothing for it."""
+    import pyarrow.parquet as pq
+
+    from pyspark_anomaly_detection_spark.io.deltalite import _snapshot_state
+
+    t = str(tmp_path / "t")
+    _build(spark, t, n_files=3)  # ids 0..29, one file per 10
+    out = delete_delta(spark, t, "id < 10")
+    assert out["rows_deleted"] == 10 and out["files_rewritten"] == 1
+    adds = _snapshot_state(t).adds
+    assert len(adds) == 2
+    assert all(
+        pq.read_metadata(os.path.join(t, rel)).num_rows > 0 for rel in adds
+    )
+    assert sorted(r.id for r in read_delta(spark, t).collect()) == list(
+        range(10, 30)
+    )
+
+
+def test_empty_table_still_creates_and_reads(spark, tmp_path):
+    """Creating a table from an empty frame commits its schema and no
+    data file; it reads back empty with that schema and takes appends."""
+    from pyspark_anomaly_detection_spark.io.deltalite import _snapshot_state
+
+    t = str(tmp_path / "t")
+    write_delta(spark.createDataFrame([], "id long, v long"), t)
+    assert not _snapshot_state(t).adds
+    df = read_delta(spark, t)
+    assert df.dtypes == [("id", "bigint"), ("v", "bigint")] and df.count() == 0
+    write_delta(spark.createDataFrame([(1, 2)], "id long, v long"), t, mode="append")
+    assert [tuple(r) for r in read_delta(spark, t).collect()] == [(1, 2)]

@@ -77,15 +77,30 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
     assert plans.has_partial_aggregation(df), "expected map-side combine"
 
 
-def test_shared_window_spec_single_shuffle(spark, sf_dir):
+def _distributed_reads(monkeypatch):
+    """Read every table as a distributed scan, the way it plans at scale:
+    with the single-partition floor at 0 no fixture table is coalesced."""
+    from pyspark_anomaly_detection_spark.io import readers
+
+    monkeypatch.setattr(readers, "SINGLE_PARTITION_MAX_BYTES", 0)
+
+
+def test_shared_window_spec_single_shuffle(spark, sf_dir, monkeypatch):
     """The three behavioral frames share partition+order key → exactly one
-    exchange for the window stage (reference SURVEY §4.2)."""
+    exchange for the window stage (reference SURVEY §4.2).  Over a
+    single-partition read (a fixture-sized table) it needs none."""
     from pyspark_anomaly_detection_spark.io.readers import load_table
     from pyspark_anomaly_detection_spark.windows.features import (
         with_behavioral_features,
     )
 
-    df = with_behavioral_features(load_table(spark, sf_dir, "events"))
+    def frame():
+        return with_behavioral_features(load_table(spark, sf_dir, "events"))
+
+    df = frame()
+    assert plans.count_shuffles(df) == 0, plans.formatted_plan(df)
+    _distributed_reads(monkeypatch)
+    df = frame()
     assert plans.count_shuffles(df) == 1, plans.formatted_plan(df)
 
 
@@ -132,23 +147,29 @@ def test_tpch_filters_push_to_scan(spark, sf_dir):
     assert plans.has_pushed_filter(df, "l_returnflag")
 
 
-def test_asof_join_single_shuffle(spark, sf_dir):
+def test_asof_join_single_shuffle(spark, sf_dir, monkeypatch):
     """The as-of join is union-tag + one window pass: exactly one exchange
     on the key (plus the final presentation sort), never a quadratic
-    range join."""
+    range join.  Over a single-partition read it needs none."""
     from pyspark.sql import functions as F
 
     from pyspark_anomaly_detection_spark.io.readers import load_table
     from pyspark_anomaly_detection_spark.windows.features import asof_join
 
-    ev = load_table(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    df = asof_join(errors, purchases, on="user_id", right_cols=("value",))
+    def frame():
+        ev = load_table(spark, sf_dir, "events")
+        errors = ev.filter(F.col("event_type") == "error").select(
+            "event_id", "user_id", "ts"
+        )
+        purchases = ev.filter(F.col("event_type") == "purchase").select(
+            "user_id", "ts", "value"
+        )
+        return asof_join(errors, purchases, on="user_id", right_cols=("value",))
+
+    df = frame()
+    assert plans.count_shuffles(df) == 0, plans.formatted_plan(df)
+    _distributed_reads(monkeypatch)
+    df = frame()
     assert plans.count_shuffles(df) == 1, plans.formatted_plan(df)
 
 
@@ -266,15 +287,22 @@ def test_q128_single_scan_for_all_folds(spark, sf_dir):
     assert len(scans) == 1, plan
 
 
-def test_q130_two_hash_exchanges(spark, sf_dir):
+def test_q130_two_hash_exchanges(spark, sf_dir, monkeypatch):
     """The capstone composite: daily agg exchange + one event_type
     partitioning reused by the lag window, both rank windows, and the
-    fences — never one exchange per window."""
+    fences — never one exchange per window.  Over a single-partition
+    read it needs none."""
     import re
 
-    plan = plans.formatted_plan(q("q130_daily_anomaly_monitor")(spark, sf_dir))
-    hashes = re.findall(r"Arguments: hashpartitioning\(", plan)
-    assert len(hashes) == 2, plan
+    def hashes():
+        plan = plans.formatted_plan(q("q130_daily_anomaly_monitor")(spark, sf_dir))
+        return re.findall(r"Arguments: hashpartitioning\(", plan), plan
+
+    found, plan = hashes()
+    assert len(found) == 0, plan
+    _distributed_reads(monkeypatch)
+    found, plan = hashes()
+    assert len(found) == 2, plan
 
 
 def test_sql_broadcast_hint_honored(spark, sf_dir):

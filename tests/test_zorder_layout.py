@@ -181,10 +181,12 @@ def test_q207_verdict_bands_all_true(spark):
     assert all(r.verdict for r in rows), rows
 
 
-def test_write_zordered_rejects_empty_and_all_null(spark, tmp_path):
+def test_write_zordered_skips_empty_rejects_all_null(spark, tmp_path):
+    """An empty frame writes nothing (OPTIMIZE ZORDER BY over a partition
+    group that deletion vectors emptied); all-null keys still raise."""
     empty = spark.createDataFrame([], "a long, b long")
-    with pytest.raises(ValueError, match="empty input or all-null"):
-        write_zordered(empty, str(tmp_path / "z1"), "a", "b", 2)
+    write_zordered(empty, str(tmp_path / "z1"), "a", "b", 2)
+    assert not (tmp_path / "z1").exists()
     nulls = spark.createDataFrame([(None, 1), (None, 2)], "a long, b long")
-    with pytest.raises(ValueError, match="empty input or all-null"):
+    with pytest.raises(ValueError, match="all-null clustering column"):
         write_zordered(nulls, str(tmp_path / "z2"), "a", "b", 2)
