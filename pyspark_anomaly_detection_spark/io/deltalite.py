@@ -1234,7 +1234,8 @@ def _stage(
     partitionValues from its directory; otherwise every file is stamped
     with ``pv`` (a rewritten partition group's values).  ``write(df,
     path)`` replaces the plain parquet write (OPTIMIZE's bin-packing and
-    Z-order layouts); ``stats_cols`` adds per-file min/max ``stats``.
+    Z-order layouts).  Every ``add`` carries Delta's ``stats.numRecords``
+    from its footer; ``stats_cols`` adds per-file min/max to them.
 
     A 0-row data file (Spark's writer always writes one file, even for
     an empty frame, e.g. a copy-on-write DELETE that empties a file) is
@@ -1270,21 +1271,23 @@ def _stage(
             if not name.endswith(".parquet"):
                 continue
             full = os.path.join(root, name)
-            if kind == "add" and pq.read_metadata(full).num_rows == 0:
-                os.remove(full)
-                continue
             entry: dict[str, Any] = {
                 "path": os.path.relpath(full, table_path),
                 "partitionValues": pvals,
                 "size": os.path.getsize(full),
             }
             if kind == "add":
-                entry["modificationTime"] = 0
-            entry["dataChange"] = data_change
-            if stats_cols:
-                entry["stats"] = json.dumps(
-                    _file_stats(full, stats_cols), separators=(",", ":")
+                stats = (
+                    _file_stats(full, stats_cols)
+                    if stats_cols
+                    else {"numRecords": pq.read_metadata(full).num_rows}
                 )
+                if stats["numRecords"] == 0:
+                    os.remove(full)
+                    continue
+                entry["modificationTime"] = 0
+                entry["stats"] = json.dumps(stats, separators=(",", ":"))
+            entry["dataChange"] = data_change
             actions.append({kind: entry})
     return sorted(actions, key=lambda a: a[kind]["path"])
 
@@ -1709,10 +1712,13 @@ def _file_stats(path: str, cols: list[str]) -> dict[str, Any]:
 
 
 def annotate_stats(table_path: str, cols: list[str]) -> int:
-    """Attach ``stats`` to every active ``add`` action lacking them, as
-    one new commit that re-adds the same files with stats (dataChange
-    false) — Delta's ``COMPUTE STATISTICS``-style backfill.  Returns the
-    new version (or -1 when every active add already carries stats)."""
+    """Attach min/max ``stats`` for ``cols`` to every active ``add``
+    action lacking them, as one new commit that re-adds the same files
+    with stats (dataChange false) — Delta's ``COMPUTE STATISTICS``-style
+    backfill.  An add counts as covered when its stats already hold
+    min/max for every column (a bare ``numRecords`` does not), or when
+    its footer has nothing more to add.  Returns the new version (or -1
+    when every active add is covered)."""
     snap = _snapshot_state(table_path)
     # DV tables compose (round 14): the re-add below copies the FULL
     # prior add action — deletionVector descriptor included — so stats
@@ -1724,21 +1730,29 @@ def annotate_stats(table_path: str, cols: list[str]) -> int:
     # callers pass logical names and we translate
     mapping = _column_mapping_of(snap.schema_json)
     cols = [mapping.get(c, c) for c in cols] if mapping else cols
-    current = snap.version
-    latest_add = snap.adds
-    missing = [p for p, a in latest_add.items() if "stats" not in a]
-    if not missing:
-        return -1
-    version = current + 1
     actions: list[dict[str, Any]] = []
-    for rel in sorted(missing):
-        add = dict(latest_add[rel])
-        add["stats"] = json.dumps(
-            _file_stats(os.path.join(table_path, rel), cols),
-            separators=(",", ":"),
-        )
+    for rel, old_add in sorted(snap.adds.items()):
+        old = json.loads(old_add.get("stats") or "{}")
+        if all(
+            c in old.get(side, {})
+            for c in cols
+            for side in ("minValues", "maxValues")
+        ):
+            continue
+        found = _file_stats(os.path.join(table_path, rel), cols)
+        stats = {
+            "numRecords": found["numRecords"],
+            "minValues": {**old.get("minValues", {}), **found["minValues"]},
+            "maxValues": {**old.get("maxValues", {}), **found["maxValues"]},
+        }
+        if stats == old:
+            continue  # the footer has no min/max for these columns
+        add = dict(old_add)
+        add["stats"] = json.dumps(stats, separators=(",", ":"))
         add["dataChange"] = False
         actions.append({"add": add})
+    if not actions:
+        return -1
     actions.append(
         {
             "commitInfo": {
@@ -1747,7 +1761,7 @@ def annotate_stats(table_path: str, cols: list[str]) -> int:
             }
         }
     )
-    return _commit_with_retry(table_path, version, actions)
+    return _commit_with_retry(table_path, snap.version + 1, actions)
 
 
 def read_delta_pruned(

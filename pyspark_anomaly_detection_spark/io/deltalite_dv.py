@@ -25,11 +25,18 @@ serialization):
   round-trip through this module.
 * row indices come from the JVM scan's ``_metadata.row_index`` — the
   parquet row position Delta defines DV indices over.
-* the bitmaps build EXECUTOR-side (one ``applyInPandas`` group per
-  touched file — driver state stays one descriptor per FILE).  Reads
-  decode them on the DRIVER up to ``DV_BROADCAST_MAX_ROWS`` deleted
-  rows (a broadcast JVM local relation: no Python stage in the plan)
-  and EXECUTOR-side above it (bounded driver memory at 100 TB).
+* one writer, :func:`dv_rewrite_actions`, turns a frame of positions
+  into remove/add actions.  It builds the bitmaps on the DRIVER when
+  the adds' ``stats.numRecords`` minus their DV cardinalities prove at
+  most ``DV_BROADCAST_MAX_ROWS`` live rows (one JVM aggregate of
+  per-file position lists, collected as Arrow, then numpy: no Python
+  stage in the plan), and EXECUTOR-side otherwise (one
+  ``applyInPandas`` group per touched file — driver state stays one
+  descriptor per FILE).  Reads decode on the DRIVER up to
+  ``DV_BROADCAST_MAX_ROWS`` deleted rows (a broadcast JVM local
+  relation) and EXECUTOR-side above it (bounded driver memory at
+  100 TB).  Both sides encode and decode through io/roaring.py's numpy
+  codec, so the descriptors are byte-identical either way.
 * re-deleting merges: a file's existing DV ORs into the new one, and
   already-deleted rows never re-count in ``rows_deleted``.
 
@@ -52,10 +59,12 @@ by deltalite's ``_stage``.
 
 from __future__ import annotations
 
+import json
 import os
 import struct
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,7 +72,7 @@ from pyspark_anomaly_detection_spark.io import deltalite
 from pyspark_anomaly_detection_spark.io.roaring import (
     deserialize_roaring64,
     deserialize_roaring64_array,
-    serialize_roaring64,
+    serialize_roaring64_array,
 )
 
 #: Decode on the driver and broadcast the anti-join side when the
@@ -76,22 +85,17 @@ _Z85_CHARS = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZ.-:+=^!/*?&<>()[]{}@%$#"
 )
 _Z85_INDEX = {c: i for i, c in enumerate(_Z85_CHARS)}
+_Z85_ARRAY = np.frombuffer(_Z85_CHARS.encode("ascii"), np.uint8)
 
 
 def z85_encode(data: bytes) -> str:
     """ZeroMQ Z85 over zero-padded 4-byte groups (the pre-padding
     length travels separately as the descriptor's ``sizeInBytes``)."""
-    pad = (-len(data)) % 4
-    data = data + b"\x00" * pad
-    out = []
-    for i in range(0, len(data), 4):
-        (val,) = struct.unpack(">I", data[i : i + 4])
-        chunk = []
-        for _ in range(5):
-            chunk.append(_Z85_CHARS[val % 85])
-            val //= 85
-        out.extend(reversed(chunk))
-    return "".join(out)
+    data = data + b"\x00" * ((-len(data)) % 4)
+    vals = np.frombuffer(data, ">u4").astype(np.int64)
+    # five base-85 digits per group, most significant first
+    digits = vals[:, None] // 85 ** np.arange(4, -1, -1) % 85
+    return _Z85_ARRAY[digits].tobytes().decode("ascii")
 
 
 def z85_decode(text: str, size: int | None = None) -> bytes:
@@ -231,7 +235,6 @@ def _decode_diff(
 ):
     """Sorted int64 array of ``decode(new) - decode(old)`` (all of
     ``new`` when ``old`` is None) — no Python int per position."""
-    import numpy as np
 
     def decode(dv):
         bitmap = _descriptor_bitmap(dv, table_path)
@@ -261,7 +264,6 @@ def _positions_df(
 
     total_card = sum(int(new.get("cardinality") or 0) for _, new, _ in items)
     if total_card <= DV_BROADCAST_MAX_ROWS:
-        import numpy as np
         import pyarrow as pa
 
         chunks = [_decode_diff(new, old, table_path) for _, new, old in items]
@@ -271,8 +273,6 @@ def _positions_df(
             spark, [files, np.concatenate(chunks)], "_dv_f string, _dv_i long"
         )
         return F.broadcast(pos)
-
-    import json
 
     src = local_rows_df(
         spark,
@@ -394,6 +394,149 @@ def dv_protocol_action(proto: "dict[str, Any] | None") -> dict[str, Any]:
     }
 
 
+def _live_rows_bound(adds: dict[str, dict[str, Any]]) -> "int | None":
+    """Most live rows the adds can hold — Σ ``stats.numRecords`` minus
+    Σ DV ``cardinality`` — or None when an add has no ``numRecords``."""
+    total = 0
+    for a in adds.values():
+        n = json.loads(a.get("stats") or "{}").get("numRecords")
+        if n is None:
+            return None
+        dv = a.get("deletionVector") or {}
+        total += int(n) - int(dv.get("cardinality") or 0)
+    return total
+
+
+def _merged_bitmap(
+    pos, old: "dict[str, Any] | None", table_path: str
+) -> tuple[bytes, int, int]:
+    """``(bitmap, cardinality, newly deleted)`` of new positions ``pos``
+    ORed with the file's old descriptor ``old`` (None: no DV yet)."""
+    pos = np.unique(np.asarray(pos, dtype=np.uint64))
+    n_old = 0
+    if old is not None:
+        prior = deserialize_roaring64_array(
+            _descriptor_bitmap(old, table_path)
+        )
+        n_old = len(prior)
+        pos = np.union1d(pos, prior)
+    return serialize_roaring64_array(pos), len(pos), len(pos) - n_old
+
+
+def _bitmaps_on_driver(
+    matched: DataFrame, old_by_uri: dict[str, dict[str, Any]], table_path: str
+) -> list[tuple[str, bytes, int, int]]:
+    """One JVM aggregate — each touched file's positions as a sorted
+    list — collected as Arrow (8 bytes per position), then every bitmap
+    merged and encoded here: no Python worker."""
+    import pyarrow as pa
+
+    lists = matched.groupBy("_dv_f").agg(
+        F.sort_array(F.collect_list("_dv_i")).alias("_dv_i")
+    )
+    batches = lists._collect_as_arrow()
+    if not batches:
+        return []
+    table = pa.Table.from_batches(batches)
+    files = table.column("_dv_f").to_pylist()
+    pos = table.column("_dv_i").combine_chunks()
+    offsets = pos.offsets.to_numpy()
+    values = pos.values.to_numpy()
+    return [
+        (
+            uri,
+            *_merged_bitmap(
+                values[offsets[i] : offsets[i + 1]],
+                old_by_uri.get(uri),
+                table_path,
+            ),
+        )
+        for i, uri in enumerate(files)
+    ]
+
+
+def _bitmaps_on_executors(
+    matched: DataFrame, old_by_uri: dict[str, dict[str, Any]], table_path: str
+) -> list[tuple[str, bytes, int, int]]:
+    """One ``applyInPandas`` group per touched file builds its bitmap
+    executor-side; the driver receives one row per file."""
+
+    def build(pdf):
+        import pandas as pd
+
+        uri = pdf["_dv_f"].iloc[0]
+        blob, card, n_new = _merged_bitmap(
+            pdf["_dv_i"].to_numpy(), old_by_uri.get(uri), table_path
+        )
+        return pd.DataFrame(
+            {"_dv_f": [uri], "blob": [blob], "card": [card], "n_new": [n_new]}
+        )
+
+    rows = (
+        matched.groupBy("_dv_f")
+        .applyInPandas(
+            build, "_dv_f string, blob binary, card long, n_new long"
+        )
+        .collect()
+    )
+    return [(r._dv_f, bytes(r.blob), r.card, r.n_new) for r in rows]
+
+
+def dv_rewrite_actions(
+    table_path: str,
+    adds: dict[str, dict[str, Any]],
+    matched: DataFrame,
+    storage: str = "i",
+) -> tuple[list[dict[str, Any]], int]:
+    """Positions frame → DV actions: ``matched`` holds the ``(_dv_f,
+    _dv_i)`` positions of live rows of ``adds`` to delete; returns the
+    ``remove``/``add`` pair of every touched file (its old bitmap ORed
+    in; the re-add keeps every field of the old add but
+    ``deletionVector`` and ``dataChange``) and the newly deleted row
+    count.  When the adds' ``numRecords`` prove the live rows fit in
+    ``DV_BROADCAST_MAX_ROWS`` the bitmaps build on the driver, otherwise
+    (or without ``numRecords``) on the executors."""
+    old_by_uri = {
+        _file_uri(table_path, rel): a["deletionVector"]
+        for rel, a in adds.items()
+        if a.get("deletionVector")
+    }
+    bound = _live_rows_bound(adds)
+    build = (
+        _bitmaps_on_driver
+        if bound is not None and bound <= DV_BROADCAST_MAX_ROWS
+        else _bitmaps_on_executors
+    )
+    built = sorted(build(matched, old_by_uri, table_path))
+    if storage == "u" and built:
+        descs = write_dv_file(table_path, [blob for _, blob, _, _ in built])
+    else:
+        descs = [
+            {
+                "storageType": "i",
+                "pathOrInlineDv": z85_encode(blob),
+                "sizeInBytes": len(blob),
+            }
+            for _, blob, _, _ in built
+        ]
+    uri_to_rel = {_file_uri(table_path, rel): rel for rel in adds}
+    actions: list[dict[str, Any]] = []
+    for (uri, _blob, card, _n), desc in zip(built, descs):
+        rel = uri_to_rel[uri]
+        desc["cardinality"] = int(card)
+        actions.append({"remove": {"path": rel, "dataChange": True}})
+        actions.append(
+            {
+                "add": {
+                    **adds[rel],
+                    "dataChange": True,
+                    "deletionVector": desc,
+                }
+            }
+        )
+    return actions, int(sum(n for *_, n in built))
+
+
 def delete_delta_dv(
     spark: SparkSession,
     table_path: str,
@@ -435,46 +578,12 @@ def delete_delta_dv(
         .filter(F.expr(predicate))
         .select("_dv_f", "_dv_i")
     )
-    dv_adds = {r: a for r, a in adds.items() if a.get("deletionVector")}
-
-    # executor-side bitmap build: one group per touched file; the OLD
-    # bitmap (if any) ORs in via a broadcast closure keyed by file URI
-    old_by_uri = {
-        _file_uri(table_path, rel): a["deletionVector"]
-        for rel, a in dv_adds.items()
-    }
-
-    def build(pdf):
-        import pandas as pd
-
-        uri = pdf["_dv_f"].iloc[0]
-        pos = set(int(i) for i in pdf["_dv_i"])
-        n_new = len(pos)
-        old = old_by_uri.get(uri)
-        if old is not None:
-            pos.update(_decode_descriptor(old, table_path))
-        blob = serialize_roaring64(sorted(pos))
-        return pd.DataFrame(
-            {
-                "_dv_f": [uri],
-                "z": [z85_encode(blob)],
-                "size": [len(blob)],
-                "card": [len(pos)],
-                "n_new": [n_new],
-            }
-        )
-
-    built = (
-        matched.groupBy("_dv_f")
-        .applyInPandas(
-            build, "_dv_f string, z string, size long, card long, n_new long"
-        )
-        .collect()
-    )  # bounded: one row per touched FILE
-    if not built:
+    dv_actions, rows_deleted = dv_rewrite_actions(
+        table_path, adds, matched, storage
+    )
+    if not dv_actions:
         return {"version": snap.version, "files_with_dv": 0, "rows_deleted": 0}
 
-    uri_to_rel = {_file_uri(table_path, rel): rel for rel in adds}
     # one-time protocol upgrade, like real Delta: emit the protocol
     # action only when the table isn't DV-enabled yet — re-emitting it
     # on every delete would make _commit_with_retry treat a concurrent
@@ -485,37 +594,7 @@ def delete_delta_dv(
     actions: list[dict[str, Any]] = (
         [] if dv_enabled else [dv_protocol_action(snap.protocol)]
     )
-    rows_sorted = sorted(built, key=lambda r: r._dv_f)
-    if storage == "u":
-        descs = write_dv_file(
-            table_path,
-            [z85_decode(r.z, int(r.size)) for r in rows_sorted],
-        )
-        for d, r in zip(descs, rows_sorted):
-            d["cardinality"] = int(r.card)
-    else:
-        descs = [
-            {
-                "storageType": "i",
-                "pathOrInlineDv": r.z,
-                "sizeInBytes": int(r.size),
-                "cardinality": int(r.card),
-            }
-            for r in rows_sorted
-        ]
-    for row, desc in zip(rows_sorted, descs):
-        rel = uri_to_rel[row._dv_f]
-        old_add = adds[rel]
-        actions.append({"remove": {"path": rel, "dataChange": True}})
-        new_add = {
-            "path": rel,
-            "partitionValues": old_add.get("partitionValues", {}),
-            "size": old_add.get("size", 0),
-            "modificationTime": old_add.get("modificationTime", 0),
-            "dataChange": True,
-            "deletionVector": desc,
-        }
-        actions.append({"add": new_add})
+    actions += dv_actions
     actions.append(
         {"commitInfo": {"operation": "DELETE", "engineInfo": "deltalite-dv"}}
     )
@@ -524,8 +603,8 @@ def delete_delta_dv(
     )
     return {
         "version": version,
-        "files_with_dv": len(built),
-        "rows_deleted": int(sum(r.n_new for r in built)),
+        "files_with_dv": len(dv_actions) // 2,
+        "rows_deleted": rows_deleted,
     }
 
 

@@ -23,18 +23,18 @@ The standard 32-bit format, as published by the RoaringBitmap project:
   (1024 × uint64 LE, card > 4096), RUN (``[n_runs:2]`` then
   ``(start:2, length-1:2)`` pairs).
 
-The encoder is pure Python over ``int``/``bytes``; the decoder reads
-every container with numpy (one vectorized step per container, not one
-per value), so a reader can decode millions of deleted positions on the
-driver.  Both run on BOUNDED inputs (one bitmap per data file).
-Writer policy: a container is emitted as RUN when that is strictly
-smaller than the array/bitmap choice, matching ``runOptimize()``
-behavior; readers accept all three regardless.
+Encoder and decoder both work on numpy arrays, one vectorized step per
+container (not one per value), so the driver can encode or decode
+millions of deleted positions.  Both run on BOUNDED inputs (one bitmap
+per data file).  Writer policy: a container is emitted as RUN when that
+is strictly smaller than the array/bitmap choice, matching
+``runOptimize()`` behavior; readers accept all three regardless.
 
-Public API: :func:`serialize_roaring64` / :func:`deserialize_roaring64`
-(sorted iterables of uint64 row indices),
-:func:`deserialize_roaring64_array` (the same values as a uint64 numpy
-array), plus the 32-bit halves for tests.
+Public API: :func:`serialize_roaring64_array` /
+:func:`deserialize_roaring64_array` (sorted uint64 numpy arrays — the
+one encoder and decoder), :func:`serialize_roaring64` /
+:func:`deserialize_roaring64` (the same over Python ints), plus the
+32-bit halves for tests.
 """
 
 from __future__ import annotations
@@ -53,62 +53,49 @@ MAGIC_PORTABLE_64 = 1681511377
 # --------------------------------------------------------- 32-bit core
 
 
-def _containers_of(values: list[int]) -> list[tuple[int, list[int]]]:
-    """Sorted uint32 values → [(high16, [low16...])], both sorted."""
-    out: list[tuple[int, list[int]]] = []
-    cur_key: int | None = None
-    cur: list[int] = []
-    for v in values:
-        hi, lo = v >> 16, v & 0xFFFF
-        if hi != cur_key:
-            if cur_key is not None:
-                out.append((cur_key, cur))
-            cur_key, cur = hi, []
-        cur.append(lo)
-    if cur_key is not None:
-        out.append((cur_key, cur))
-    return out
-
-
-def _runs_of(lows: list[int]) -> list[tuple[int, int]]:
-    """Sorted distinct uint16 list → [(start, runlen)]."""
-    runs: list[tuple[int, int]] = []
-    start = prev = lows[0]
-    for v in lows[1:]:
-        if v == prev + 1:
-            prev = v
-            continue
-        runs.append((start, prev - start + 1))
-        start = prev = v
-    runs.append((start, prev - start + 1))
-    return runs
-
-
-def serialize_roaring32(values: list[int]) -> bytes:
-    """Standard-format serialization of sorted distinct uint32 values."""
-    conts = _containers_of(values)
-    n = len(conts)
-    # decide each container's representation
+def _serialize_roaring32_array(values: np.ndarray) -> bytes:
+    """Standard-format serialization of sorted distinct uint32 values
+    (a numpy array).  Containers, runs and cardinalities come from a few
+    whole-array numpy steps; only the per-CONTAINER assembly is a Python
+    loop (at most 65536 containers, each emitted by one ``tobytes``)."""
+    hi = (values >> 16).astype(np.int64)
+    lo = (values & 0xFFFF).astype(np.uint16)
+    keys, starts = np.unique(hi, return_index=True)
+    ends = np.append(starts[1:], len(values))
+    n = len(keys)
+    # a run starts where the value is not its predecessor + 1, and at
+    # every container start (runs never cross containers)
+    run_start = np.ones(len(values), bool)
+    run_start[1:] = np.diff(values.astype(np.int64)) != 1
+    run_start[starts] = True
+    run_idx = np.flatnonzero(run_start)
+    run_end = np.append(run_idx[1:], len(values)) - 1
+    runs_per = (
+        np.add.reduceat(run_start.astype(np.int64), starts) if n else starts
+    )
+    first_run = np.cumsum(runs_per) - runs_per
     reps: list[tuple[str, bytes]] = []
-    for _key, lows in conts:
-        card = len(lows)
-        runs = _runs_of(lows)
-        run_size = 2 + 4 * len(runs)
-        plain_size = 2 * card if card <= ARRAY_MAX else 8192
-        if run_size < plain_size:
-            body = struct.pack("<H", len(runs)) + b"".join(
-                struct.pack("<HH", s, ln - 1) for s, ln in runs
-            )
+    for i in range(n):
+        lows = lo[starts[i] : ends[i]]
+        n_runs = int(runs_per[i])
+        # a container is RUN when that is strictly smaller than the
+        # array/bitmap choice (``runOptimize()``)
+        plain_size = 2 * len(lows) if len(lows) <= ARRAY_MAX else 8192
+        if 2 + 4 * n_runs < plain_size:
+            r0 = int(first_run[i])
+            rs, re_ = run_idx[r0 : r0 + n_runs], run_end[r0 : r0 + n_runs]
+            pairs = np.empty(2 * n_runs, "<u2")
+            pairs[0::2] = lo[rs]
+            pairs[1::2] = lo[re_] - lo[rs]  # run length - 1
+            body = struct.pack("<H", n_runs) + pairs.tobytes()
             reps.append(("run", body))
-        elif card <= ARRAY_MAX:
-            reps.append(
-                ("array", b"".join(struct.pack("<H", v) for v in lows))
-            )
+        elif len(lows) <= ARRAY_MAX:
+            reps.append(("array", lows.astype("<u2").tobytes()))
         else:
-            bits = bytearray(8192)
-            for v in lows:
-                bits[v >> 3] |= 1 << (v & 7)
-            reps.append(("bitmap", bytes(bits)))
+            bits = np.zeros(1 << 16, bool)
+            bits[lows] = True
+            body = np.packbits(bits, bitorder="little").tobytes()
+            reps.append(("bitmap", body))
     has_run = any(k == "run" for k, _ in reps)
     out = bytearray()
     if has_run:
@@ -121,18 +108,23 @@ def serialize_roaring32(values: list[int]) -> bytes:
     else:
         out += struct.pack("<I", SERIAL_COOKIE_NO_RUN)
         out += struct.pack("<I", n)
-    for (key, lows), _rep in zip(conts, reps):
-        out += struct.pack("<HH", key, len(lows) - 1)
+    key_cards = np.empty(2 * n, "<u2")
+    key_cards[0::2] = keys
+    key_cards[1::2] = ends - starts - 1
+    out += key_cards.tobytes()
     if not has_run or n >= NO_OFFSET_THRESHOLD:
         # container offsets, from the start of the serialized bitmap
-        header = len(out) + 4 * n
-        pos = header
-        for _k, body in reps:
-            out += struct.pack("<I", pos)
-            pos += len(body)
+        sizes = np.array([len(body) for _k, body in reps], np.int64)
+        offsets = len(out) + 4 * n + np.cumsum(sizes) - sizes
+        out += offsets.astype("<u4").tobytes()
     for _k, body in reps:
         out += body
     return bytes(out)
+
+
+def serialize_roaring32(values: list[int]) -> bytes:
+    """Standard-format serialization of sorted distinct uint32 values."""
+    return _serialize_roaring32_array(np.asarray(values, dtype=np.uint32))
 
 
 def _roaring32_array(buf: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
@@ -200,19 +192,30 @@ def deserialize_roaring32(buf: bytes, offset: int = 0) -> tuple[list[int], int]:
 # ------------------------------------------------- 64-bit portable form
 
 
-def serialize_roaring64(values) -> bytes:
-    """Portable 64-bit serialization of sorted distinct uint64 values."""
-    values = sorted(set(int(v) for v in values))
-    buckets: dict[int, list[int]] = {}
-    for v in values:
-        buckets.setdefault(v >> 32, []).append(v & 0xFFFFFFFF)
+def serialize_roaring64_array(values: np.ndarray) -> bytes:
+    """Portable 64-bit serialization of a sorted, distinct uint64 array
+    — the inverse of :func:`deserialize_roaring64_array`."""
+    values = np.asarray(values, dtype=np.uint64)
+    if len(values) > 1 and not (values[1:] > values[:-1]).all():
+        raise ValueError("roaring64: values must be sorted and distinct")
+    keys, starts = np.unique(values >> np.uint64(32), return_index=True)
+    ends = np.append(starts[1:], len(values))
     out = bytearray()
     out += struct.pack("<I", MAGIC_PORTABLE_64)
-    out += struct.pack("<q", len(buckets))
-    for key in sorted(buckets):
+    out += struct.pack("<q", len(keys))
+    for key, a, b in zip(keys.tolist(), starts.tolist(), ends.tolist()):
         out += struct.pack("<I", key)
-        out += serialize_roaring32(buckets[key])
+        low = (values[a:b] & np.uint64(0xFFFFFFFF)).astype(np.uint32)
+        out += _serialize_roaring32_array(low)
     return bytes(out)
+
+
+def serialize_roaring64(values) -> bytes:
+    """Portable 64-bit serialization of uint64 values (any order,
+    duplicates dropped)."""
+    return serialize_roaring64_array(
+        np.unique(np.fromiter((int(v) for v in values), dtype=np.uint64))
+    )
 
 
 def deserialize_roaring64_array(buf: bytes) -> np.ndarray:

@@ -193,6 +193,41 @@ def test_stats_backfill_and_data_skipping(spark, tmp_path):
     assert df2.count() == 0 and df2.schema.fieldNames() == ["id", "v"]
 
 
+def test_every_staged_add_carries_num_records(spark, tmp_path):
+    """Appends, partitioned writes, copy-on-write rewrites and OPTIMIZE
+    all commit Delta's ``stats.numRecords`` — each file's footer row
+    count — on every add."""
+    import pyarrow.parquet as pq
+
+    from pyspark_anomaly_detection_spark.io.deltalite import (
+        _snapshot_state,
+        optimize_delta,
+    )
+    from pyspark_anomaly_detection_spark.io.deltalite_dml import update_delta
+
+    t = str(tmp_path / "t")
+
+    def check():
+        adds = _snapshot_state(t).adds
+        assert adds
+        for rel, a in adds.items():
+            rows = pq.read_metadata(os.path.join(t, rel)).num_rows
+            assert json.loads(a["stats"])["numRecords"] == rows, rel
+
+    write_delta(
+        _df(spark, 0, 12).withColumn("side", (F.col("id") % 2).cast("string")),
+        t,
+        partition_by=["side"],
+    )
+    write_delta(
+        _df(spark, 12, 14).withColumn("side", F.lit("0")), t, mode="append"
+    )
+    update_delta(spark, t, "id = 3", {"v": "0"})
+    check()
+    optimize_delta(spark, t)
+    check()
+
+
 def test_schema_evolution_add_column(spark, tmp_path):
     """mergeSchema contract: adding a trailing column requires
     merge_schema=True, updates the committed schema, and old files read

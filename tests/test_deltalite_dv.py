@@ -8,7 +8,9 @@ from __future__ import annotations
 
 import os
 import random
+import struct
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,8 +27,10 @@ from pyspark_anomaly_detection_spark.io.deltalite_dv import (
 from pyspark_anomaly_detection_spark.io.roaring import (
     deserialize_roaring32,
     deserialize_roaring64,
+    deserialize_roaring64_array,
     serialize_roaring32,
     serialize_roaring64,
+    serialize_roaring64_array,
 )
 
 
@@ -53,6 +57,136 @@ def test_roaring64_round_trip_sparse_buckets():
     )
     assert deserialize_roaring64(serialize_roaring64(vals)) == vals
     assert deserialize_roaring64(serialize_roaring64([])) == []
+
+
+def test_roaring64_array_round_trips_random_runs_and_high_buckets():
+    """The numpy encoder inverts the numpy decoder on random, run-heavy
+    and >= 2**32 inputs, and the list API encodes the same bytes."""
+    rng = np.random.default_rng(17)
+    runs = np.concatenate(
+        [
+            np.arange(s, s + n)
+            for s, n in [(0, 70000), (200000, 5), (1 << 20, 300)]
+        ]
+    )
+    cases = [
+        np.unique(rng.integers(0, 1 << 40, 3000)),
+        np.unique(runs),
+        np.unique(rng.integers(0, 1 << 17, 9000)),  # bitmap containers
+        np.array([5, 1 << 32, (1 << 32) + 1, (77 << 32) + 123]),
+        np.array([], np.uint64),
+    ]
+    for vals in cases:
+        vals = vals.astype(np.uint64)
+        blob = serialize_roaring64_array(vals)
+        assert np.array_equal(deserialize_roaring64_array(blob), vals)
+        assert serialize_roaring64(vals.tolist()) == blob
+    with pytest.raises(ValueError, match="sorted and distinct"):
+        serialize_roaring64_array(np.array([3, 1], np.uint64))
+
+
+def _reference_roaring64(values: list[int]) -> bytes:
+    """Per-value reference encoder (the codec's original loop form):
+    group by the high 32 then 16 bits, pick RUN when strictly smaller
+    than ARRAY (card <= 4096) or BITMAP, and lay out the header."""
+    out = struct.pack("<Iq", 1681511377, len({v >> 32 for v in values}))
+    for key in sorted({v >> 32 for v in values}):
+        conts: dict[int, list[int]] = {}
+        for v in values:
+            if v >> 32 == key:
+                conts.setdefault((v >> 16) & 0xFFFF, []).append(v & 0xFFFF)
+        reps = []
+        for lows in conts.values():
+            runs = [[lows[0], lows[0]]]
+            for v in lows[1:]:
+                if v == runs[-1][1] + 1:
+                    runs[-1][1] = v
+                else:
+                    runs.append([v, v])
+            plain = 2 * len(lows) if len(lows) <= 4096 else 8192
+            if 2 + 4 * len(runs) < plain:
+                pairs = [x for a, b in runs for x in (a, b - a)]
+                body = struct.pack(f"<H{len(pairs)}H", len(runs), *pairs)
+                reps.append((True, body))
+            elif len(lows) <= 4096:
+                reps.append((False, struct.pack(f"<{len(lows)}H", *lows)))
+            else:
+                bits = bytearray(8192)
+                for v in lows:
+                    bits[v >> 3] |= 1 << (v & 7)
+                reps.append((False, bytes(bits)))
+        n, has_run = len(conts), any(r for r, _ in reps)
+        head = bytearray()
+        if has_run:
+            head += struct.pack("<I", 12347 | ((n - 1) << 16))
+            bitset = bytearray((n + 7) // 8)
+            for i, (r, _) in enumerate(reps):
+                bitset[i // 8] |= r << (i % 8)
+            head += bitset
+        else:
+            head += struct.pack("<II", 12346, n)
+        for k, lows in conts.items():
+            head += struct.pack("<HH", k, len(lows) - 1)
+        if not has_run or n >= 4:
+            pos = len(head) + 4 * n
+            for _, body in reps:
+                head += struct.pack("<I", pos)
+                pos += len(body)
+        out += struct.pack("<I", key) + head + b"".join(b for _, b in reps)
+    return out
+
+
+def test_roaring64_array_matches_the_per_value_reference():
+    """Same container choices, same bytes as the per-value encoder, on
+    random, run-heavy, bitmap-dense and multi-bucket inputs."""
+    rng = random.Random(23)
+    cases = [[0], [65535, 65536, 0xFFFFFFFF], list(range(1 << 17))]
+    for _ in range(60):
+        kind = rng.randrange(4)
+        if kind == 0:
+            vals = set(rng.sample(range(1 << 20), rng.randrange(1, 3000)))
+        elif kind == 1:
+            vals = set()
+            for _ in range(rng.randrange(1, 20)):
+                start = rng.randrange(1 << 22)
+                vals.update(range(start, start + rng.randrange(1, 3000)))
+        elif kind == 2:
+            vals = set(rng.sample(range(1 << 45), rng.randrange(1, 200)))
+        else:
+            vals = set(rng.sample(range(1 << 17), rng.randrange(4000, 12000)))
+        cases.append(sorted(vals))
+    for vals in cases:
+        blob = serialize_roaring64_array(np.array(vals, np.uint64))
+        assert blob == _reference_roaring64(vals), vals[:4]
+
+
+def _portable(key: int, body: bytes) -> bytes:
+    """One-bucket portable 64-bit bitmap around a 32-bit body."""
+    return struct.pack("<IqI", 1681511377, 1, key) + body
+
+
+def test_roaring64_array_exact_container_bytes():
+    """Hand-built bytes pin each container the writer picks: ARRAY
+    (cookie 12346, key/cardinality-1, offset), BITMAP (card > 4096,
+    little-endian bits) and RUN (cookie 12347, run bitset, no offsets
+    below 4 containers), plus a key above 2**32."""
+    array = struct.pack("<IIHHI", 12346, 1, 0, 2, 16)
+    assert serialize_roaring64_array(np.array([1, 2, 5], np.uint64)) == (
+        _portable(0, array + struct.pack("<HHH", 1, 2, 5))
+    )
+    run = struct.pack("<IBHHHHH", 12347, 1, 0, 99, 1, 100, 99)
+    assert serialize_roaring64_array(
+        np.arange(100, 200, dtype=np.uint64)
+    ) == _portable(0, run)
+    bits = b"\x55" * 1250 + b"\x00" * (8192 - 1250)  # every even value
+    bitmap = struct.pack("<IIHHI", 12346, 1, 0, 4999, 16) + bits
+    assert serialize_roaring64_array(
+        np.arange(0, 10000, 2, dtype=np.uint64)
+    ) == _portable(0, bitmap)
+    high = struct.pack("<IIHHIH", 12346, 1, 0, 0, 16, 7)
+    assert serialize_roaring64_array(
+        np.array([(1 << 32) + 7], np.uint64)
+    ) == _portable(1, high)
 
 
 def test_z85_round_trip_with_padding():
@@ -909,3 +1043,170 @@ def test_large_dv_reads_keep_executor_decode(spark, tmp_path, monkeypatch):
     out = delete_delta_dv(spark, t, "id % 5 = 0")
     assert out["rows_deleted"] == 5
     assert _ids(read_delta(spark, t)) == [i for i in _LIVE if i % 5 != 0]
+
+
+# ------------- DV writer: driver and executor builds of the bitmaps
+
+
+def test_dv_delete_keeps_the_old_add_fields(spark, tmp_path):
+    """A DV re-add keeps every field of the add it replaces and changes
+    only ``deletionVector`` and ``dataChange`` — its stats survive, so
+    data skipping still prunes after the delete."""
+    from pyspark_anomaly_detection_spark.io.deltalite import (
+        annotate_stats,
+        read_delta_pruned,
+    )
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    annotate_stats(t, ["id"])
+    before = _active_adds(t)
+    delete_delta_dv(spark, t, "id % 10 = 7")
+    after = _active_adds(t)
+
+    def kept(a):
+        return {
+            k: v
+            for k, v in a.items()
+            if k not in ("deletionVector", "dataChange")
+        }
+
+    assert sorted(after) == sorted(before)
+    assert all(kept(after[rel]) == kept(before[rel]) for rel in after)
+    df, meta = read_delta_pruned(spark, t, "id", 10, 19)
+    assert meta == {"files_total": 3, "files_read": 1}
+    assert _ids(df) == [i for i in range(10, 20) if i != 17]
+
+
+def test_live_rows_bound_needs_num_records_on_every_add():
+    from pyspark_anomaly_detection_spark.io.deltalite_dv import (
+        _live_rows_bound,
+    )
+
+    adds = {
+        "a": {
+            "stats": '{"numRecords":10}',
+            "deletionVector": {"cardinality": 4},
+        },
+        "b": {"stats": '{"numRecords":7,"minValues":{}}'},
+    }
+    assert _live_rows_bound(adds) == 13
+    assert _live_rows_bound({**adds, "c": {}}) is None
+
+
+def _dv_table(spark, t, shape):
+    """ids 0..29 with v = 2*id: three plain appends, a partitioned
+    write, or three column-mapped appends."""
+    from pyspark_anomaly_detection_spark.io.deltalite_cm import (
+        write_delta_mapped,
+    )
+
+    if shape == "plain":
+        _build(spark, t)
+    elif shape == "partitioned":
+        _part_table(spark, t, n=30)
+    else:
+        for i in range(3):
+            write_delta_mapped(
+                spark.range(i * 10, (i + 1) * 10)
+                .select(F.col("id"), (F.col("id") * 2).alias("v"))
+                .coalesce(1),
+                t,
+                mode="append",
+            )
+
+
+@pytest.mark.parametrize("shape", ["plain", "partitioned", "mapped"])
+def test_dv_delete_driver_and_executor_builds_agree(
+    spark, tmp_path, shape, monkeypatch
+):
+    """Two copies of one table take the same two DV DELETEs — inline
+    bitmaps, then file-based ones merging the old bitmaps — one with the
+    bitmaps built on the driver, one on the executors
+    (``DV_BROADCAST_MAX_ROWS`` forced to 0).  Descriptors, bitmap bytes,
+    counters and table contents are identical."""
+    import shutil
+
+    from pyspark_anomaly_detection_spark.io import deltalite_dv
+
+    src = str(tmp_path / "src")
+    _dv_table(spark, src, shape)
+    tables = {side: str(tmp_path / side) for side in ("driver", "executor")}
+    executor_builds = []
+    real = deltalite_dv._bitmaps_on_executors
+
+    def counted(*args):
+        executor_builds.append(args[0])
+        return real(*args)
+
+    monkeypatch.setattr(deltalite_dv, "_bitmaps_on_executors", counted)
+    seen = {}
+    for side, t in tables.items():
+        shutil.copytree(src, t)
+        if side == "executor":
+            monkeypatch.setattr(deltalite_dv, "DV_BROADCAST_MAX_ROWS", 0)
+        seen[side] = []
+        for pred, storage in (("id % 10 = 7", "i"), ("id % 7 = 0", "u")):
+            out = delete_delta_dv(spark, t, pred, storage=storage)
+            descs = {
+                rel: (
+                    {**a["deletionVector"], "pathOrInlineDv": None}
+                    if a["deletionVector"]["storageType"] == "u"
+                    else a["deletionVector"],
+                    deltalite_dv._descriptor_bitmap(a["deletionVector"], t),
+                )
+                for rel, a in _active_adds(t).items()
+                if a.get("deletionVector")
+            }
+            seen[side].append((out, descs))
+        seen[side].append(
+            sorted(tuple(r) for r in read_delta(spark, t).collect())
+        )
+    assert len(executor_builds) == 2  # the executor copy's two deletes
+    assert seen["driver"] == seen["executor"]
+    (first, _), (second, descs), rows = seen["driver"]
+    assert (first["rows_deleted"], second["rows_deleted"]) == (3, 4)
+    assert "u" in {d["storageType"] for d, _ in descs.values()}
+    assert sorted(r[0] for r in rows) == [
+        i for i in range(30) if i % 10 != 7 and i % 7 != 0
+    ]
+
+
+def test_small_dv_delete_plans_no_python_stage(spark, tmp_path, monkeypatch):
+    """Under the bound a DV DELETE builds its bitmaps from one Arrow
+    collect of a JVM-only plan, never the executor build, and runs no
+    more Spark jobs than the executor build did (2 for a first delete,
+    3 for one merging old bitmaps, on this shape)."""
+    from pyspark_anomaly_detection_spark import plans
+    from pyspark_anomaly_detection_spark.io import deltalite_dv
+
+    t = str(tmp_path / "t")
+    _build(spark, t)
+    frame_cls = type(spark.range(1))
+    collected = []
+    real_collect = frame_cls._collect_as_arrow
+
+    def spy(self, *args, **kwargs):
+        collected.append(self)
+        return real_collect(self, *args, **kwargs)
+
+    def refuse(*_args):
+        raise AssertionError("executor build under the bound")
+
+    monkeypatch.setattr(frame_cls, "_collect_as_arrow", spy)
+    monkeypatch.setattr(deltalite_dv, "_bitmaps_on_executors", refuse)
+    sc = spark.sparkContext
+    jobs = []
+    for i, pred in enumerate(("id % 10 = 7", "id % 7 = 0")):
+        group = f"dv-delete-jobs-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            delete_delta_dv(spark, t, pred)
+        finally:
+            sc.setJobGroup("", "")
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert len(collected) == 2
+    for df in collected:
+        assert plans.has_python_eval(df) is False, plans.formatted_plan(df)
+    assert 0 < jobs[0] <= 2 and 0 < jobs[1] <= 3, jobs
+    assert _ids(read_delta(spark, t)) == _LIVE
